@@ -59,8 +59,18 @@ object LangDetect {
       s"duplicate keyword in $l would break the single-scan counter"))
     scoredLangs.flatMap(keywords).distinct.toArray
   }
+  // score slots are looked up by name, never by position in `langs`
+  private def langIdx(name: String): Int = {
+    val i = langs.indexOf(name)
+    require(i >= 0, s"$name missing from langs")
+    i
+  }
+  private val ChineseIdx = langIdx("chinese")
+  private val ArabicIdx = langIdx("arabic")
+  private val RussianIdx = langIdx("russian")
+
   private val kwLangIdx: Array[Array[Int]] = uniqueKws.map { kw =>
-    scoredLangs.indices.filter(li => keywords(scoredLangs(li)).contains(kw)).toArray
+    scoredLangs.filter(l => keywords(l).contains(kw)).map(langIdx).toArray
   }
   private val byFirstChar: Array[Array[Int]] = {
     val out = new Array[Array[Int]](128)
@@ -114,9 +124,9 @@ object LangDetect {
       else if (c >= 'Ѐ' && c <= 'ӿ') cyrillic = true               // main.py:149-151
       i += 1
     }
-    if (cjk) scores(6) = 10
-    if (arabic) scores(7) = 10
-    if (cyrillic) scores(8) = 10
+    if (cjk) scores(ChineseIdx) = 10
+    if (arabic) scores(ArabicIdx) = 10
+    if (cyrillic) scores(RussianIdx) = 10
 
     var best = 0                                                   // first max in insertion order,
     var li = 1                                                     // matching Python max() (main.py:154-158)

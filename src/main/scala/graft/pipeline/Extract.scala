@@ -3,19 +3,25 @@ package graft.pipeline
 import graft.media.{DeterministicMediaStore, DeterministicOcr, MediaStore, OcrEngine}
 import graft.model._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.CollectionAccumulator
+import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
+
+import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration.Duration
 
 /** The batch extraction pipeline (SURVEY.md §3.4) — the Spark-native
   * replacement for the reference's request loop, designed for a
   * 1000-executor cluster over 10^12 docs:
   *
   * {{{
-  * [skew probe]  column-pruned metadata scan (doc_id, spans.kind,
-  *               spans.media_ref — never the text payload) → page estimate
-  *               per doc → collect+broadcast the TINY set of mega doc_ids
-  * [common path] scan → mapPartitions(kernel, skip megas) → DocOut
+  * [tail pass]   ONE job over a column-pruned metadata scan (doc_id,
+  *               spans.kind, spans.media_ref; spans.text lengths only when
+  *               the size guard is on) → per doc byte estimate + page
+  *               estimate → keep only the TAIL (over-size or mega docs) →
+  *               bounded collect (≤ megaInlineCap rows reach the driver)
+  * [common path] scan → mapPartitions(skip tail ids, kernel) → DocOut
   *               — a SINGLE STAGE: no shuffle anywhere between the source
   *               and the sink
   * [skew path]   scan filtered by doc_id IN (megas)   // predicate pushed
@@ -32,21 +38,25 @@ import org.apache.spark.util.CollectionAccumulator
   *    design range-shuffled the full input first so both branches could
   *    reuse one exchange; profiling showed that shuffle — a full write+
   *    read of the corpus — was the dominant non-scaling stage once the
-  *    kernel was optimized. The metadata probe costs a ~few-% column-pruned
+  *    kernel was optimized. The metadata pass costs a ~few-% column-pruned
   *    scan instead.)
+  *  - The size guard and the skew probe share that one pass: the input is
+  *    scanned once before extraction, not once per guard.
   *  - Only the mega-doc slice pays a shuffle, and its input scan prunes to
   *    almost nothing via the pushed `doc_id IN (...)` filter (parquet
   *    row-group stats). Units spread over (doc_id, salt) so no single task
   *    owns a 256-page doc (SURVEY.md §4.2 salting).
   *  - The skew threshold is a TAIL bound (docs larger than ~a task's worth
   *    of pages): ordinary size variance is absorbed by tasks; the broadcast
-  *    mega-id set stays tiny by construction (guarded).
+  *    tail-id set stays tiny by construction (guarded: a tail larger than
+  *    `megaInlineCap` falls back to distributed writes and semi/anti joins).
   *  - OCR engine init is amortized once per partition inside
   *    `mapPartitions` (the reference pays a subprocess spawn per page pass,
   *    `main.py:229`).
   *  - Per-partition lineage rows (run_id, path, partition, doc range,
-  *    span/byte counts, wall ms) are collected via an accumulator and
-  *    persisted next to the output — the north-rule lineage + resume proof.
+  *    span/byte counts, wall ms) are collected via an accumulator,
+  *    cross-checked against the observed output count and persisted next
+  *    to the output — the north-rule lineage + resume proof.
   */
 object Extract {
 
@@ -56,6 +66,10 @@ object Extract {
       spanCount: Long,
       byteCount: Long,
       lineage: Seq[LineageRow])
+
+  /** The tail of one metadata pass, small enough for the driver: docs the
+    * size guard rejects `(doc_id, byte_est)` and the mega doc ids. */
+  private final case class Tail(rejected: Seq[(String, Long)], megas: Seq[String])
 
   /** Pure transformation: docs → extracted docs. No I/O; callers choose
     * source/sink. `store`/`engine` must be serializable singletons or
@@ -67,41 +81,38 @@ object Extract {
       engine: OcrEngine = DeterministicOcr,
       conf: ExtractConf = ExtractConf(),
       lineageAcc: Option[CollectionAccumulator[LineageRow]] = None): Dataset[DocOut] = {
+    // no size term: the pass reads only doc_id + spans.{kind,media_ref}
+    val pass = tailPass(spark, docs, store, conf, maxBytes = None)
+    extractTiered(spark, docs, pass, collectTail(spark, pass, conf.megaInlineCap),
+      store, engine, conf, lineageAcc)
+  }
+
+  /** Extraction given the metadata pass over `docs` and, when it fit the
+    * inline cap, its collected tail. */
+  private def extractTiered(
+      spark: SparkSession,
+      docs: Dataset[Doc],
+      pass: DataFrame,
+      tail: Option[Tail],
+      store: MediaStore,
+      engine: OcrEngine,
+      conf: ExtractConf,
+      lineageAcc: Option[CollectionAccumulator[LineageRow]]): Dataset[DocOut] = {
     import spark.implicits._
 
     val kconf = conf
     val kstore = store
     val kengine = engine
 
-    // --- skew probe: metadata-only page estimate per doc. Relational
-    // column extraction so a parquet/Iceberg source reads ONLY doc_id +
-    // spans.kind + spans.media_ref (nested schema pruning skips the text
-    // payload — the bulk of the bytes). NOT collected: a Dataset, so the
-    // mega set's size never constrains the driver (round-1 verdict item 4 —
-    // the old collect + literal isin had a hard cliff).
-    val megaIdsDS: Dataset[String] = docs.toDF()
-      .select(col("doc_id"), col("spans.kind").as("kinds"),
-        col("spans.media_ref").as("refs"))
-      .as[(String, Seq[String], Seq[String])]
-      .flatMap { case (id, kindsOrNull, refsOrNull) =>
-        val kinds = Option(kindsOrNull).getOrElse(Nil)
-        val refs = Option(refsOrNull).getOrElse(Nil)
-        val pages = kinds.iterator.zip(refs.iterator).map {
-          case ("pdf", r) if r != null && r.nonEmpty => kstore.pageCount(r)
-          case _ => 1
-        }.sum
-        if (pages > kconf.skewPageThreshold) Some(id) else None
-      }
-    // Tiered by mega-set size (take(cap+1) scans only until cap+1 ids are
-    // found): the threshold is a TAIL bound, so the expected case is a tiny
-    // set → inline it as a pushed-down IN filter (parquet row-group
-    // skipping) + broadcast set. A degenerate threshold/corpus no longer
-    // hits a require() cliff: it falls back to semi/anti joins, which scale
-    // to any mega-set size (AQE picks broadcast vs shuffled by actual size).
-    val inlineIds: Array[String] = megaIdsDS.take(kconf.megaInlineCap + 1)
-    val useInline = inlineIds.length <= kconf.megaInlineCap
-    val megaSet = spark.sparkContext.broadcast(
-      if (useInline) inlineIds.toSet else Set.empty[String])
+    // Tiered by tail size: the thresholds are TAIL bounds, so the expected
+    // case is a tiny tail → skip it through one broadcast set and re-read
+    // the megas behind a pushed-down IN filter (parquet row-group
+    // skipping). A degenerate threshold/corpus falls back to semi/anti
+    // joins against the pass, which scale to any tail size (AQE picks
+    // broadcast vs shuffled by actual size).
+    val megas: Seq[String] = tail.map(_.megas).getOrElse(Nil)
+    val skipSet = spark.sparkContext.broadcast(
+      tail.map(t => t.rejected.iterator.map(_._1).toSet ++ t.megas).getOrElse(Set.empty[String]))
 
     def withLineage[T](path: String, docIdOf: T => String, spansOf: T => Seq[Span])(
         it: Iterator[T]): Iterator[T] = lineageAcc match {
@@ -139,34 +150,34 @@ object Extract {
         }
     }
 
-    // --- common path: SINGLE STAGE scan → extract → (sink); megas skipped.
+    // --- common path: SINGLE STAGE scan → extract → (sink); tail skipped.
     // Inline tier: skip via the broadcast set inside the same stage (zero
-    // plan impact). Fallback tier: left_anti join against the mega-id
-    // Dataset (no driver materialization; broadcast by AQE when it fits).
+    // plan impact). Fallback tier: left_anti join against the pass (no
+    // driver materialization; broadcast by AQE when it fits).
     val commonIn: Dataset[Doc] =
-      if (useInline) docs
-      else docs.join(megaIdsDS.toDF("doc_id"), Seq("doc_id"), "left_anti").as[Doc]
+      if (tail.isDefined) docs
+      else docs.join(pass.select("doc_id"), Seq("doc_id"), "left_anti").as[Doc]
     val wholeOut: Dataset[DocOut] = commonIn
       .mapPartitions { it =>
-        val mega = megaSet.value
+        val skip = skipSet.value
         val small = it
-          .filter(d => mega.isEmpty || !mega.contains(d.doc_id))
+          .filter(d => skip.isEmpty || !skip.contains(d.doc_id))
           .map(d => ExtractKernel.extractWhole(d, kstore, kengine, kconf))
         withLineage[DocOut]("common", _.doc_id, _.spans)(small)
       }
 
-    if (inlineIds.isEmpty) return wholeOut
+    if (tail.isDefined && megas.isEmpty) return wholeOut
 
     // --- skew path: re-read ONLY the mega docs — inline tier: pushed-down
     //     IN filter (parquet row-group skipping makes this scan near-free);
     //     fallback tier: left_semi join (scan not row-group-pruned, the
-    //     documented cost of a degenerate mega set). Then split into salted
+    //     documented cost of a degenerate tail). Then split into salted
     //     page-range units, spread, extract, reassemble.
     val megaDocs: Dataset[Doc] =
-      if (useInline)
-        docs.toDF().filter(col("doc_id").isin(inlineIds.map(x => x: Any): _*)).as[Doc]
+      if (tail.isDefined)
+        docs.toDF().filter(col("doc_id").isin(megas.map(x => x: Any): _*)).as[Doc]
       else
-        docs.join(megaIdsDS.toDF("doc_id"), Seq("doc_id"), "left_semi").as[Doc]
+        docs.join(pass.filter(!col("rejected")).select("doc_id"), Seq("doc_id"), "left_semi").as[Doc]
 
     val saltedOut: Dataset[DocOut] = megaDocs
       .flatMap(d => ExtractKernel.plan(d, kstore, kconf))
@@ -181,18 +192,74 @@ object Extract {
     wholeOut.union(saltedOut)
   }
 
-  /** P4 size guard (main.py:51 `MAX_FILE_SIZE`; enforced at
-    * main.py:484-485,619-620,743-745): split docs whose span text payload
-    * exceeds `maxBytes` into a rejected side output `(doc_id, byte_est,
-    * reason)` BEFORE extraction — the reference 413s a too-large upload
-    * before OCR ever runs. Column-level: the estimate reads only
-    * `spans.text` lengths (stays inside the scan's codegen). The rejected
-    * branch is a second filtered pass over the input; at the expected ~0
-    * reject rate its scan is the cost of the guard's audit trail. */
-  def sizeSplit(spark: SparkSession, docs: Dataset[Doc], maxBytes: Long,
-      store: MediaStore = DeterministicMediaStore)
-      : (Dataset[Doc], org.apache.spark.sql.DataFrame) = {
+  /** The metadata pass: one row `(doc_id, byte_est, rejected)` per TAIL doc
+    * — rejected by the size guard (`maxBytes`), or a mega doc whose page
+    * estimate exceeds `skewPageThreshold`. Relational column extraction, so
+    * a parquet/Iceberg source reads only doc_id + spans.kind +
+    * spans.media_ref (+ spans.text lengths with the size term); nested
+    * schema pruning skips the text payload when `maxBytes` is None. A
+    * rejected doc never reaches the page estimate, exactly as when the
+    * size guard ran first. `scanned` counts every doc the pass reads. */
+  private[graft] def tailPass(spark: SparkSession, docs: Dataset[Doc], store: MediaStore,
+      conf: ExtractConf, maxBytes: Option[Long],
+      scanned: Option[LongAccumulator] = None): DataFrame = {
     import spark.implicits._
+    val kstore = store
+    val threshold = conf.skewPageThreshold
+    val limit = maxBytes.getOrElse(Long.MaxValue)
+    docs.toDF()
+      .select(col("doc_id"), col("spans.kind").as("kinds"), col("spans.media_ref").as("refs"),
+        maxBytes.fold(lit(0L))(_ => byteEst(store)))
+      .as[(String, Seq[String], Seq[String], Long)]
+      .flatMap { case (id, kindsOrNull, refsOrNull, bytes) =>
+        scanned.foreach(_.add(1))
+        if (bytes > limit) Some((id, bytes, true))
+        else {
+          val kinds = Option(kindsOrNull).getOrElse(Nil)
+          val refs = Option(refsOrNull).getOrElse(Nil)
+          val pages = kinds.iterator.zip(refs.iterator).map {
+            case ("pdf", r) if r != null && r.nonEmpty => kstore.pageCount(r)
+            case _ => 1
+          }.sum
+          if (pages > threshold) Some((id, bytes, false)) else None
+        }
+      }
+      .toDF("doc_id", "byte_est", "rejected")
+  }
+
+  /** Runs `pass` as ONE Spark job and returns its rows while there are at
+    * most `cap` of them; None as soon as more arrive (the job is cancelled
+    * then). Each partition ships at most `cap + 1` rows, so driver memory
+    * and task-result bytes stay O(cap) for any tail size. */
+  private def collectTail(spark: SparkSession, pass: DataFrame, cap: Int): Option[Tail] = {
+    import spark.implicits._
+    val rdd = pass.as[(String, Long, Boolean)].rdd
+    val rows = mutable.ArrayBuffer.empty[(String, Long, Boolean)]
+    val overflow = Promise[Unit]()
+    // the handler runs on the scheduler thread, serialized per job
+    val job = spark.sparkContext.submitJob[(String, Long, Boolean), Array[(String, Long, Boolean)], Unit](rdd,
+      it => it.take(cap + 1).toArray,
+      rdd.partitions.indices,
+      (_, part) => if (!overflow.isCompleted) {
+        rows ++= part
+        if (rows.length > cap) overflow.trySuccess(())
+      },
+      ())
+    Await.ready(Future.firstCompletedOf(Seq(job, overflow.future))(ExecutionContext.parasitic),
+      Duration.Inf)
+    if (overflow.isCompleted) {
+      job.cancel()
+      None
+    } else {
+      Await.result(job, Duration.Inf) // rethrows a failed pass
+      val (rejected, megas) = rows.toSeq.partition(_._3)
+      Some(Tail(rejected.map(r => (r._1, r._2)), megas.map(_._1)))
+    }
+  }
+
+  /** Per-doc byte estimate of the size guard: span text payload plus the
+    * store's media estimate. */
+  private def byteEst(store: MediaStore): Column = {
     // outer coalesce: aggregate(NULL spans, ...) is NULL, and a NULL
     // predicate would drop the doc from BOTH branches (silent data loss,
     // NullSafetySpec corpus class) — null spans estimate as 0 bytes
@@ -215,19 +282,34 @@ object Extract {
         case _ => 0L
       }.sum
     }
-    val est = textEst +
-      coalesce(mediaEst(col("spans.kind"), col("spans.media_ref")), lit(0L))
-    val withEst = docs.toDF().withColumn("byte_est", est)
+    (textEst + coalesce(mediaEst(col("spans.kind"), col("spans.media_ref")), lit(0L)))
+      .as("byte_est")
+  }
+
+  /** P4 size guard (main.py:51 `MAX_FILE_SIZE`; enforced at
+    * main.py:484-485,619-620,743-745): split docs whose span text payload
+    * exceeds `maxBytes` into a rejected side output `(doc_id, byte_est,
+    * reason)` BEFORE extraction — the reference 413s a too-large upload
+    * before OCR ever runs. Column-level: the estimate reads only
+    * `spans.text` lengths (stays inside the scan's codegen). `run` uses it
+    * only in the fallback tier, when the metadata pass's tail exceeds
+    * `megaInlineCap`; otherwise the pass itself finds the rejected docs. */
+  def sizeSplit(spark: SparkSession, docs: Dataset[Doc], maxBytes: Long,
+      store: MediaStore = DeterministicMediaStore)
+      : (Dataset[Doc], DataFrame) = {
+    import spark.implicits._
+    val withEst = docs.toDF().withColumn("byte_est", byteEst(store))
     val accepted = withEst.filter(col("byte_est") <= maxBytes).drop("byte_est").as[Doc]
     val rejected = withEst.filter(col("byte_est") > maxBytes)
       .select(col("doc_id"), col("byte_est"), lit("too_large").as("reason"))
     (accepted, rejected)
   }
 
-  /** Read → resume filter → size guard → extract → observed metrics →
-    * idempotent append + lineage + rejected side output. Sandbox storage is
-    * parquet; the prod path is the same code with `format("iceberg")`
-    * (SURVEY.md §2.1 S1/S7 — snapshot commit as the atomic checkpoint).
+  /** Read → resume filter → metadata pass (size guard + skew probe) →
+    * extract → observed metrics → idempotent append + lineage + rejected
+    * side output. Sandbox storage is parquet; the prod path is the same
+    * code with `format("iceberg")` (SURVEY.md §2.1 S1/S7 — snapshot commit
+    * as the atomic checkpoint).
     */
   def run(
       spark: SparkSession,
@@ -246,25 +328,36 @@ object Extract {
       case None => in
     }
 
-    // P4 size guard: rejected docs go to an audit side output, never to the
-    // kernel (the reference rejects before OCR, main.py:484-485). Overwrite
-    // the run_id partition (not append): rejected docs never reach the
-    // committed output, so a resumed run re-detects them — appending would
-    // duplicate the audit rows on every retry of the same run.
-    val (accepted, rejected) = sizeSplit(spark, todo, conf.maxDocBytes, store)
-    rejected.write.mode(SaveMode.Overwrite)
-      .parquet(s"${outPath}_rejected/run_id=${conf.runId}")
-
     val acc = new CollectionAccumulator[LineageRow]
     spark.sparkContext.register(acc, "lineage")
 
-    val out = extractDS(spark, accepted, store, engine, conf, Some(acc))
-      .observe("extract_metrics",
-        count(lit(1)).as("docs"),
-        sum(size(col("spans"))).as("span_count"),
-        sum(col("character_count")).as("byte_count"))
+    // P4 size guard: rejected docs go to an audit side output, never to the
+    // kernel (the reference rejects before OCR, main.py:484-485). The
+    // run_id partition is replaced, not appended to: rejected docs never
+    // reach the committed output, so a resumed run re-detects them —
+    // appending would duplicate the audit rows on every retry of the same
+    // run. A run that rejects nothing leaves no partition.
+    val rejectedPath = s"${outPath}_rejected/run_id=${conf.runId}"
+    val scanned = spark.sparkContext.longAccumulator("tail pass docs")
+    val pass = tailPass(spark, todo, store, conf, Some(conf.maxDocBytes), Some(scanned))
+    // inline tier: also the number of rejected docs
+    val (extracted, rejectedDocs) = collectTail(spark, pass, conf.megaInlineCap) match {
+      case Some(tail) =>
+        if (tail.rejected.nonEmpty)
+          tail.rejected.toDF("doc_id", "byte_est").withColumn("reason", lit("too_large"))
+            .coalesce(1).write.mode(SaveMode.Overwrite).parquet(rejectedPath)
+        else deletePath(spark, rejectedPath)
+        (extractTiered(spark, todo, pass, Some(tail), store, engine, conf, Some(acc)),
+          Some(tail.rejected.length.toLong))
+      case None =>
+        val (accepted, rejected) = sizeSplit(spark, todo, conf.maxDocBytes, store)
+        rejected.write.mode(SaveMode.Overwrite).parquet(rejectedPath)
+        (extractDS(spark, accepted, store, engine, conf, Some(acc)), None)
+    }
 
-    out.write.mode(SaveMode.Append).parquet(outPath)
+    val observed = Observation("extract_metrics")
+    extracted.observe(observed, count(lit(1)).as("docs"))
+      .write.mode(SaveMode.Append).parquet(outPath)
 
     val lineage = {
       import scala.jdk.CollectionConverters._
@@ -277,15 +370,33 @@ object Extract {
         .sortBy(r => (r.path, r.partition_id))
     }
     if (lineage.nonEmpty) {
-      spark.createDataset(lineage)
+      spark.createDataset(lineage).coalesce(1)
         .write.mode(SaveMode.Append)
         .parquet(s"${outPath}_lineage/run_id=${conf.runId}")
     }
+    // A lost or duplicated lineage update, or (inline tier) a doc the skip
+    // set dropped from both paths, fails the run instead of leaving a
+    // missing row; the lineage written above is the evidence.
+    val observedDocs = observed.get("docs").asInstanceOf[Long]
+    val lineageDocs = lineage.map(_.doc_count).sum
+    if (observedDocs != lineageDocs)
+      throw new IllegalStateException(s"run ${conf.runId}: wrote $observedDocs docs " +
+        s"but lineage accounts for $lineageDocs")
+    rejectedDocs.foreach { r =>
+      if (scanned.value != observedDocs + r)
+        throw new IllegalStateException(s"run ${conf.runId}: the metadata pass read " +
+          s"${scanned.value} docs, but $observedDocs were written and $r rejected")
+    }
     Summary(conf.runId,
-      lineage.map(_.doc_count).sum,
+      lineageDocs,
       lineage.map(_.span_count).sum,
       lineage.map(_.byte_count).sum,
       lineage)
+  }
+
+  private def deletePath(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
   private def committedIds(spark: SparkSession, outPath: String): Option[Dataset[org.apache.spark.sql.Row]] = {

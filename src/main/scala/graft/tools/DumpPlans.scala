@@ -36,7 +36,8 @@ object DumpPlans {
 
     // flagship extraction (fixture corpus incl. a mega doc → both branches)
     section("extraction pipeline (common path, no megas)",
-      "Single stage scan → mapPartitions(kernel) → sink; ZERO Exchange.") {
+      "Single stage scan → mapPartitions(kernel) → sink; ZERO Exchange. The metadata " +
+        "pass ran before as its own job and found no tail, so nothing is skipped.") {
       val s2 = spark
       import s2.implicits._
       val ds = Extract.extractDS(spark,
@@ -45,9 +46,22 @@ object DumpPlans {
       ds.collect()
       ds.queryExecution.executedPlan.toString
     }
+    section("extraction metadata pass (size guard + skew probe, one job)",
+      "Nested pruning: with the size term (`Extract.run`) the scan reads spans.text for " +
+        "the byte estimate; `extractDS` reads doc_id + spans.{kind,media_ref} only. " +
+        "The pass keeps only the tail rows (over-size or mega).") {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-plans").toString
+      Fixtures.testDocsDS(spark).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
+      val docs = graft.sources.Io().readDocs(spark, s"$tmp/docs")
+      val conf = ExtractConf(numPartitions = 4)
+      val pass = Extract.tailPass(spark, docs, graft.media.DeterministicMediaStore, conf,
+        Some(conf.maxDocBytes))
+      pass.collect()
+      pass.queryExecution.executedPlan.toString
+    }
     section("extraction pipeline (with mega docs: salted skew branch)",
-      "Common branch unchanged; skew branch re-reads behind a pushed `doc_id IN`, " +
-        "spreads (doc_id, salt), merges per doc.") {
+      "Common branch skips the tail ids through one broadcast set; skew branch re-reads " +
+        "behind a pushed `doc_id IN`, spreads (doc_id, salt), merges per doc.") {
       val ds = Extract.extractDS(spark, Fixtures.testDocsDS(spark),
         conf = ExtractConf(numPartitions = 4))
       ds.collect()

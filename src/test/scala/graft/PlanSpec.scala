@@ -74,14 +74,67 @@ class PlanSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-probe").toString
     Fixtures.testDocsDS(spark).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
     val docs = graft.sources.Io().readDocs(spark, s"$tmp/docs")
-    import org.apache.spark.sql.functions.col
-    val probe = docs.toDF()
-      .select(col("doc_id"), col("spans.kind"), col("spans.media_ref"))
+    // the metadata pass extractDS runs (no size term)
+    val probe = Extract.tailPass(spark, docs, graft.media.DeterministicMediaStore,
+      ExtractConf(), maxBytes = None)
     val plan = probe.queryExecution.executedPlan.toString
     val rs = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(rs.contains("spans:array<struct<kind:string,media_ref:string>>"),
       s"nested pruning failed — probe would read the text payload: $rs")
     assert(!rs.contains("text"), s"text column not pruned: $rs")
+  }
+
+  test("one extraction run: at most 6 jobs; only the tail pass and the main write scan the input") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import java.util.concurrent.ConcurrentHashMap
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    Fixtures.testDocsDS(spark).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
+    val docs = graft.sources.Io().readDocs(spark, s"$tmp/docs")
+    val sc = spark.sparkContext
+    val group = "extract-job-guard"
+    // job id → its scan: the SQL execution it belongs to, else the job itself
+    val scanOf = new ConcurrentHashMap[Int, String]
+    val jobOfStage = new ConcurrentHashMap[Int, Int]
+    val recordsRead = new ConcurrentHashMap[Int, Long]
+    val drained = scala.concurrent.Promise[Unit]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.properties.getProperty("spark.jobGroup.id") match {
+          case `group` =>
+            scanOf.put(e.jobId, Option(e.properties.getProperty("spark.sql.execution.id"))
+              .fold(s"job ${e.jobId}")(id => s"execution $id"))
+            // a stage belongs to the first job that lists it: AQE's final
+            // job lists the shuffle-map stages its earlier jobs ran
+            e.stageIds.foreach(jobOfStage.putIfAbsent(_, e.jobId))
+          case "drain" => drained.trySuccess(())
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(jobOfStage.get(e.stageId)).filter(_ => e.taskMetrics != null).foreach { j =>
+          recordsRead.merge(j, e.taskMetrics.inputMetrics.recordsRead, (a: Long, b: Long) => a + b)
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "Extract.run")
+      Extract.run(spark, docs, s"$tmp/out", ExtractConf(numPartitions = 4))
+      // events arrive in order: once the drain job's start is seen, every
+      // event of the run's jobs has been delivered
+      sc.setJobGroup("drain", "drain")
+      sc.parallelize(Seq(1), 1).count()
+      scala.concurrent.Await.result(drained.future, scala.concurrent.duration.Duration(60, "s"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val jobs = scanOf.asScala.toMap
+    assert(jobs.size <= 6, s"${jobs.size} jobs in one run: $jobs")
+    val readByScan = jobs.toSeq.groupBy(_._2).map { case (scan, js) =>
+      scan -> js.map(j => recordsRead.getOrDefault(j._1, 0L)).sum }
+    val scans = readByScan.filter(_._2 > 0)
+    assert(scans.size == 2, s"the input is read by ${scans.size} scans, not 2: $readByScan")
+    assert(scans.values.forall(_ >= Fixtures.testDocs.length), s"partial scans: $readByScan")
   }
 
   test("mega re-read pushes the doc_id IN filter to the parquet scan") {

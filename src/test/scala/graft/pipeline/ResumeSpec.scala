@@ -1,9 +1,21 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import graft.model.Doc
+import graft.media.{DeterministicMediaStore, MediaStore, PageMedia}
+import graft.model.{Doc, DocOut, Span}
 import java.nio.file.Files
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Fixture pages and page counts. The only non-zero media size estimate is
+  * `HugeRef` (mega doc 2000's pdf), large enough for any size guard to
+  * reject. */
+object HugeMediaStore extends MediaStore {
+  val HugeRef = "mem://doc00002000/0"
+  override def pageCount(ref: String): Int = DeterministicMediaStore.pageCount(ref)
+  override def page(ref: String, p: Int): PageMedia = DeterministicMediaStore.page(ref, p)
+  override def byteEstimate(ref: String): Long = if (ref == HugeRef) 1L << 40 else 0L
+}
 
 /** North-rule resumability (SURVEY.md §5.5): run the pipeline on half the
   * corpus, then rerun over the full corpus into the same output — only the
@@ -88,5 +100,58 @@ class ResumeSpec extends AnyFunSuite {
         graft.media.DeterministicOcr, conf1)
       assert(byId(d.doc_id).spans == seq.spans, s"spans differ for ${d.doc_id}")
     }
+  }
+
+  /** doc_id → byte_est of one run's rejected partition (none written → empty). */
+  private def rejectedOf(spark: SparkSession, out: String, runId: String): Map[String, Long] = {
+    val dir = new java.io.File(s"${out}_rejected/run_id=$runId")
+    if (!dir.isDirectory) Map.empty
+    else spark.read.parquet(dir.getPath).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
+  private val oversize = Doc("d_oversize", Seq(Span("text", "x" * 100000, "", 0)))
+
+  test("fallback tier (megaInlineCap = 0) writes the same rows, rejects and lineage totals as the inline tier") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-tiers").toFile.getAbsolutePath
+    // megas (doc 1000 salted; doc 2000 rejected by its media estimate),
+    // an over-size text doc and null spans
+    val docs = Fixtures.testDocs ++ Seq(oversize,
+      Doc("d_null_spans", null),
+      Doc("d_null_span_elem", Seq(null, Span("text", "ok text", "", 1))))
+    val conf = ExtractConf(numPartitions = 4, runId = "tiers", maxDocBytes = 64 * 1024)
+    def runTier(cap: Int): (Extract.Summary, Map[String, DocOut], Map[String, Long]) = {
+      val out = s"$tmp/cap$cap"
+      val s = Extract.run(spark, spark.createDataset(docs), out,
+        conf.copy(megaInlineCap = cap), HugeMediaStore)
+      (s, spark.read.parquet(out).as[DocOut].collect().map(d => d.doc_id -> d).toMap,
+        rejectedOf(spark, out, conf.runId))
+    }
+    val (inlineSum, inlineRows, inlineRejected) = runTier(ExtractConf().megaInlineCap)
+    val (fallbackSum, fallbackRows, fallbackRejected) = runTier(0)
+
+    val rejectedIds = Set(oversize.doc_id, Fixtures.docId(2000))
+    assert(inlineRejected.keySet == rejectedIds)
+    assert(fallbackRejected == inlineRejected)
+    assert(inlineRows.keySet == docs.map(_.doc_id).toSet -- rejectedIds)
+    assert(fallbackRows == inlineRows, "tiers must write identical rows")
+    assert(inlineSum.lineage.exists(_.path == "salted"), "doc 1000 must take the salted path")
+    def totals(s: Extract.Summary) = (s.docsProcessed, s.spanCount, s.byteCount)
+    assert(totals(fallbackSum) == totals(inlineSum))
+    assert(inlineSum.docsProcessed == docs.length - rejectedIds.size)
+  }
+
+  test("rerun of a run_id after the over-size doc is gone leaves no rejected rows for it") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-rerun").toFile.getAbsolutePath + "/docs"
+    val conf = ExtractConf(numPartitions = 4, runId = "same", maxDocBytes = 64 * 1024)
+    val small = Fixtures.testDocs.take(8)
+    Extract.run(spark, spark.createDataset(small :+ oversize), out, conf)
+    assert(rejectedOf(spark, out, conf.runId).keySet == Set(oversize.doc_id))
+    val s = Extract.run(spark, spark.createDataset(small), out, conf)
+    assert(s.docsProcessed == 0)
+    assert(rejectedOf(spark, out, conf.runId).isEmpty, "stale rejected rows survived the rerun")
   }
 }
