@@ -19,17 +19,25 @@ import scala.concurrent.duration.Duration
   * [tail pass]   ONE job over a column-pruned metadata scan (doc_id,
   *               spans.kind, spans.media_ref; spans.text lengths only when
   *               the size guard is on) → per doc byte estimate + page
-  *               estimate → keep only the TAIL (over-size or mega docs) →
-  *               bounded collect (≤ megaInlineCap rows reach the driver)
-  * [common path] scan → mapPartitions(skip tail ids, kernel) → DocOut
-  *               — a SINGLE STAGE: no shuffle anywhere between the source
-  *               and the sink
+  *               estimate, Σ pages accumulated → keep only the TAIL
+  *               (over-size docs, docs above the skewPageThreshold floor)
+  *               → bounded collect (≤ megaInlineCap rows reach the driver)
+  * [mega cut]    on the driver: share = max(floor, Σ pages ÷ max(pass
+  *               partitions, defaultParallelism)) — one task's fair
+  *               share; megas = the tail docs of every pass partition
+  *               whose tail docs together hold more pages than it
+  * [common path] scan → mapPartitions(skip rejected + mega ids, kernel)
+  *               → DocOut — a SINGLE STAGE: no shuffle anywhere between
+  *               the source and the sink
   * [skew path]   scan filtered by doc_id IN (megas)   // predicate pushed
   *               → flatMap(salted page-range WorkUnits)   // to row-group
   *               → repartition(doc_id, salt)              // skipping
   *               → mapPartitions(kernel) → groupByKey(doc_id) → merge
   * union → observe(metrics) → idempotent append
   * }}}
+  *
+  * With no mega the skew path is not planned at all: a run is the tail
+  * pass, one zero-shuffle write and the lineage write.
   *
   * Scale properties:
   *  - The expensive extraction runs exactly once per page either way.
@@ -46,10 +54,16 @@ import scala.concurrent.duration.Duration
   *    almost nothing via the pushed `doc_id IN (...)` filter (parquet
   *    row-group stats). Units spread over (doc_id, salt) so no single task
   *    owns a 256-page doc (SURVEY.md §4.2 salting).
-  *  - The skew threshold is a TAIL bound (docs larger than ~a task's worth
-  *    of pages): ordinary size variance is absorbed by tasks; the broadcast
-  *    tail-id set stays tiny by construction (guarded: a tail larger than
-  *    `megaInlineCap` falls back to distributed writes and semi/anti joins).
+  *  - The skew threshold is a TAIL bound: docs above `skewPageThreshold`
+  *    are salted only when those one task reads hold, together, more
+  *    pages than one task's fair share of the pass's measured page load
+  *    (one doc over the share, or many smaller ones clustered in one
+  *    input partition). Otherwise they stay in the common path, where
+  *    `extractWhole` plans and merges their units inside one task (same
+  *    output), and no task carries more than a share of them. Ordinary size
+  *    variance is absorbed by tasks; the broadcast tail-id set stays tiny
+  *    by construction (guarded: a tail larger than `megaInlineCap` falls
+  *    back to distributed writes and semi/anti joins against the floor).
   *  - OCR engine init is amortized once per partition inside
   *    `mapPartitions` (the reference pays a subprocess spawn per page pass,
   *    `main.py:229`).
@@ -82,8 +96,9 @@ object Extract {
       conf: ExtractConf = ExtractConf(),
       lineageAcc: Option[CollectionAccumulator[LineageRow]] = None): Dataset[DocOut] = {
     // no size term: the pass reads only doc_id + spans.{kind,media_ref}
-    val pass = tailPass(spark, docs, store, conf, maxBytes = None)
-    extractTiered(spark, docs, pass, collectTail(spark, pass, conf.megaInlineCap),
+    val pageLoad = spark.sparkContext.longAccumulator("tail pass pages")
+    val pass = tailPass(spark, docs, store, conf, maxBytes = None, pageLoad = Some(pageLoad))
+    extractTiered(spark, docs, pass, collectTail(spark, pass, pageLoad, conf),
       store, engine, conf, lineageAcc)
   }
 
@@ -192,20 +207,22 @@ object Extract {
     wholeOut.union(saltedOut)
   }
 
-  /** The metadata pass: one row `(doc_id, byte_est, rejected)` per TAIL doc
-    * — rejected by the size guard (`maxBytes`), or a mega doc whose page
-    * estimate exceeds `skewPageThreshold`. Relational column extraction, so
-    * a parquet/Iceberg source reads only doc_id + spans.kind +
-    * spans.media_ref (+ spans.text lengths with the size term); nested
+  /** The metadata pass: one row `(doc_id, byte_est, rejected, pages)` per
+    * TAIL doc — rejected by the size guard (`maxBytes`), or one whose page
+    * estimate exceeds the `skewPageThreshold` floor. Relational column
+    * extraction, so a parquet/Iceberg source reads only doc_id + spans.kind
+    * + spans.media_ref (+ spans.text lengths with the size term); nested
     * schema pruning skips the text payload when `maxBytes` is None. A
     * rejected doc never reaches the page estimate, exactly as when the
-    * size guard ran first. `scanned` counts every doc the pass reads. */
+    * size guard ran first. `scanned` counts every doc the pass reads;
+    * `pageLoad` sums the page estimates of the docs it does not reject. */
   private[graft] def tailPass(spark: SparkSession, docs: Dataset[Doc], store: MediaStore,
       conf: ExtractConf, maxBytes: Option[Long],
-      scanned: Option[LongAccumulator] = None): DataFrame = {
+      scanned: Option[LongAccumulator] = None,
+      pageLoad: Option[LongAccumulator] = None): DataFrame = {
     import spark.implicits._
     val kstore = store
-    val threshold = conf.skewPageThreshold
+    val floor = conf.skewPageThreshold
     val limit = maxBytes.getOrElse(Long.MaxValue)
     docs.toDF()
       .select(col("doc_id"), col("spans.kind").as("kinds"), col("spans.media_ref").as("refs"),
@@ -213,7 +230,7 @@ object Extract {
       .as[(String, Seq[String], Seq[String], Long)]
       .flatMap { case (id, kindsOrNull, refsOrNull, bytes) =>
         scanned.foreach(_.add(1))
-        if (bytes > limit) Some((id, bytes, true))
+        if (bytes > limit) Some((id, bytes, true, 0))
         else {
           val kinds = Option(kindsOrNull).getOrElse(Nil)
           val refs = Option(refsOrNull).getOrElse(Nil)
@@ -221,27 +238,33 @@ object Extract {
             case ("pdf", r) if r != null && r.nonEmpty => kstore.pageCount(r)
             case _ => 1
           }.sum
-          if (pages > threshold) Some((id, bytes, false)) else None
+          pageLoad.foreach(_.add(pages))
+          if (pages > floor) Some((id, bytes, false, pages)) else None
         }
       }
-      .toDF("doc_id", "byte_est", "rejected")
+      .toDF("doc_id", "byte_est", "rejected", "pages")
   }
 
-  /** Runs `pass` as ONE Spark job and returns its rows while there are at
-    * most `cap` of them; None as soon as more arrive (the job is cancelled
-    * then). Each partition ships at most `cap + 1` rows, so driver memory
-    * and task-result bytes stay O(cap) for any tail size. */
-  private def collectTail(spark: SparkSession, pass: DataFrame, cap: Int): Option[Tail] = {
+  /** Runs `pass` as ONE Spark job and returns its tail while it has at most
+    * `megaInlineCap` rows; None as soon as more arrive (the job is
+    * cancelled then). Each partition ships at most `cap + 1` rows, so
+    * driver memory and task-result bytes stay O(cap) for any tail size.
+    * Of the docs the pass kept for their pages, those of one pass
+    * partition are megas when together they hold more than one task's
+    * fair share of `pageLoad` (and more than the floor). */
+  private def collectTail(spark: SparkSession, pass: DataFrame, pageLoad: LongAccumulator,
+      conf: ExtractConf): Option[Tail] = {
     import spark.implicits._
-    val rdd = pass.as[(String, Long, Boolean)].rdd
-    val rows = mutable.ArrayBuffer.empty[(String, Long, Boolean)]
+    val cap = conf.megaInlineCap
+    val rdd = pass.as[(String, Long, Boolean, Int)].rdd
+    val rows = mutable.ArrayBuffer.empty[(Int, (String, Long, Boolean, Int))] // (partition, row)
     val overflow = Promise[Unit]()
     // the handler runs on the scheduler thread, serialized per job
-    val job = spark.sparkContext.submitJob[(String, Long, Boolean), Array[(String, Long, Boolean)], Unit](rdd,
+    val job = spark.sparkContext.submitJob[(String, Long, Boolean, Int), Array[(String, Long, Boolean, Int)], Unit](rdd,
       it => it.take(cap + 1).toArray,
       rdd.partitions.indices,
-      (_, part) => if (!overflow.isCompleted) {
-        rows ++= part
+      (index, part) => if (!overflow.isCompleted) {
+        rows ++= part.iterator.map(r => (index, r))
         if (rows.length > cap) overflow.trySuccess(())
       },
       ())
@@ -252,8 +275,19 @@ object Extract {
       None
     } else {
       Await.result(job, Duration.Inf) // rethrows a failed pass
-      val (rejected, megas) = rows.toSeq.partition(_._3)
-      Some(Tail(rejected.map(r => (r._1, r._2)), megas.map(_._1)))
+      // pageLoad is complete: only a partition that reached cap + 1 tail
+      // rows stops reading early, and that overflows
+      val share = pageLoad.value /
+        math.max(rdd.getNumPartitions, spark.sparkContext.defaultParallelism)
+      val threshold = math.max(conf.skewPageThreshold.toLong, share)
+      val (rejected, heavy) = rows.toSeq.partition(_._2._3)
+      // the docs above the floor that one task reads are salted together
+      // once they hold more pages than the share: one such doc, or many
+      // small ones clustered in one input partition
+      val megas = heavy.groupBy(_._1).values
+        .filter(_.map(_._2._4.toLong).sum > threshold)
+        .flatMap(_.map(_._2._1)).toSeq
+      Some(Tail(rejected.map(r => (r._2._1, r._2._2)), megas))
     }
   }
 
@@ -320,13 +354,7 @@ object Extract {
       engine: OcrEngine = DeterministicOcr): Summary = {
     import spark.implicits._
 
-    // Resume (north rule: idempotent restart): drop doc_ids already in the
-    // committed output. left_anti scales to any committed size (sort-merge);
-    // at small committed sets AQE turns it into a broadcast anti-join.
-    val todo: Dataset[Doc] = committedIds(spark, outPath) match {
-      case Some(done) => in.join(done, Seq("doc_id"), "left_anti").as[Doc]
-      case None => in
-    }
+    val todo = pending(spark, in, outPath)
 
     val acc = new CollectionAccumulator[LineageRow]
     spark.sparkContext.register(acc, "lineage")
@@ -339,9 +367,11 @@ object Extract {
     // run. A run that rejects nothing leaves no partition.
     val rejectedPath = s"${outPath}_rejected/run_id=${conf.runId}"
     val scanned = spark.sparkContext.longAccumulator("tail pass docs")
-    val pass = tailPass(spark, todo, store, conf, Some(conf.maxDocBytes), Some(scanned))
+    val pageLoad = spark.sparkContext.longAccumulator("tail pass pages")
+    val pass = tailPass(spark, todo, store, conf, Some(conf.maxDocBytes), Some(scanned),
+      Some(pageLoad))
     // inline tier: also the number of rejected docs
-    val (extracted, rejectedDocs) = collectTail(spark, pass, conf.megaInlineCap) match {
+    val (extracted, rejectedDocs) = collectTail(spark, pass, pageLoad, conf) match {
       case Some(tail) =>
         if (tail.rejected.nonEmpty)
           tail.rejected.toDF("doc_id", "byte_est").withColumn("reason", lit("too_large"))
@@ -399,11 +429,17 @@ object Extract {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
-  private def committedIds(spark: SparkSession, outPath: String): Option[Dataset[org.apache.spark.sql.Row]] = {
+  /** Resume (north rule: idempotent restart): `in` minus the doc_ids
+    * already in the committed output. left_anti scales to any committed
+    * size (sort-merge); at small committed sets AQE turns it into a
+    * broadcast anti-join. It ignores duplicate keys, so the committed ids
+    * are not deduplicated first (that would shuffle every one of them). */
+  private[graft] def pending(spark: SparkSession, in: Dataset[Doc], outPath: String): Dataset[Doc] = {
+    import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(outPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      Some(spark.read.parquet(outPath).select("doc_id").distinct())
-    else None
+      in.join(spark.read.parquet(outPath).select("doc_id"), Seq("doc_id"), "left_anti").as[Doc]
+    else in
   }
 }

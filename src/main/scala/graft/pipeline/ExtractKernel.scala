@@ -14,6 +14,11 @@ import graft.model._
 final case class ExtractConf(
     level: String = "medium",
     numPartitions: Int = 32,
+    // A floor, not the mega cut: `plan` splits any doc above it, but
+    // `Extract` salts the docs above it across tasks only when those of
+    // one input partition together hold more pages than one task's fair
+    // share of the run (Σ pages of the metadata pass ÷ max(its
+    // partitions, defaultParallelism)).
     skewPageThreshold: Int = 32,
     pagesPerSplit: Int = 16,
     runId: String = "run-0",

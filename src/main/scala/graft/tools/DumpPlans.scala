@@ -37,7 +37,9 @@ object DumpPlans {
     // flagship extraction (fixture corpus incl. a mega doc → both branches)
     section("extraction pipeline (common path, no megas)",
       "Single stage scan → mapPartitions(kernel) → sink; ZERO Exchange. The metadata " +
-        "pass ran before as its own job and found no tail, so nothing is skipped.") {
+        "pass ran before as its own job and found no tail, so nothing is skipped. A corpus " +
+        "whose docs above the skewPageThreshold floor hold, per input partition, no more " +
+        "than one task's share of the pages plans the same way: they stay in this stage.") {
       val s2 = spark
       import s2.implicits._
       val ds = Extract.extractDS(spark,
@@ -49,7 +51,11 @@ object DumpPlans {
     section("extraction metadata pass (size guard + skew probe, one job)",
       "Nested pruning: with the size term (`Extract.run`) the scan reads spans.text for " +
         "the byte estimate; `extractDS` reads doc_id + spans.{kind,media_ref} only. " +
-        "The pass keeps only the tail rows (over-size or mega).") {
+        "The pass keeps only the tail rows (over-size, or above the skewPageThreshold " +
+        "floor, with their pages) and sums every accepted doc's pages in an accumulator; " +
+        "the driver keeps as megas the tail docs of each pass partition whose tail docs " +
+        "together hold more than max(floor, Σ pages ÷ max(pass partitions, " +
+        "defaultParallelism)) pages.") {
       val tmp = java.nio.file.Files.createTempDirectory("graft-plans").toString
       Fixtures.testDocsDS(spark).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
       val docs = graft.sources.Io().readDocs(spark, s"$tmp/docs")
@@ -60,8 +66,10 @@ object DumpPlans {
       pass.queryExecution.executedPlan.toString
     }
     section("extraction pipeline (with mega docs: salted skew branch)",
-      "Common branch skips the tail ids through one broadcast set; skew branch re-reads " +
-        "behind a pushed `doc_id IN`, spreads (doc_id, salt), merges per doc.") {
+      "The two 256-page megas hold more than one task's share of this 50-doc corpus, so " +
+        "they are salted. Common branch skips the rejected and mega ids through one " +
+        "broadcast set; skew branch re-reads behind a pushed `doc_id IN`, spreads " +
+        "(doc_id, salt), merges per doc.") {
       val ds = Extract.extractDS(spark, Fixtures.testDocsDS(spark),
         conf = ExtractConf(numPartitions = 4))
       ds.collect()

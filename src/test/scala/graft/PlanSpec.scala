@@ -84,16 +84,15 @@ class PlanSpec extends AnyFunSuite {
     assert(!rs.contains("text"), s"text column not pruned: $rs")
   }
 
-  test("one extraction run: at most 6 jobs; only the tail pass and the main write scan the input") {
+  /** Runs `body` in its own job group and returns its result with each of
+    * its jobs → (the scan it belongs to: its SQL execution, else the job
+    * itself; the input records its stages read). */
+  private def jobsOf[T](body: => T): (T, Map[Int, (String, Long)]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     import java.util.concurrent.ConcurrentHashMap
     import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-jobs").toString
-    Fixtures.testDocsDS(spark).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
-    val docs = graft.sources.Io().readDocs(spark, s"$tmp/docs")
     val sc = spark.sparkContext
     val group = "extract-job-guard"
-    // job id → its scan: the SQL execution it belongs to, else the job itself
     val scanOf = new ConcurrentHashMap[Int, String]
     val jobOfStage = new ConcurrentHashMap[Int, Int]
     val recordsRead = new ConcurrentHashMap[Int, Long]
@@ -116,25 +115,79 @@ class PlanSpec extends AnyFunSuite {
         }
     }
     sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "Extract.run")
-      Extract.run(spark, docs, s"$tmp/out", ExtractConf(numPartitions = 4))
+    val result = try {
+      sc.setJobGroup(group, "jobsOf")
+      val r = body
       // events arrive in order: once the drain job's start is seen, every
-      // event of the run's jobs has been delivered
+      // event of the body's jobs has been delivered
       sc.setJobGroup("drain", "drain")
       sc.parallelize(Seq(1), 1).count()
       scala.concurrent.Await.result(drained.future, scala.concurrent.duration.Duration(60, "s"))
+      r
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    val jobs = scanOf.asScala.toMap
+    (result, scanOf.asScala.toMap.map { case (j, scan) => j -> (scan, recordsRead.getOrDefault(j, 0L)) })
+  }
+
+  test("one extraction run: at most 6 jobs; only the tail pass and the main write scan the input") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    Fixtures.testDocsDS(spark).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
+    val docs = graft.sources.Io().readDocs(spark, s"$tmp/docs")
+    val (_, jobs) = jobsOf(Extract.run(spark, docs, s"$tmp/out", ExtractConf(numPartitions = 4)))
     assert(jobs.size <= 6, s"${jobs.size} jobs in one run: $jobs")
-    val readByScan = jobs.toSeq.groupBy(_._2).map { case (scan, js) =>
-      scan -> js.map(j => recordsRead.getOrDefault(j._1, 0L)).sum }
+    val readByScan = jobs.values.toSeq.groupBy(_._1).map { case (scan, js) => scan -> js.map(_._2).sum }
     val scans = readByScan.filter(_._2 > 0)
     assert(scans.size == 2, s"the input is read by ${scans.size} scans, not 2: $readByScan")
     assert(scans.values.forall(_ >= Fixtures.testDocs.length), s"partial scans: $readByScan")
+  }
+
+  test("megas under one task's page share are not salted: no Exchange, 3 jobs, output == extractWhole") {
+    import graft.media.{DeterministicMediaStore, DeterministicOcr}
+    import graft.pipeline.ExtractKernel
+    val spark2 = spark
+    import spark2.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-share").toString
+    val corpus = (1 to 2000).map(Fixtures.doc)
+    spark.createDataset(corpus).toDF().repartition(4).write.parquet(s"$tmp/docs")
+    val docs = graft.sources.Io().readDocs(spark, s"$tmp/docs")
+    val conf = ExtractConf(numPartitions = 4)
+    def pages(d: graft.model.Doc) = d.spans.map(ExtractKernel.spanPages(_, DeterministicMediaStore)).sum
+    val share = corpus.map(pages).sum /
+      math.max(docs.rdd.getNumPartitions, spark.sparkContext.defaultParallelism)
+    val overFloor = corpus.filter(pages(_) > conf.skewPageThreshold)
+    assert(docs.inputFiles.length > 1, "premise: a multi-file corpus")
+    assert(overFloor.map(_.doc_id).toSet == Set(Fixtures.docId(1000), Fixtures.docId(2000)) &&
+      overFloor.forall(pages(_) <= share), s"premise: 256-page megas under the share $share")
+
+    val ds = Extract.extractDS(spark, docs, conf = conf)
+    val got = ds.collect().map(d => d.doc_id -> d).toMap
+    val plan = ds.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"no mega over the share, yet a shuffle:\n$plan")
+
+    val out = s"$tmp/out"
+    val (summary, jobs) = jobsOf(Extract.run(spark, docs, out, conf))
+    assert(jobs.size == 3, s"expected the tail pass, the write and the lineage write: $jobs")
+    assert(!summary.lineage.exists(_.path == "salted"), s"salted lineage: ${summary.lineage}")
+    val written = spark.read.parquet(out).as[graft.model.DocOut].collect().map(d => d.doc_id -> d).toMap
+    assert(got.size == corpus.size && written.size == corpus.size)
+    corpus.foreach { d =>
+      val want = ExtractKernel.extractWhole(d, DeterministicMediaStore, DeterministicOcr, conf)
+      assert(got(d.doc_id) == want, s"extractDS differs for ${d.doc_id}")
+      assert(written(d.doc_id) == want, s"Extract.run differs for ${d.doc_id}")
+    }
+  }
+
+  test("resume anti-join reads the committed ids without an aggregate") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-pending").toString
+    val all = Fixtures.testDocsDS(spark)
+    all.limit(10).toDF().write.parquet(s"$tmp/out")
+    val todo = Extract.pending(spark, all, s"$tmp/out")
+    assert(todo.collect().length == Fixtures.testDocs.length - 10)
+    val plan = todo.queryExecution.executedPlan.toString
+    assert(plan.contains("LeftAnti"), s"resume is not an anti-join:\n$plan")
+    assert(!plan.contains("Aggregate"), s"committed ids are aggregated before the anti-join:\n$plan")
   }
 
   test("mega re-read pushes the doc_id IN filter to the parquet scan") {
