@@ -30,8 +30,9 @@ trait MediaStore extends Serializable {
 
   /** Metadata-only byte-size estimate of a media object — the streaming
     * analogue of the reference's Content-Length / mid-download 10 MB cap
-    * (`main.py:256-303`). Lets the size guard (`Extract.sizeSplit`) reject
-    * a 2 GB scanned PDF BEFORE any page decodes, not after the download.
+    * (`main.py:256-303`). Lets the size guard (the metadata pass,
+    * `Extract.tailPass` against `ExtractConf.maxDocBytes`) reject a 2 GB
+    * scanned PDF BEFORE any page decodes, not after the download.
     * Default 0 = unknown (a store without cheap size metadata opts out and
     * the text-payload guard alone applies). */
   def byteEstimate(mediaRef: String): Long = 0L

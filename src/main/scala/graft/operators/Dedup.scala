@@ -253,7 +253,7 @@ object Dedup {
   }
 
   /** Partition count and bucket function of the index's sets table. One
-    * definition shared by build, append, and probe — drift would silently
+    * definition shared by build and probe — drift would silently
     * empty the pruned verification join. */
   val SetsBuckets = 64
   // int, not long: partition-column type inference reads the bucket=N
@@ -262,45 +262,6 @@ object Dedup {
   // dynamic partition pruning
   def setsBucket(id: Column): Column =
     pmod(xxhash64(id), lit(SetsBuckets.toLong)).cast("int")
-
-  /** Append a new batch into an existing band index — the daily-crawl
-    * WRITE path that pairs with `probeBandIndex`: after a batch is deduped
-    * against the base, its keepers join the base state for subsequent
-    * batches. Appends parquet files only (no rewrite of existing data);
-    * ids are assumed globally unique across appends (same contract as the
-    * ANN index appends). */
-  def appendBandIndex(batch: DataFrame, idCol: String, textCol: String,
-      path: String, numPerms: Int = 8, rowsPerBand: Int = 2): Unit = {
-    // NOT atomic on a plain filesystem: a crash between the two appends
-    // leaves a doc in one table but not the other, and EITHER torn state
-    // silently misses that doc's future duplicates (sets-only → no band
-    // collisions; bands-only → verification join drops the candidate).
-    // Production puts both tables in one Iceberg transaction (the same
-    // atomicity story as the output sink); here, detect a torn append
-    // with `checkIndexConsistency` and re-append or rebuild. Re-appending
-    // the same batch is correctness-safe: downstream distinct/min dedups
-    // the doubled rows (at the cost of index size).
-    // Ordering matches the build path (round-3 advice): bands/ first,
-    // sets/ LAST — "sets complete" remains the index's completeness marker
-    // in both code paths, so a crash mid-append leaves the more detectable
-    // bands-only torn state rather than silently inverting the convention.
-    bandRows(batch, idCol, textCol, numPerms, rowsPerBand)
-      .write.mode("append").parquet(s"$path/bands")
-    batch.select(col(idCol), shingleSetStrs(col(textCol)).as("shl"),
-        setsBucket(col(idCol)).as("bucket"))
-      .write.partitionBy("bucket").mode("append").parquet(s"$path/sets")
-  }
-
-  /** Maintenance check for a band index: ids present in exactly one of
-    * bands/sets (the torn-append signature). Empty result = consistent.
-    * A full-index scan — run it after a suspect append, not per probe. */
-  def checkIndexConsistency(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, idCol: String): DataFrame = {
-    val bandIds = spark.read.parquet(s"$indexPath/bands").select(col(idCol)).distinct()
-    val setIds = spark.read.parquet(s"$indexPath/sets").select(col(idCol)).distinct()
-    bandIds.exceptAll(setIds).select(col(idCol), lit("bands_only").as("state"))
-      .unionAll(setIds.exceptAll(bandIds).select(col(idCol), lit("sets_only").as("state")))
-  }
 
   /** Incremental dedup candidates: probe a new batch's band rows against a
     * materialized base index. Output (id_new, id_base) — band-colliding

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.model.{Doc, Schemas}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Source/sink boundary (SURVEY.md §2.1 S1/S7). Sandbox storage is parquet;
   * production is an Iceberg table — SAME code path behind a format switch,
@@ -22,15 +22,10 @@ final case class Io(format: String = "parquet") {
 
   def readDocs(spark: SparkSession, location: String): Dataset[Doc] = {
     import spark.implicits._
-    val df =
-      if (format == "iceberg") spark.read.format("iceberg").load(location)
-      else spark.read.format(format).load(location)
+    val df = spark.read.format(format).load(location)
     validate(df)
     df.select("doc_id", "spans").as[Doc]
   }
-
-  def writeDocs(df: DataFrame, location: String, mode: SaveMode = SaveMode.Append): Unit =
-    df.write.format(format).mode(mode).save(location)
 
   private def validate(df: DataFrame): Unit = {
     val fields = df.schema.fieldNames.toSet

@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *  2. NEVER drop bad lines silently: a corrupt line lands in a
   *     `_corrupt_record` column (PERMISSIVE mode) and is split into a
   *     quarantine output with the raw line preserved — the same
-  *     keep/reject pattern as the pipeline's 10 MB size guard
-  *     (`Extract.sizeSplit`). DROPMALFORMED would make ingestion row
-  *     counts unauditable.
+  *     keep/reject pattern as the pipeline's 10 MB size guard (the
+  *     metadata pass, `Extract.tailPass`). DROPMALFORMED would make
+  *     ingestion row counts unauditable.
   */
 object Jsonl {
 

@@ -18,7 +18,8 @@ package graft.sources
   *     (the reference defaults unknown types to PDF).
   *
   * The 10 MB streaming cap (main.py:288-294) maps to the pipeline's P4
-  * size guard (`Extract.sizeSplit` / `ExtractConf.maxDocBytes`).
+  * size guard (the metadata pass `Extract.tailPass` against
+  * `ExtractConf.maxDocBytes`).
   */
 object UrlMeta {
 

@@ -187,56 +187,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(!hits.exists(_._1 == 102L), s"unrelated batch doc must miss: $hits")
   }
 
-  test("band index append: probing base+appended equals a fresh full rebuild") {
-    import spark.implicits._
-    val base = corpus.filter(col("doc_id") <= 3)
-    val day2 = Seq(
-      (6L, "astronomy telescopes observe distant spiral galaxies through clear mountain air tonight"),
-      (7L, "monthly lease payments due under completely different contract terms this quarter")
-    ).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("bandappend").toString
-    val incr = s"$tmp/incr"
-    Dedup.buildBandIndex(base, "doc_id", "text", incr)
-    Dedup.appendBandIndex(day2, "doc_id", "text", incr)
-    val fresh = s"$tmp/fresh"
-    Dedup.buildBandIndex(base.unionAll(day2), "doc_id", "text", fresh)
-    val probeDocs = Seq(
-      (101L, "astronomy telescopes observe distant spiral galaxies through clear mountain air tonight"), // = appended 6
-      (102L, "the quick brown fox jumps over the lazy dog near the river bank today") // = base 1/2
-    ).toDF("doc_id", "text")
-    def probe(path: String) = Dedup.probeBandIndex(spark, path, probeDocs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaAppend = probe(incr)
-    assert(viaAppend == probe(fresh), "appended index must behave like a rebuild")
-    assert(viaAppend.contains((101L, 6L)), s"appended doc must be probe-visible: $viaAppend")
-    assert(viaAppend.contains((102L, 1L)), s"base doc must stay probe-visible: $viaAppend")
-  }
-
-  test("index consistency check flags a torn append; re-append recovers") {
-    import spark.implicits._
-    val base = corpus.filter(col("doc_id") <= 3)
-    val day2 = Seq((8L, "entirely new prose about deep sea vents and chemosynthetic bacteria colonies"))
-      .toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory("torn").toString + "/idx"
-    Dedup.buildBandIndex(base, "doc_id", "text", path)
-    // simulate the torn state appendBandIndex documents: bands landed
-    // (bands/ is appended FIRST, matching the build-path ordering where
-    // sets/ last marks completeness — round-3 advice), crash before sets
-    Dedup.bandRows(day2, "doc_id", "text")
-      .write.mode("append").parquet(s"$path/bands")
-    val torn = Dedup.checkIndexConsistency(spark, path, "doc_id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(torn == Set((8L, "bands_only")), s"torn state must be flagged: $torn")
-    // documented recovery: re-append the batch (downstream distinct/min
-    // absorbs the doubled set rows), then the index is consistent again
-    Dedup.appendBandIndex(day2, "doc_id", "text", path)
-    assert(Dedup.checkIndexConsistency(spark, path, "doc_id").isEmpty)
-    val probe = Dedup.probeBandIndex(spark, path,
-        day2.select((col("doc_id") + 100).as("doc_id"), col("text")), "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(probe == Set((108L, 8L)), s"recovered doc must be probe-visible exactly once: $probe")
-  }
-
   test("connected components: chains, triangles, singleton edges resolve to min id") {
     import spark.implicits._
     // one 5-node PATH (worst case for naive propagation — needs >1 star
@@ -371,7 +321,7 @@ class OperatorSpec extends AnyFunSuite {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-io").toString
     val docs = graft.pipeline.Fixtures.testDocsDS(spark)
-    graft.sources.Io().writeDocs(docs.toDF(), s"$tmp/docs")
+    docs.toDF().write.parquet(s"$tmp/docs")
     val back = graft.sources.Io().readDocs(spark, s"$tmp/docs")
     assert(back.collect().map(_.doc_id).toSet == docs.collect().map(_.doc_id).toSet)
     val bad = Seq(("a", Seq(1, 2))).toDF("doc_id", "spans")
@@ -540,46 +490,6 @@ class OperatorSpec extends AnyFunSuite {
     // kind dispatch is case-insensitive .pdf suffix (main.py:323)
     assert(UrlMeta.kindOf("A.PDF") == "pdf")
     assert(UrlMeta.kindOf("a.png") == "image")
-  }
-
-  test("SRP/IVF index append: base+appended search equals a fresh full rebuild") {
-    import spark.implicits._
-    // hash-derived components (sin(i*a+d*b) is ~17-periodic in i — ids 170
-    // and 187 got near-identical vectors and broke rank determinism)
-    val all = (0L until 200L).map { i =>
-      (i, Array.tabulate(64)(d =>
-        (graft.core.Hash64.pick(s"iv|$i|$d", 2001) - 1000) / 1000.0f))
-    }
-    val (base, delta) = all.splitAt(140)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-idx-append").toString
-    // query = an APPENDED vector: proves the delta is searchable (its own
-    // rank-1 hit must be itself), not just that old results survive
-    val q = all(170)._2.toSeq
-
-    Similarity.buildSrpIndex(base.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$tmp/srp")
-    Similarity.appendSrpIndex(delta.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$tmp/srp")
-    Similarity.buildSrpIndex(all.toDF("vec_id", "embedding"), "vec_id", "embedding", s"$tmp/srp_full")
-    val srpApp = Similarity.lshIndexedTopK(spark, s"$tmp/srp", "vec_id", "embedding", q, 10)
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    val srpFull = Similarity.lshIndexedTopK(spark, s"$tmp/srp_full", "vec_id", "embedding", q, 10)
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    assert(srpApp == srpFull, s"append=$srpApp rebuild=$srpFull")
-    assert(srpApp.head == ((1, 170L)), s"appended vector must be its own top hit: $srpApp")
-
-    val cents = Similarity.kmeansCentroids(all.toDF("vec_id", "embedding"),
-      "vec_id", "embedding", k = 4, iters = 2)
-    Similarity.buildIvfIndex(base.toDF("vec_id", "embedding"), "vec_id", "embedding",
-      cents, s"$tmp/ivf")
-    Similarity.appendIvfIndex(delta.toDF("vec_id", "embedding"), "vec_id", "embedding",
-      cents, s"$tmp/ivf")
-    Similarity.buildIvfIndex(all.toDF("vec_id", "embedding"), "vec_id", "embedding",
-      cents, s"$tmp/ivf_full")
-    val ivfApp = Similarity.ivfTopKIndexed(spark, s"$tmp/ivf", "vec_id", "embedding", q, 10, cents)
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    val ivfFull = Similarity.ivfTopKIndexed(spark, s"$tmp/ivf_full", "vec_id", "embedding", q, 10, cents)
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    assert(ivfApp == ivfFull, s"append=$ivfApp rebuild=$ivfFull")
-    assert(ivfApp.head == ((1, 170L)), s"appended vector must be its own top hit: $ivfApp")
   }
 
   test("IVF: k-means converges on separated clusters; probe finds the right bucket") {
