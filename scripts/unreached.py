@@ -20,7 +20,6 @@ KEEP = {
     "Verify": "contract correctness main", "SparkEntry": "the query contract",
     "entry": "SparkEntry's flagship extraction, smoke-checked by the contract",
     "DumpRaw": "scripts/gen_golden.py runs it", "DumpPlans": "writes PLANS.md",
-    "StreamProfile": "streaming measurement main",
     "GraftExtensions": "named by spark.sql.extensions",
     "cleanReference": "reference form specs compare TextClean.clean against",
     "detectReference": "reference form specs compare LangDetect.detect against",

@@ -1,7 +1,8 @@
 package graft
 
 import graft.pipeline.Fixtures
-import org.apache.spark.sql.SparkSession
+
+import scala.jdk.CollectionConverters._
 
 /** Round benchmark (driver contract: the LAST stdout line is ONE compact
   * JSON object — headline + scaling + calibration, kept well under the
@@ -38,19 +39,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def session(cores: Int, shufflePartitions: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   /** Rested-host 8-core probe reference (docs/s, best-of-4 on the 40k-doc
     * warm corpus) — measured on this sandbox host class rested (24.5–27.6k
     * band; drained reads 17–20k); see the gate scaladoc. */
@@ -71,7 +59,7 @@ object Bench {
     warmCorpus = s"$benchDir/corpus_warm_$numDocs"
     def missing(p: String) = !new java.io.File(s"$p/_SUCCESS").exists
     if (missing(mainCorpus) || missing(warmCorpus)) {
-      val spark = session(32, 32)
+      val spark = LocalSession(32, 32)
       try {
         Fixtures.benchDocs(spark, numDocs, 128).write
           .mode("overwrite").parquet(mainCorpus)
@@ -94,15 +82,10 @@ object Bench {
     val javaBin = s"${sys.props("java.home")}/bin/java"
     val cp = sys.props("java.class.path")
     val mem = sys.env.getOrElse("SPARK_DRIVER_MEM", "24g")
-    val jvmFlags = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED")) ++
+    // the child opens the same modules as this JVM (build.sbt's
+    // javaOptions), in the `--add-opens=module/pkg=ALL-UNNAMED` form
+    val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq.filter(_.startsWith("--add-opens")) ++
       Seq(s"-Xmx$mem", "-Dspark.ui.enabled=false")
     val pin =
       if (new java.io.File("/usr/bin/taskset").exists)
@@ -379,7 +362,7 @@ object Bench {
     val timings: Seq[(String, Double)] =
       if (sys.env.get("GRAFT_BENCH_SKIP_QUERIES").contains("1")) Nil
       else try {
-        val spark = session(cpus, cpus)
+        val spark = LocalSession(cpus, cpus)
         // session warmup so the first timed query doesn't absorb one-time
         // session costs (~6 s measured: scheduler spin-up, codegen infra,
         // noop-sink + parquet reader init) — round-1's alphabetically-first

@@ -2,7 +2,6 @@ package graft
 
 import graft.pipeline.{Extract, ExtractConf}
 import graft.sources.Io
-import org.apache.spark.sql.SparkSession
 
 /** Child JVM for one scaling measurement: read the pre-materialized parquet
   * corpus, run the extraction pipeline at `local[cores]`, print the rate.
@@ -28,16 +27,7 @@ object BenchWorker {
     }
     val cores = coresS.toInt
     val numDocs = numDocsS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-worker-$cores")
-      .config("spark.sql.shuffle.partitions", math.max(cores, 32).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(cores, math.max(cores, 32))
     val conf = ExtractConf(level = "medium", numPartitions = 128)
     def run(path: String): Unit =
       Extract.extractDS(spark, Io().readDocs(spark, path), conf = conf)

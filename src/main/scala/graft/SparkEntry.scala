@@ -23,6 +23,8 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys → driver rows-only check. */
+    * the same parquet tables. Queries declared `RowsOnly` → driver
+    * rows-only check; those declared `DataSql` are in
+    * `Queries.oracleDynamic`. */
   def oracleSql: Map[String, String] = Queries.oracle
 }

@@ -325,9 +325,9 @@ object Extract {
     * exceeds `maxBytes` into a rejected side output `(doc_id, byte_est,
     * reason)` BEFORE extraction — the reference 413s a too-large upload
     * before OCR ever runs. Column-level: the estimate reads only
-    * `spans.text` lengths (stays inside the scan's codegen). `run` uses it
-    * only in the fallback tier, when the metadata pass's tail exceeds
-    * `megaInlineCap`; otherwise the pass itself finds the rejected docs. */
+    * `spans.text` lengths (stays inside the scan's codegen). `run` does
+    * not call it: its metadata pass finds the rejected docs with the same
+    * estimate. */
   def sizeSplit(spark: SparkSession, docs: Dataset[Doc], maxBytes: Long,
       store: MediaStore = DeterministicMediaStore)
       : (Dataset[Doc], DataFrame) = {
@@ -380,9 +380,12 @@ object Extract {
         (extractTiered(spark, todo, pass, Some(tail), store, engine, conf, Some(acc)),
           Some(tail.rejected.length.toLong))
       case None =>
-        val (accepted, rejected) = sizeSplit(spark, todo, conf.maxDocBytes, store)
-        rejected.write.mode(SaveMode.Overwrite).parquet(rejectedPath)
-        (extractDS(spark, accepted, store, engine, conf, Some(acc)), None)
+        // the tail outgrew the inline cap: the rejected rows come from the
+        // same pass, and extraction skips and salts by joins against it
+        pass.filter(col("rejected"))
+          .select(col("doc_id"), col("byte_est"), lit("too_large").as("reason"))
+          .write.mode(SaveMode.Overwrite).parquet(rejectedPath)
+        (extractTiered(spark, todo, pass, None, store, engine, conf, Some(acc)), None)
     }
 
     val observed = Observation("extract_metrics")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.pipeline.{Extract, ExtractConf, Fixtures}
-import org.apache.spark.sql.SparkSession
 
 /** Writes PLANS.md: the executed physical plans of the flagship pipeline
   * and the heaviest/most interesting contract queries, as standing evidence
@@ -13,14 +12,7 @@ object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession(4, 4)
 
     val sb = new StringBuilder
     sb.append("# PLANS — executed physical plans (generated by graft.tools.DumpPlans)\n\n")
