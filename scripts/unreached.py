@@ -21,9 +21,6 @@ KEEP = {
     "entry": "SparkEntry's flagship extraction, smoke-checked by the contract",
     "DumpRaw": "scripts/gen_golden.py runs it", "DumpPlans": "writes PLANS.md",
     "GraftExtensions": "named by spark.sql.extensions",
-    "cleanReference": "reference form specs compare TextClean.clean against",
-    "detectReference": "reference form specs compare LangDetect.detect against",
-    "scoresOf": "reference form of LangDetect's per-language scores",
     "detectLangCol": "reference column form of the native lang_detect",
     "hamming": "reference form of the SimHash distance",
     "UrlFetch": "replicated URL tier; wire-in or delete is open",

@@ -36,42 +36,67 @@ object Consensus {
     mergeVote(texts)
   }
 
-  /** The general per-position vote loop — the reference semantics for any
-    * pass count (kept as the differential-property reference for the
-    * two-pass fast path above). */
+  /** The general per-position vote loop, for any pass count. Where every
+    * pass covers a run of positions and all agree there (the common case),
+    * the run is copied from pass 0 in bulk: `next(p)` is the first position
+    * ≥ i where pass p differs from pass 0, found by a vectorized mismatch
+    * and kept until i passes it. Every other position takes the first-seen
+    * counting vote. */
   private[core] def mergeVote(texts: Seq[String]): String = {
-    val maxLen = texts.iterator.map(_.length).max                  // main.py:193
+    val cs = texts.iterator.map(_.toCharArray).toArray
+    val np = cs.length
+    var maxLen = 0                                                 // main.py:193
+    var minLen = Int.MaxValue
+    var p = 0
+    while (p < np) {
+      maxLen = math.max(maxLen, cs(p).length)
+      minLen = math.min(minLen, cs(p).length)
+      p += 1
+    }
     val sb = new java.lang.StringBuilder(maxLen)
-    // scratch hoisted out of the position loop (perf: no per-position alloc)
-    val seenChars = new Array[Char](texts.length)
-    val seenCounts = new Array[Int](texts.length)
-    val arr = texts.toArray
+    val next = Array.fill(np)(-1)
+    // counts in first-seen order over the ≤ np pass chars at a position
+    val seenChars = new Array[Char](np)
+    val seenCounts = new Array[Int](np)
     var i = 0
     while (i < maxLen) {
-      // counts in first-seen order over the ≤4 pass chars at position i
-      var nSeen = 0
-      arr.foreach { t =>
-        if (i < t.length) {
-          val c = t.charAt(i)
-          var k = 0
-          var found = false
-          while (k < nSeen && !found) {
-            if (seenChars(k) == c) { seenCounts(k) += 1; found = true }
-            k += 1
+      if (i < minLen) {
+        var run = minLen                                           // [i, run): all passes agree
+        p = 1
+        while (p < np) {
+          if (next(p) < i) {
+            val m = java.util.Arrays.mismatch(cs(0), i, minLen, cs(p), i, minLen)
+            next(p) = if (m < 0) minLen else i + m
           }
-          if (!found) { seenChars(nSeen) = c; seenCounts(nSeen) = 1; nSeen += 1 }
+          run = math.min(run, next(p))
+          p += 1
         }
+        sb.append(cs(0), i, run - i)
+        i = run
       }
-      if (nSeen > 0) {                                             // main.py:200-201
-        var best = 0
+      if (i < maxLen) {
+        var nSeen = 0
+        p = 0
+        while (p < np) {
+          val t = cs(p)
+          if (i < t.length) {
+            val c = t(i)
+            var k = 0
+            while (k < nSeen && seenChars(k) != c) k += 1
+            if (k < nSeen) seenCounts(k) += 1
+            else { seenChars(nSeen) = c; seenCounts(nSeen) = 1; nSeen += 1 }
+          }
+          p += 1
+        }
+        var best = 0                                               // main.py:200-201
         var k = 1
         while (k < nSeen) {                                        // strict > keeps first-seen on ties,
           if (seenCounts(k) > seenCounts(best)) best = k           // = Counter.most_common(1) semantics
           k += 1
         }
         sb.append(seenChars(best))
+        i += 1
       }
-      i += 1
     }
     sb.toString
   }

@@ -33,36 +33,33 @@ object DiffLib {
     // (isjunk=None). ASCII fast path: a 128-slot array instead of a hash
     // map — b2j construction was a top allocation site (boxed chars,
     // buffer churn) in the 32-thread extraction profile.
-    private val asciiOnly: Boolean = {
-      var i = 0
-      var ok = true
-      while (ok && i < b.length) { if (b.charAt(i) >= 128) ok = false; i += 1 }
-      ok
-    }
-
     private val ntest = if (b.length >= 200) b.length / 100 + 1 else Int.MaxValue
 
-    private val b2jAscii: Array[Array[Int]] = if (!asciiOnly) null else {
+    // null when b holds a char ≥ 128; the count scan doubles as the check
+    private val b2jAscii: Array[Array[Int]] = {
       val counts = new Array[Int](128)
       var i = 0
-      while (i < b.length) { counts(b.charAt(i)) += 1; i += 1 }
-      val out = new Array[Array[Int]](128)
-      var c = 0
-      while (c < 128) {
-        // autojunk: popular chars (count > ntest) excluded from seeds
-        if (counts(c) > 0 && counts(c) <= ntest) out(c) = new Array[Int](counts(c))
-        c += 1
+      while (i < b.length && b.charAt(i) < 128) { counts(b.charAt(i)) += 1; i += 1 }
+      if (i < b.length) null else {
+        val out = new Array[Array[Int]](128)
+        var c = 0
+        while (c < 128) {
+          // autojunk: popular chars (count > ntest) excluded from seeds
+          if (counts(c) > 0 && counts(c) <= ntest) out(c) = new Array[Int](counts(c))
+          c += 1
+        }
+        val fill = new Array[Int](128)
+        i = 0
+        while (i < b.length) {
+          val ch = b.charAt(i)
+          val arr = out(ch)
+          if (arr != null) { arr(fill(ch)) = i; fill(ch) += 1 }
+          i += 1
+        }
+        out
       }
-      val fill = new Array[Int](128)
-      i = 0
-      while (i < b.length) {
-        val ch = b.charAt(i)
-        val arr = out(ch)
-        if (arr != null) { arr(fill(ch)) = i; fill(ch) += 1 }
-        i += 1
-      }
-      out
     }
+    private val asciiOnly = b2jAscii != null
 
     private val b2jMap: Map[Char, Array[Int]] = if (asciiOnly) null else {
       val m = mutable.LinkedHashMap.empty[Char, mutable.ArrayBuffer[Int]]
@@ -77,26 +74,37 @@ object DiffLib {
       m.iterator.map { case (c, idxs) => c -> idxs.toArray }.toMap
     }
 
-    @inline private def positionsOf(c: Char): Array[Int] =
+    @inline private[core] def positionsOf(c: Char): Array[Int] =
       if (asciiOnly) { if (c < 128) b2jAscii(c) else null }
       else b2jMap.getOrElse(c, null)
 
     // Per-matcher scratch: primitive arrays instead of difflib's dicts —
     // boxed HashMap churn here was the #1 allocation source in the whole
     // pipeline (GC-bound at 32 threads). Same recurrence, same tie-breaks.
+    // Each row array is paired with a stamp array: slot j holds a live
+    // j2len entry only if its stamp is the generation of the row that
+    // wrote it, so no row is ever zero-filled and a row costs only its
+    // matches, as with CPython's sparse j2len dict.
     private val j2lenA = new Array[Int](b.length + 1)
     private val j2lenB = new Array[Int](b.length + 1)
+    private val stampA = new Array[Int](b.length + 1)
+    private val stampB = new Array[Int](b.length + 1)
+    private var gen = 0    // stamp of the last row written; stamps start at 0
 
     def findLongestMatch(alo: Int, ahi: Int, blo: Int, bhi: Int): Match = {
       var besti = alo
       var bestj = blo
       var bestsize = 0
-      var prev = j2lenA
-      var cur = j2lenB
-      java.util.Arrays.fill(prev, blo, bhi + 1, 0)
+      if (gen > Int.MaxValue - (ahi - alo) - 2) {                  // stamps would wrap: start over
+        java.util.Arrays.fill(stampA, 0); java.util.Arrays.fill(stampB, 0); gen = 0
+      }
+      // generation of the empty row before alo: one past every written
+      // stamp, so no row of an earlier call reads as live
+      var g = gen + 1
+      var prev = j2lenA; var prevStamp = stampA
+      var cur = j2lenB; var curStamp = stampB
       var i = alo
       while (i < ahi) {
-        java.util.Arrays.fill(cur, blo, bhi + 1, 0)
         val idxs = positionsOf(a.charAt(i))
         if (idxs != null) {
           var k = 0
@@ -106,9 +114,11 @@ object DiffLib {
             if (j >= bhi) break = true
             else if (j >= blo) {
               // prev(j) holds j2len[j-1] from the previous row (index
-              // shifted by +1 so j-1 = blo-1 maps to slot blo → 0-filled)
-              val len = prev(j) + 1
+              // shifted by +1; this call never writes slot blo, so
+              // j-1 = blo-1 reads as 0)
+              val len = (if (prevStamp(j) == g) prev(j) else 0) + 1
               cur(j + 1) = len
+              curStamp(j + 1) = g + 1
               if (len > bestsize) {                // strict >: earliest (i, j) kept
                 besti = i - len + 1
                 bestj = j - len + 1
@@ -119,8 +129,11 @@ object DiffLib {
           }
         }
         val t = prev; prev = cur; cur = t
+        val ts = prevStamp; prevStamp = curStamp; curStamp = ts
+        g += 1
         i += 1
       }
+      gen = g
       // Non-junk extension (bjunk is empty with isjunk=None, so this is the
       // only live extension; it may absorb autojunk-popular chars).
       while (besti > alo && bestj > blo && a.charAt(besti - 1) == b.charAt(bestj - 1)) {

@@ -25,6 +25,9 @@ package graft.core
   */
 object LangDetect {
 
+  /** Chars of the text that detection reads (`main.py:90`). */
+  val SampleChars = 1000
+
   // Insertion order of the reference score dict (main.py:93-103).
   private[graft] val langs: Vector[String] = Vector(
     "spanish", "french", "english", "german", "portuguese", "italian",
@@ -45,20 +48,23 @@ object LangDetect {
     "italian" -> Vector("contratto", "affitto", "locatore", "locatario",
       "data", "mese", "anno", "il", "la", "di", "che", "e", "con", "per"))
 
-  // --- single-scan matcher tables (round-6 perf; semantics unchanged and
-  // pinned by PropertySpec's detect == detectReference differential): the
-  // reference runs 84 independent `word in sample` containment tests per
-  // call; one left-to-right scan with a first-char dispatch finds the same
-  // "is keyword contained" facts in one pass. Keyword lists are
-  // duplicate-free per language (required — each containment adds exactly
-  // 1), so unique-string hits add 1 to every owning language.
+  // --- one Aho–Corasick automaton over all keywords (Aho & Corasick, CACM
+  // 1975): the reference runs 84 independent `word in sample` containment
+  // tests per call; one left-to-right pass of a dense DFA finds the same
+  // "is keyword contained" facts, overlaps included, at one transition per
+  // char. Pinned by PropertySpec's detect == reference-port differential.
+  // Keyword lists are duplicate-free per language (required — each
+  // containment adds exactly 1), so a language's score is the number of its
+  // keywords in the found set.
   private val scoredLangs =
     Vector("spanish", "french", "english", "german", "portuguese", "italian")
-  private val uniqueKws: Array[String] = {
+  private val uniqueKws: Vector[String] = {
     scoredLangs.foreach(l => require(keywords(l).distinct.length == keywords(l).length,
-      s"duplicate keyword in $l would break the single-scan counter"))
-    scoredLangs.flatMap(keywords).distinct.toArray
+      s"duplicate keyword in $l would break the found-set score"))
+    scoredLangs.flatMap(keywords).distinct
   }
+  require(uniqueKws.length <= 128, "the found set is two Longs")
+
   // score slots are looked up by name, never by position in `langs`
   private def langIdx(name: String): Int = {
     val i = langs.indexOf(name)
@@ -69,107 +75,111 @@ object LangDetect {
   private val ArabicIdx = langIdx("arabic")
   private val RussianIdx = langIdx("russian")
 
-  private val kwLangIdx: Array[Array[Int]] = uniqueKws.map { kw =>
-    scoredLangs.filter(l => keywords(l).contains(kw)).map(langIdx).toArray
-  }
-  private val byFirstChar: Array[Array[Int]] = {
-    val out = new Array[Array[Int]](128)
-    uniqueKws.zipWithIndex.groupBy(_._1.charAt(0)).foreach { case (c, kws) =>
-      require(c < 128, s"keyword first char $c outside the ASCII dispatch table")
-      out(c) = kws.map(_._2)
+  // alphabet: the keyword chars; every other char is symbol 0, which only
+  // ever leads back to the root
+  private val symOf: Array[Int] = {
+    val out = new Array[Int](256)
+    uniqueKws.flatten.distinct.zipWithIndex.foreach { case (c, k) =>
+      require(c < 256, s"keyword char $c outside the symbol table")
+      out(c) = k + 1
     }
     out
+  }
+  private val nSym = symOf.max + 1
+
+  // dense goto table (state × symbol) and, per state, the bitmask (lo, hi)
+  // of the keywords ending there, suffix outputs folded in
+  private val (delta, outLo, outHi) = {
+    val go = scala.collection.mutable.ArrayBuffer(new Array[Int](nSym))
+    val lo = scala.collection.mutable.ArrayBuffer(0L)
+    val hi = scala.collection.mutable.ArrayBuffer(0L)
+    uniqueKws.zipWithIndex.foreach { case (kw, k) =>
+      var s = 0
+      kw.foreach { c =>
+        val y = symOf(c)
+        if (go(s)(y) == 0) {
+          go(s)(y) = go.length
+          go += new Array[Int](nSym); lo += 0L; hi += 0L
+        }
+        s = go(s)(y)
+      }
+      if (k < 64) lo(s) |= 1L << k else hi(s) |= 1L << (k - 64)
+    }
+    // BFS: fail links complete the table into a DFA; a state's output
+    // includes its fail state's (shallower, so already final)
+    val fail = new Array[Int](go.length)
+    val queue = scala.collection.mutable.Queue.empty[Int]
+    (1 until nSym).foreach(y => if (go(0)(y) != 0) queue += go(0)(y))
+    while (queue.nonEmpty) {
+      val s = queue.dequeue()
+      lo(s) |= lo(fail(s)); hi(s) |= hi(fail(s))
+      (0 until nSym).foreach { y =>
+        val t = go(s)(y)
+        if (y != 0 && t != 0) { fail(t) = go(fail(s))(y); queue += t }
+        else go(s)(y) = go(fail(s))(y)
+      }
+    }
+    val table = new Array[Int](go.length * nSym)
+    go.indices.foreach(s => System.arraycopy(go(s), 0, table, s * nSym, nSym))
+    (table, lo.toArray, hi.toArray)
+  }
+
+  // per scored language: the keyword mask, same (lo, hi) split
+  private val (langLo, langHi) = {
+    val lo = new Array[Long](langs.length)
+    val hi = new Array[Long](langs.length)
+    uniqueKws.zipWithIndex.foreach { case (kw, k) =>
+      scoredLangs.filter(l => keywords(l).contains(kw)).map(langIdx).foreach { l =>
+        if (k < 64) lo(l) |= 1L << k else hi(l) |= 1L << (k - 64)
+      }
+    }
+    (lo, hi)
   }
 
   def detect(text: String): String = {
     val t = if (text == null) "" else text
-    val sample = (if (t.length > 1000) t.substring(0, 1000) else t)
+    val sample = (if (t.length > SampleChars) t.substring(0, SampleChars) else t)
       .toLowerCase(java.util.Locale.ROOT)                          // main.py:90
 
-    val scores = new Array[Int](langs.length)
-    val found = new Array[Boolean](uniqueKws.length)
-    var remaining = uniqueKws.length
+    // one pass: keyword containment (main.py:106-139) and the three
+    // script-range tests (main.py:141-151)
+    var foundLo = 0L; var foundHi = 0L
+    var cjk = false; var arabic = false; var cyrillic = false
+    var s = 0
     val n = sample.length
     var i = 0
-    while (i < n && remaining > 0) {                               // main.py:106-139
+    while (i < n) {
       val c = sample.charAt(i)
-      if (c < 128) {
-        val cands = byFirstChar(c)
-        if (cands != null) {
-          var k = 0
-          while (k < cands.length) {
-            val kid = cands(k)
-            if (!found(kid) && sample.startsWith(uniqueKws(kid), i)) {
-              found(kid) = true
-              remaining -= 1
-              val ls = kwLangIdx(kid)
-              var q = 0
-              while (q < ls.length) { scores(ls(q)) += 1; q += 1 }
-            }
-            k += 1
-          }
+      val y =
+        if (c < 256) symOf(c)
+        else {
+          if (c >= '一' && c <= '鿿') cjk = true                      // main.py:141-143
+          else if (c >= '؀' && c <= 'ۿ') arabic = true               // main.py:145-147
+          else if (c >= 'Ѐ' && c <= 'ӿ') cyrillic = true             // main.py:149-151
+          0
         }
-      }
+      s = delta(s * nSym + y)
+      foundLo |= outLo(s); foundHi |= outHi(s)
       i += 1
     }
 
-    // the three script-range tests in ONE pass (each `exists` alone would
-    // re-scan the whole sample on ASCII text); same sets, same outcomes
-    var cjk = false; var arabic = false; var cyrillic = false
-    i = 0
-    while (i < n && !(cjk && arabic && cyrillic)) {
-      val c = sample.charAt(i)
-      if (c >= '一' && c <= '鿿') cjk = true                        // main.py:141-143
-      else if (c >= '؀' && c <= 'ۿ') arabic = true                 // main.py:145-147
-      else if (c >= 'Ѐ' && c <= 'ӿ') cyrillic = true               // main.py:149-151
-      i += 1
+    val scores = new Array[Int](langs.length)
+    var li = 0
+    while (li < scores.length) {
+      scores(li) = java.lang.Long.bitCount(foundLo & langLo(li)) +
+        java.lang.Long.bitCount(foundHi & langHi(li))
+      li += 1
     }
     if (cjk) scores(ChineseIdx) = 10
     if (arabic) scores(ArabicIdx) = 10
     if (cyrillic) scores(RussianIdx) = 10
 
     var best = 0                                                   // first max in insertion order,
-    var li = 1                                                     // matching Python max() (main.py:154-158)
+    li = 1                                                         // matching Python max() (main.py:154-158)
     while (li < scores.length) {
       if (scores(li) > scores(best)) best = li
       li += 1
     }
     if (scores(best) == 0) "spanish" else langs(best)
-  }
-
-  /** The literal reference port (84 independent containment tests) — kept
-    * as the differential-property reference for the single-scan `detect`. */
-  private[core] def detectReference(text: String): String = {
-    val t = if (text == null) "" else text
-    val sample = (if (t.length > 1000) t.substring(0, 1000) else t)
-      .toLowerCase(java.util.Locale.ROOT)                          // main.py:90
-
-    val scores = scala.collection.mutable.LinkedHashMap(langs.map(_ -> 0): _*)
-    for (lang <- scoredLangs; word <- keywords(lang))
-      if (sample.contains(word)) scores(lang) += 1                 // main.py:106-139
-
-    if (sample.exists(c => c >= '一' && c <= '鿿')) scores("chinese") = 10 // main.py:141-143
-    if (sample.exists(c => c >= '؀' && c <= 'ۿ')) scores("arabic") = 10  // main.py:145-147
-    if (sample.exists(c => c >= 'Ѐ' && c <= 'ӿ')) scores("russian") = 10 // main.py:149-151
-
-    val best = scores.maxBy(_._2)                                  // LinkedHashMap.maxBy keeps first max,
-    if (best._2 == 0) "spanish" else best._1                       // matching Python max() (main.py:154-158)
-  }
-
-  /** Per-language scores in insertion order — used by tests and by the
-    * SQL-expressible oracle query (SparkEntry `q_lang_case`). */
-  def scoresOf(text: String): Vector[(String, Int)] = {
-    val t = if (text == null) "" else text
-    val sample = (if (t.length > 1000) t.substring(0, 1000) else t)
-      .toLowerCase(java.util.Locale.ROOT)
-    val base = langs.map { l =>
-      l -> keywords.get(l).map(_.count(sample.contains)).getOrElse(0)
-    }
-    base.map {
-      case ("chinese", _) if sample.exists(c => c >= '一' && c <= '鿿') => ("chinese", 10)
-      case ("arabic", _) if sample.exists(c => c >= '؀' && c <= 'ۿ')  => ("arabic", 10)
-      case ("russian", _) if sample.exists(c => c >= 'Ѐ' && c <= 'ӿ') => ("russian", 10)
-      case kv => kv
-    }
   }
 }

@@ -22,15 +22,10 @@ package graft.core
   */
 object TextClean {
 
-  private val Ctl     = "[\\x00-\\x1F\\x7F-\\x9F]".r    // main.py:59 and :69
-  private val ZeroW   = "[\\u200B-\\u200D\\uFEFF]".r    // main.py:72
-  private val ParaNl  = "\\n[ \\t\\n\\x0B\\f\\r]*\\n".r // main.py:78 (\n\s*\n over ASCII-only input)
-  private val HorizWs = "[ \\t]+".r                     // main.py:79
-  private val ManyNl  = "\\n{3,}".r                     // main.py:80
-
-  /** Single-pass fused form of the pipeline below — the hot-path
-    * implementation (one scan, one allocation, no regex). Equivalence
-    * argument (validated by the `clean == cleanReference` property and the
+  /** Single-pass fused form of the reference's step-by-step chain (its
+    * literal port is `TextCleanReference.clean` in the test sources) — one
+    * scan, one allocation, no regex. Equivalence argument (validated by the
+    * `clean == TextCleanReference.clean` property and the
     * reference-differential goldens):
     * after step 1 maps every control char (incl. \n \r \t) to a space, all
     * later newline/tab logic (steps 7/9, the \n\r\t carve-outs of step 6)
@@ -66,41 +61,5 @@ object TextClean {
       }
     }
     sb.toString                                                    // main.py:85 trim-right: trailing run never emitted
-  }
-
-  /** The literal step-by-step port (kept as the differential oracle for the
-    * fused `clean`; also documents each reference line). */
-  def cleanReference(text: String): String = {
-    if (text == null || text.isEmpty) return ""                    // main.py:56-57
-    var t = text
-    t = Ctl.replaceAllIn(t, " ")                                   // main.py:59 (incl. \n \r \t)
-    t = t.replace('"', '\'')                                       // main.py:62
-    t = t.replace('\\', '/')                                       // main.py:63
-    t = t.replace('\b', ' ')                                       // main.py:64 (dead after :59)
-    t = t.replace('\f', ' ')                                       // main.py:65 (dead)
-    t = t.replace('\u000B', ' ')                                   // main.py:66 (\v; dead)
-    t = Ctl.replaceAllIn(t, " ")                                   // main.py:69 (dead duplicate)
-    t = ZeroW.replaceAllIn(t, "")                                  // main.py:72 — removed, not spaced
-    t = spaceNonPrintable(t)                                       // main.py:75
-    t = ParaNl.replaceAllIn(t, "\n\n")                             // main.py:78 (dead: no \n survives :59)
-    t = HorizWs.replaceAllIn(t, " ")                               // main.py:79
-    t = ManyNl.replaceAllIn(t, "\n\n")                             // main.py:80 (dead)
-    t = t.replace("\u0000", "")                                    // main.py:83 (dead)
-    t.trim                                                         // main.py:85 (only ' ' can remain at edges)
-  }
-
-  /** Step 6 (`main.py:75`): any code point outside `[\x20-\x7E\n\r\t]` → one
-    * space. Code-point loop so astral chars map to a single space as in
-    * Python. */
-  private def spaceNonPrintable(t: String): String = {
-    val sb = new java.lang.StringBuilder(t.length)
-    var i = 0
-    while (i < t.length) {
-      val cp = t.codePointAt(i)
-      val keep = (cp >= 0x20 && cp <= 0x7E) || cp == '\n' || cp == '\r' || cp == '\t'
-      if (keep) sb.appendCodePoint(cp) else sb.append(' ')
-      i += Character.charCount(cp)
-    }
-    sb.toString
   }
 }

@@ -190,9 +190,25 @@ object ExtractKernel {
     val phys = units.map(_.physical_pages).sum
     val confSum = units.map(_.confidence_sum).sum
     val confidence = if (phys > 0) confSum / phys else 0.0 // main.py:546 (`if total_pages > 0 else 0`)
-    val joined = pages.map(_.text).mkString(" ")           // main.py:400,561,690
-    DocOut(docId, spans, confidence, LangDetect.detect(joined),
+    DocOut(docId, spans, confidence, LangDetect.detect(joinedSample(pages)),
       spans.length, pages.iterator.map(_.text.length.toLong).sum)
+  }
+
+  /** The first `LangDetect.SampleChars` chars of the pages' texts joined
+    * with " " (main.py:400,561,690) — all of the join that detection reads,
+    * without joining every page of a long document. */
+  private def joinedSample(pages: Seq[PageOut]): String = {
+    if (pages.lengthCompare(1) == 0) return pages.head.text      // nothing to join
+    val sb = new java.lang.StringBuilder
+    val it = pages.iterator
+    var first = true
+    while (it.hasNext && sb.length < LangDetect.SampleChars) {
+      if (!first) sb.append(' ')
+      first = false
+      val t = it.next().text
+      sb.append(t, 0, math.min(t.length, LangDetect.SampleChars - sb.length))
+    }
+    sb.toString
   }
 
   /** Sequential whole-doc extraction — the golden interpreter. */

@@ -53,14 +53,14 @@ class LangDetectSpec extends AnyFunSuite {
   test("substring matching, not word-boundary ('el' in 'lease', 'de' in 'order')") {
     // "lease" contains 'el'? l-e-a-s-e : no "el". But "the lease" has 'e'...
     // pick explicit: "relay" contains "el", "order" contains "de"
-    val s = LangDetect.scoresOf("relay order").toMap
+    val s = LangDetectReference.scoresOf("relay order").toMap
     assert(s("spanish") >= 2) // 'el' + 'de' + 'la'? relay has 'la'? r-e-l-a-y → "la" yes
   }
 
   test("insertion-order tie-break: spanish wins ties (main.py:154)") {
     // craft equal scores for spanish and english only
     val text = "zq el zq the zq" // spanish: el(1). english: the(1). portuguese: o? no 'o'... 'e' yes → pt gets 'e'? 'e' not in pt list; pt has 'o','a','e'! 'e' IS in pt list
-    val scores = LangDetect.scoresOf(text).toMap
+    val scores = LangDetectReference.scoresOf(text).toMap
     val det = LangDetect.detect(text)
     // whatever the scores, the detect must equal first maximal in insertion order
     val langsInOrder = LangDetect.langs
@@ -140,6 +140,21 @@ class DiffLibSpec extends AnyFunSuite {
     assert(r(a, b) == 0.9962962962962963)
     assert(r("a" * 250, "a" * 249 + "b") == 0.996) // extension-only match
     assert(r("ab" * 150, "ba" * 150) == 0.0)        // both chars popular → nothing
+  }
+
+  test("literal CPython port agrees on autojunk, non-ASCII b and blo > 0") {
+    val cases = Seq(
+      ("ab " * 80 + "hello world", "ab " * 80 + "h\u00e9llo w\u00f6rld"),
+      ("the lease of the tenant", "a lease for the tenants"),
+      ("lorem ipsum dolor sit amet " * 10, "lorem ipsum dolor sat amet " * 10))
+    val pys = cases.map { case (a, b) =>
+      val py = new DiffLibReference.PySequenceMatcher(a, b)
+      assert(r(a, b) == py.ratio(), s"$a / $b")
+      (b, py)
+    }
+    assert(pys.exists { case (b, py) => b.length >= 200 && py.bpopular.nonEmpty })
+    assert(pys.exists { case (b, _) => b.exists(_ >= 128) })
+    assert(pys.forall { case (_, py) => py.calls.exists(_._3 > 0) })
   }
 
   test("confidence wrapper (main.py:174-185)") {

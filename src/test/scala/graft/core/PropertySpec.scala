@@ -1,7 +1,9 @@
 package graft.core
 
-import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import graft.model.{PageOut, UnitOut}
+import graft.pipeline.ExtractKernel
+import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
 
 /** Property tests per SURVEY.md §5.2. */
 object KernelProps extends Properties("kernel") {
@@ -17,7 +19,7 @@ object KernelProps extends Properties("kernel") {
 
   property("fused clean == literal step-by-step reference port") =
     forAll(nastyString) { s =>
-      TextClean.clean(s) == TextClean.cleanReference(s)
+      TextClean.clean(s) == TextCleanReference.clean(s)
     }
 
   property("clean is idempotent") = forAll(nastyString) { s =>
@@ -79,10 +81,6 @@ object KernelProps extends Properties("kernel") {
     (1, Gen.oneOf("contrato", "lease", "la", "de", "mietvertrag", "année",
       "mês", "el", "the", "und").flatMap(w => Gen.const(w))))).map(_.mkString(" "))
 
-  property("single-scan lang detect == literal reference port") =
-    forAll(Gen.oneOf(nastyString, keywordish)) { s =>
-      LangDetect.detect(s) == LangDetect.detectReference(s)
-    }
 
   property("two-pass consensus fast path == general vote loop") =
     forAll(asciiText, asciiText) { (a, b) =>
@@ -93,6 +91,124 @@ object KernelProps extends Properties("kernel") {
     forAll(nastyString) { a =>
       val slow = new DiffLib.SequenceMatcher(a, new String(a)).ratio()
       slow == 1.0 && DiffLib.ratio(a, new String(a)) == slow
+    }
+
+  // --- single-pass text layers: each equals its literal form in ReferenceForms ---
+
+  // the automaton's edges: keyword chars, overlapping and nested keywords
+  // ("contrat" in "contrato", "la" in "locales"), the accented keyword chars,
+  // capitals that lower onto them ('İ' lowers to two chars), and the
+  // script-range chars
+  private val langChar: Gen[Char] = Gen.frequency(
+    (8, Gen.oneOf("abcdeilmnoprstuy ")),
+    (1, Gen.oneOf('ñ', 'é', 'ü', 'ê', 'á', 'Ñ', 'É', 'İ', 'ı')),
+    (1, Gen.oneOf('\u4e2d', '\u0634', '\u0436', '\u00e0', '\u2019')))
+  private val langText: Gen[String] = Gen.oneOf(
+    Gen.listOf(langChar).map(_.mkString),
+    Gen.listOf(Gen.oneOf(LangDetect.keywords.values.flatten.toSeq)).map(_.mkString),
+    Gen.choose(990, 1010).flatMap(n => Gen.listOfN(n, langChar)).map(_.mkString))
+
+  property("single-scan lang detect == literal reference port") =
+    forAll(Gen.oneOf(nastyString, keywordish, langText)) { s =>
+      LangDetect.detect(s) == LangDetectReference.detect(s)
+    }
+
+  // 3 and 4 passes of unequal lengths over three chars: 1-1-1 and 2-2 ties,
+  // tails covered by some passes only
+  private val votePasses: Gen[Seq[String]] = for {
+    n <- Gen.choose(3, 4)
+    base <- Gen.listOf(Gen.oneOf('a', 'b', 'c')).map(_.mkString)
+    passes <- Gen.listOfN(n, for {
+      kept <- Gen.sequence[Seq[Char], Char](base.map(c =>
+        Gen.frequency((7, Gen.const(c)), (3, Gen.oneOf('a', 'b', 'c')))))
+      cut <- Gen.choose(0, base.length)
+      tail <- Gen.listOf(Gen.oneOf('a', 'b', 'c')).map(_.take(4).mkString)
+    } yield kept.mkString.take(cut) + tail)
+  } yield passes
+
+  property("3- and 4-pass vote == closure reference vote") = forAllNoShrink(votePasses) { ps =>
+    Consensus.merge(ps) == ConsensusReference.mergeVote(ps)
+  }
+
+  // OCR-like pairs: b is a mutation of a; long enough for autojunk in half
+  // the cases, non-ASCII b (the b2jMap path) in a third
+  private val diffPair: Gen[(String, String)] = {
+    val common = Gen.frequency((6, Gen.oneOf('a', 'b', ' ')), (4, Gen.alphaNumChar))
+    for {
+      n <- Gen.oneOf(Gen.choose(1, 60), Gen.choose(200, 400))
+      a <- Gen.listOfN(n, common).map(_.mkString)
+      nonAscii <- Gen.prob(0.35)
+      other = if (nonAscii) Gen.oneOf('é', '\u4e2d', 'ж', 'a') else common
+      b <- Gen.sequence[Seq[String], String](a.map(c => Gen.frequency(
+        (16, Gen.const(c.toString)), (2, other.map(_.toString)),
+        (1, Gen.const("")), (1, other.map(x => s"$c$x")))))
+    } yield (a, b.mkString)
+  }
+
+  property("ratio == literal CPython port on unequal strings") =
+    forAllNoShrink(diffPair) { case (a, b) =>
+      val py = new DiffLibReference.PySequenceMatcher(a, b)
+      val want = py.ratio()
+      Prop.classify(b.length >= 200, "autojunk") {
+        Prop.classify(b.exists(_ >= 128), "non-ASCII b") {
+          Prop.classify(py.calls.exists(_._3 > 0), "blo > 0") {
+            a == b || DiffLib.ratio(a, b) == want
+          }
+        }
+      }
+    }
+
+  property("stamped findLongestMatch == zero-filling form, call after call") =
+    forAllNoShrink(diffPair, Gen.listOfN(8, Gen.zip(Gen.choose(0.0, 1.0), Gen.choose(0.0, 1.0),
+      Gen.choose(0.0, 1.0), Gen.choose(0.0, 1.0)))) { case ((a, b), ranges) =>
+      val sm = new DiffLib.SequenceMatcher(a, b)
+      ranges.forall { case (x, y, u, v) =>
+        val (alo, ahi) = (math.min(x, y) * a.length).toInt -> (math.max(x, y) * a.length).toInt
+        val (blo, bhi) = (math.min(u, v) * b.length).toInt -> (math.max(u, v) * b.length).toInt
+        sm.findLongestMatch(alo, ahi, blo, bhi) ==
+          DiffLibReference.findLongestMatchZeroFill(sm, a, b, alo, ahi, blo, bhi)
+      }
+    }
+
+  // HTML with entities, runs of the six whitespace chars (alone too),
+  // U+0001/U+001F at segment edges, nested anchors, skip tags, comments, tag
+  // names that prefix a known one ("b", "h") and tag names that only
+  // String.toLowerCase lowers (upper case, the Kelvin sign)
+  private val htmlDoc: Gen[String] = {
+    val ws = Gen.listOf(Gen.oneOf(" ", "\t", "\n", "\r", "\f", "\u000B")).map(_.take(5).mkString)
+    val edge = Gen.oneOf("", "", "\u0001", "\u001F", " \u0001", "\u001F\t", "\u0001 \u001F")
+    val word = Gen.oneOf("lease", "tenant", "the", "Fish", "chips", "año", "x1", "&amp;",
+      "&nbsp;", "&lt;b&gt;", "&quot;q&quot;", "&#39;", "&", "&amp", "a\u0001b", "\u001F", "ok")
+    val text = for {
+      lead <- edge; trail <- edge
+      n <- Gen.choose(0, 24)
+      ws0 <- ws
+      body <- Gen.listOfN(n, Gen.zip(word, ws.map(w => if (w.isEmpty) " " else w)))
+    } yield lead + ws0 + body.map { case (w, s) => w + s }.mkString + trail
+    val tag = Gen.oneOf("<p>", "</p>", "<div class=\"x\">", "</div>", "<br/>", "<li>", "</li>",
+      "<h1>", "</h1>", "<a href=\"#\">", "</a>", "<A>", "</A >", "< p >", "<P>", "<//p>", "<>",
+      "<script>var x = '<p>';</script>", "<style>p{}</style>", "<script/>", "<SCRIPT>s</SCRIPT>",
+      "<title>T</title>", "<noscript>n</noscript>", "<head>", "</head>", "<!-- c <p> -->",
+      "<span>", "</span>", "<bloc\u212Aquote>", "<nav>", "</nav>", "<footer>", "<td>", "<h7>",
+      "<b>", "</b>", "<h>", "<em>", "<tab>")
+    val ending = Gen.oneOf("", "<p", "<!-- open", "&amp")
+    for {
+      parts <- Gen.listOf(Gen.frequency((3, text), (2, tag), (1, ws), (1, edge)))
+      end <- ending
+    } yield parts.mkString + end
+  }
+
+  property("boilerplate blocks and extract == regex reference form") = forAllNoShrink(htmlDoc) { html =>
+    Boilerplate.blocks(html) == BoilerplateReference.blocks(html) &&
+      Boilerplate.extract(html) == BoilerplateReference.extract(html)
+  }
+
+  property("merge detects on the join's first 1000 chars == on the whole join") =
+    forAllNoShrink(Gen.listOf(Gen.oneOf(Gen.choose(0, 40), Gen.choose(300, 700))
+      .flatMap(n => Gen.listOfN(n, langChar).map(_.mkString)))) { texts =>
+      val pages = texts.zipWithIndex.map { case (t, i) => PageOut("text", t, null, i, 1) }
+      val out = ExtractKernel.merge("d", Seq(UnitOut("d", 0, 1, pages, pages.length, 0.0)))
+      out.detected_language == LangDetect.detect(texts.mkString(" "))
     }
 
   property("incremental Hash64.pickFrom == pick on fixture-shaped keys") =
