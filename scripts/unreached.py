@@ -3,8 +3,9 @@
 
 A definition (def/val/var/class/object/trait) is unreached when its name
 appears nowhere else in src/main/scala or perfbench/src once comments are
-stripped (string literals still count as uses). Entry points and reference
-forms that only specs or launch commands name are kept in KEEP.
+stripped (string literals still count as uses). Entry points that only
+specs or launch commands name are kept in KEEP. Also prints the line total
+of src/main/scala (as `wc -l` counts it).
 Usage: python3 scripts/unreached.py   (exit 1 if anything outside KEEP is found)
 """
 import collections
@@ -19,12 +20,8 @@ KEEP = {
     "Bench": "contract benchmark main", "BenchWorker": "Bench's child JVM main",
     "Verify": "contract correctness main", "SparkEntry": "the query contract",
     "entry": "SparkEntry's flagship extraction, smoke-checked by the contract",
-    "DumpRaw": "scripts/gen_golden.py runs it", "DumpPlans": "writes PLANS.md",
+    "DumpRaw": "scripts/gen_golden.py runs it",
     "GraftExtensions": "named by spark.sql.extensions",
-    "detectLangCol": "reference column form of the native lang_detect",
-    "hamming": "reference form of the SimHash distance",
-    "UrlFetch": "replicated URL tier; wire-in or delete is open",
-    "fetch": "UrlFetch's download", "kindOf": "the URL tier's kind dispatch",
 }
 DEF = re.compile(r"\b(?:def|val|var|class|object|trait)\s+([A-Za-z_]\w*)")
 TOKEN = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\\n])\'|//[^\n]*|/\*[\s\S]*?\*/')
@@ -38,8 +35,9 @@ def strip_comments(src):
 
 
 def main():
-    texts = {p: strip_comments(p.read_text())
-             for d in (MAIN, BENCH) for p in sorted(d.rglob("*.scala"))}
+    sources = {p: p.read_text()
+               for d in (MAIN, BENCH) for p in sorted(d.rglob("*.scala"))}
+    texts = {p: strip_comments(src) for p, src in sources.items()}
     uses = collections.Counter(w for text in texts.values()
                                for w in re.findall(r"[A-Za-z_]\w*", text))
     found = []
@@ -56,6 +54,8 @@ def main():
         print(f"{'keep  ' if name in KEEP else 'UNREACHED'} {name:24} {loc}"
               + (f"  ({KEEP[name]})" if name in KEEP else ""))
     print(f"{len(bad)} unreached outside KEEP")
+    main_lines = sum(src.count("\n") for p, src in sources.items() if p.is_relative_to(MAIN))
+    print(f"{main_lines} lines in src/main/scala")
     return 1 if bad else 0
 
 

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The SparkSession of the single-JVM mains (Verify, Bench and its worker,
-  * DumpPlans): `local[cores]`, UTC session time zone, UI off, Spark logging
+/** The SparkSession of the single-JVM mains (Verify, Bench and its
+  * worker): `local[cores]`, UTC session time zone, UI off, Spark logging
   * at ERROR (the mains report their own failures on stderr). Adaptive
   * execution and the nested-column vectorized parquet reader are on by
   * default in Spark 4. `Main` keeps its own builder: on a cluster,

@@ -19,6 +19,11 @@ import org.apache.spark.sql.SparkSession
   * Rerunning with the same --out is an idempotent resume: committed doc_ids
   * are anti-joined away and only the remainder is processed (lineage rows
   * under `<out>_lineage/run_id=<id>` prove which work each run did).
+  *
+  * Media: `Extract.run` gets no store here, so pdf/image `media_ref`s
+  * resolve through the fixture `DeterministicMediaStore`, which accepts only
+  * `mem://doc%08d/<offset>` refs and fails the run naming any other ref.
+  * A real corpus needs a production `MediaStore` (open in ROADMAP.md).
   */
 object Main {
   def main(args: Array[String]): Unit = {

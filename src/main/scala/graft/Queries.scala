@@ -975,12 +975,12 @@ object Queries {
     QuerySpec("q_lang_detect", (s, dir) => {
       // reference keyword scorer (main.py:87-160) via the NATIVE codegen
       // expression — one static call per row. The equivalent 90-keyword
-      // CASE tree (TextOps.detectLangCol) blew the 64 KB codegen method
-      // limit (interpreted fallback, 6.5 s at sf0.1); it remains the
-      // template for the DuckDB oracle SQL below. Parity: the kernel's
-      // CJK/Arabic/Cyrillic=10 branches and the 3 extra language keyword
-      // lists score 0 on this ASCII corpus (ColumnarParitySpec asserts
-      // kernel == columnar on it).
+      // CASE tree (ColumnarParitySpec's test helper detectLangCol) blew
+      // the 64 KB codegen limit (interpreted fallback, 6.5 s at sf0.1);
+      // it remains the template for the DuckDB oracle SQL below. Parity:
+      // the kernel's CJK/Arabic/Cyrillic=10 branches and the 3 extra
+      // language keyword lists score 0 on this ASCII corpus
+      // (ColumnarParitySpec asserts kernel == columnar on it).
       docs(s, dir)
         .select(col("doc_id"), graft.functions.functions.langDetect(col("text")).as("detected"))
         .orderBy(col("doc_id"))

@@ -50,8 +50,6 @@ object SimHash {
     }
     fp
   }
-
-  def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 }
 
 case class SimHash64(child: Expression) extends UnaryExpression {
@@ -84,11 +82,12 @@ object functions {
     bridge.column(QClean(bridge.expression(c)))
 
   /** Kernel language detector as a codegen'd column (LangDetect.detect) —
-    * ONE static call per row. The pure-builtin `TextOps.detectLangCol` form
-    * expands each of the 90 keyword scores into `greatest`, the zero-sum,
-    * and every WHEN, blowing the 64 KB codegen method limit (round-1 bench:
-    * 6.5 s + interpreted fallback vs < 1 s here); it remains the template
-    * for the DuckDB oracle SQL only. */
+    * ONE static call per row. The pure-builtin column form (the test
+    * helper `ColumnarParitySpec.detectLangCol`) expands each of the 90
+    * keyword scores into `greatest`, the zero-sum, and every WHEN, blowing
+    * the 64 KB codegen method limit (round-1 bench: 6.5 s + interpreted
+    * fallback vs < 1 s here); its shape remains the template for the
+    * DuckDB oracle SQL only (`TextOps.detectLangSql`). */
   def langDetect(c: Column): Column =
     bridge.column(LangDetectExpr(bridge.expression(c)))
 

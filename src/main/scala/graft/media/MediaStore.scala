@@ -28,11 +28,12 @@ trait MediaStore extends Serializable {
   def pageCount(mediaRef: String): Int
   def page(mediaRef: String, pageNo: Int): PageMedia // 1-based pages (main.py:357)
 
-  /** Metadata-only byte-size estimate of a media object — the streaming
-    * analogue of the reference's Content-Length / mid-download 10 MB cap
-    * (`main.py:256-303`). Lets the size guard (the metadata pass,
-    * `Extract.tailPass` against `ExtractConf.maxDocBytes`) reject a 2 GB
-    * scanned PDF BEFORE any page decodes, not after the download.
+  /** Metadata-only byte-size estimate of a media object — what the
+    * reference's mid-download 10 MB cap (`main.py:256-303`) measured, read
+    * from store metadata instead of a download. Lets the size guard (the
+    * metadata pass, `Extract.tailPass` against `ExtractConf.maxDocBytes`,
+    * default `ExtractConf.MaxFileSize`) reject a 2 GB scanned PDF BEFORE
+    * any page decodes.
     * Default 0 = unknown (a store without cheap size metadata opts out and
     * the text-payload guard alone applies). */
   def byteEstimate(mediaRef: String): Long = 0L
@@ -60,7 +61,9 @@ object DeterministicMediaStore extends MediaStore {
     "contrato", "fecha", "importe", "firma", "locataire", "bailleur", "mietvertrag")
 
   private[graft] def docIdx(mediaRef: String): Int = {
-    // mem://doc%08d/%d
+    require(mediaRef.startsWith("mem://doc"),
+      s"'$mediaRef' is not a fixture media ref (mem://doc%08d/<offset>): " +
+        "the fixture store resolves no real media; pass a production MediaStore")
     val path = mediaRef.stripPrefix("mem://")
     val doc = path.takeWhile(_ != '/')
     doc.stripPrefix("doc").toInt

@@ -34,32 +34,10 @@ object TextOps {
       s" '[^\\x20-\\x7E]', ' ', 'g')," +
       s" ' +', ' ', 'g'))"
 
-  /** Language keyword score for one language (main.py:106-139 semantics:
-    * substring containment, +1 per keyword). */
-  def langScoreCol(sample: Column, lang: String): Column =
-    LangDetect.keywords(lang)
-      .map(kw => when(sample.contains(kw), 1).otherwise(0))
-      .reduce(_ + _)
-
-  /** Detected language over a text column — the reference argmax with
-    * insertion-order tie-break (main.py:154-158). CJK/Arabic/Cyrillic
-    * branches omitted: ASCII corpus (documented; scores 0 there anyway). */
-  def detectLangCol(text: Column): Column = {
-    val sample = lower(substring(text, 1, 1000))
-    val scored = Vector("spanish", "french", "english", "german", "portuguese", "italian")
-      .map(l => l -> langScoreCol(sample, l))
-    val maxScore = greatest(scored.map(_._2): _*)
-    val zero = scored.map(_._2).reduce(_ + _) === 0
-    // Nested whens with the FIRST language outermost → first maximal wins,
-    // replicating Python max() insertion-order tie-break (main.py:154).
-    val firstMax = scored.reverse.foldLeft(lit("spanish")) { case (acc, (l, s)) =>
-      when(s === maxScore, lit(l)).otherwise(acc)
-    }
-    when(zero, lit("spanish")).otherwise(firstMax)
-  }
-
-  /** DuckDB SQL for `detectLangCol` over expression `e`. Built from the same
-    * keyword data so the two can't drift. */
+  /** DuckDB SQL of `LangDetect.detect` over expression `e` (main.py:87-160):
+    * the argmax with insertion-order tie-break (main.py:154-158); the
+    * CJK/Arabic/Cyrillic branches are omitted, as they score 0 on the ASCII
+    * corpus. Built from the kernel's keyword data so the two can't drift. */
   def detectLangSql(e: String): String = {
     val sample = s"lower(substr($e, 1, 1000))"
     def score(lang: String): String =

@@ -7,9 +7,10 @@ import graft.model._
 /** Extraction configuration.
   * `level` → OCR pass count exactly as the reference (`main.py:209-216`):
   * low=1, medium=2, high=3, ultra=4, unknown→1.
-  * `skewPageThreshold`/`pagesPerSplit` drive mega-doc salting (SURVEY §4.2):
-  * a doc whose total physical page estimate exceeds the threshold is split
-  * into per-page-range `WorkUnit`s processed independently and reassembled.
+  * `skewPageThreshold` and `ExtractConf.PagesPerSplit` drive mega-doc
+  * salting (SURVEY §4.2): a doc whose total physical page estimate exceeds
+  * the threshold is split into per-page-range `WorkUnit`s processed
+  * independently and reassembled.
   */
 final case class ExtractConf(
     level: String = "medium",
@@ -20,7 +21,6 @@ final case class ExtractConf(
     // share of the run (Σ pages of the metadata pass ÷ max(its
     // partitions, defaultParallelism)).
     skewPageThreshold: Int = 32,
-    pagesPerSplit: Int = 16,
     runId: String = "run-0",
     // Mega-id sets up to this size are inlined as a pushed-down IN filter
     // (parquet row-group skipping) + broadcast set; beyond it the pipeline
@@ -28,12 +28,17 @@ final case class ExtractConf(
     // all). ~10k keeps Catalyst IN-list planning cheap (round-1 advice:
     // planning degrades orders of magnitude below the old 10M guard).
     megaInlineCap: Int = 10000,
-    // P4 size guard (main.py:51 MAX_FILE_SIZE): docs whose span text
-    // payload exceeds this are rejected to a side output before extraction.
-    // Single source of truth shared with the URL tier (UrlMeta).
-    maxDocBytes: Long = graft.sources.UrlMeta.MaxFileSize)
+    // P4 size guard: docs whose span text payload plus media byte estimate
+    // exceeds this are rejected to a side output before extraction.
+    maxDocBytes: Long = ExtractConf.MaxFileSize)
 
 object ExtractConf {
+  /** main.py:51 MAX_FILE_SIZE, the reference's download cap. */
+  val MaxFileSize: Long = 10L * 1024 * 1024
+
+  /** Pages per salted unit of a mega-doc's pdf span. */
+  val PagesPerSplit: Int = 16
+
   def passesFor(level: String): Int = level match {
     case "low" => 1
     case "medium" => 2
@@ -89,14 +94,14 @@ object ExtractKernel {
       WorkUnit(doc.doc_id, 0, 1, ordered, -1, -1) :: Nil
     } else {
       // mega-doc: each non-pdf span is its own unit; big pdf spans split
-      // into pagesPerSplit ranges. Salt = unit index.
+      // into PagesPerSplit ranges. Salt = unit index.
       val units = Seq.newBuilder[(Seq[Span], Int, Int)]
       ordered.foreach { s =>
         val p = spanPages(s, store)
-        if (s.kind == "pdf" && p > conf.pagesPerSplit) {
+        if (s.kind == "pdf" && p > ExtractConf.PagesPerSplit) {
           var from = 1
           while (from <= p) {
-            val to = math.min(from + conf.pagesPerSplit - 1, p)
+            val to = math.min(from + ExtractConf.PagesPerSplit - 1, p)
             units += ((Seq(s), from, to))
             from = to + 1
           }

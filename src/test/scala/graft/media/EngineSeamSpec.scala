@@ -1,7 +1,8 @@
 package graft.media
 
 import graft.SparkTestBase
-import graft.pipeline.{Extract, ExtractConf, Fixtures}
+import graft.model.{Doc, Span}
+import graft.pipeline.{Extract, ExtractConf, ExtractKernel, Fixtures}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The production-deployment seams (round-1 verdict "what's missing" #1/#2):
@@ -47,6 +48,16 @@ class EngineSeamSpec extends AnyFunSuite {
       assert(sh == t || sh == t.toUpperCase(java.util.Locale.ROOT),
         s"doc $k span $i: '$sh' is neither base nor uppercased base '$t'")
     }
+  }
+
+  test("fixture store names a real media ref it cannot resolve") {
+    // graft.Main passes no store, so real refs reach the fixture store
+    val doc = Doc("d", Seq(Span("pdf", "", "s3://b/x.pdf", 0)))
+    val e = intercept[IllegalArgumentException](
+      ExtractKernel.plan(doc, DeterministicMediaStore, ExtractConf()))
+    assert(e.getMessage.contains("s3://b/x.pdf") && e.getMessage.contains("mem://doc%08d/<offset>"),
+      e.getMessage)
+    intercept[IllegalArgumentException](DeterministicMediaStore.page("s3://b/x.pdf", 1))
   }
 
   test("Io iceberg switch reaches Spark source resolution (sandbox has no jar — fails as missing source, not as a graft bug)") {

@@ -426,6 +426,8 @@ class OperatorSpec extends AnyFunSuite {
     assert(rej.head.getString(0) == "d2")
     assert(rej.head.getLong(1) == 400L)
     assert(rej.head.getString(2) == "too_large")
+    // the default budget is the reference's MAX_FILE_SIZE (main.py:51)
+    assert(graft.pipeline.ExtractConf().maxDocBytes == 10L * 1024 * 1024)
   }
 
   test("size guard honors MEDIA bytes via the store's metadata estimate") {
@@ -469,27 +471,6 @@ class OperatorSpec extends AnyFunSuite {
     assert(okIds.intersect(rejIds).isEmpty, "branches must be disjoint")
     assert(okIds ++ rejIds == docs.map(_.doc_id).toSet, "no doc may vanish")
     assert(rejIds.nonEmpty && okIds.nonEmpty, "test corpus must straddle the cap")
-  }
-
-  test("UrlMeta: filename inference replicates the reference chain") {
-    import graft.sources.UrlMeta
-    // content-disposition wins, quotes stripped (main.py:265-269)
-    assert(UrlMeta.inferFilename(Some("""attachment; filename="report.pdf""""),
-      "http://x/y", None) == "report.pdf")
-    assert(UrlMeta.inferFilename(Some("attachment; filename='scan.jpg'"),
-      "http://x/y", None) == "scan.jpg")
-    // header without filename= → URL basename, query stripped (main.py:272)
-    assert(UrlMeta.inferFilename(Some("inline"), "http://a/b/doc.pdf?sig=1", None) == "doc.pdf")
-    // trailing slash → empty basename → document.pdf
-    assert(UrlMeta.inferFilename(None, "http://a/b/", None) == "document.pdf")
-    // no extension → content-type guess: pdf / image / default pdf (main.py:275-283)
-    assert(UrlMeta.inferFilename(None, "http://a/file", Some("application/pdf")) == "file.pdf")
-    assert(UrlMeta.inferFilename(None, "http://a/file", Some("image/png")) == "file.jpg")
-    assert(UrlMeta.inferFilename(None, "http://a/file", Some("text/plain")) == "file.pdf")
-    assert(UrlMeta.inferFilename(None, "http://a/file", None) == "file.pdf")
-    // kind dispatch is case-insensitive .pdf suffix (main.py:323)
-    assert(UrlMeta.kindOf("A.PDF") == "pdf")
-    assert(UrlMeta.kindOf("a.png") == "image")
   }
 
   test("IVF: k-means converges on separated clusters; probe finds the right bucket") {
