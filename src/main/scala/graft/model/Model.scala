@@ -67,6 +67,10 @@ final case class LineageRow(
     byte_count: Long,
     wall_ms: Long)
 
+/** One doc of the size guard's rejected side output
+  * (`<out>_rejected/run_id=<id>`): it never reaches the kernel. */
+final case class RejectedDoc(doc_id: String, byte_est: Long, reason: String)
+
 object Schemas {
   val span: StructType = StructType(Seq(
     StructField("kind", StringType, nullable = true),

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.media.{DeterministicMediaStore, DeterministicOcr, MediaStore, OcrEngine}
 import graft.model._
+import graft.sources.DriverParquet
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,10 +35,13 @@ import scala.concurrent.duration.Duration
   *               → repartition(doc_id, salt)              // skipping
   *               → mapPartitions(kernel) → groupByKey(doc_id) → merge
   * union → observe(metrics) → idempotent append
+  * [lineage]     on the driver: the deduped rows, one parquet file, no job
+  *               (the inline tier's rejected docs, collected with the
+  *               tail, are written the same way before extraction)
   * }}}
   *
-  * With no mega the skew path is not planned at all: a run is the tail
-  * pass, one zero-shuffle write and the lineage write.
+  * With no mega the skew path is not planned at all: a run is two jobs,
+  * the tail pass and one zero-shuffle write; the driver commits lineage.
   *
   * Scale properties:
   *  - The expensive extraction runs exactly once per page either way.
@@ -70,7 +74,8 @@ import scala.concurrent.duration.Duration
   *  - Per-partition lineage rows (run_id, path, partition, doc range,
   *    span/byte counts, wall ms) are collected via an accumulator,
   *    cross-checked against the observed output count and persisted next
-  *    to the output — the north-rule lineage + resume proof.
+  *    to the output by the driver (`DriverParquet`: a few rows need no
+  *    job) — the north-rule lineage + resume proof.
   */
 object Extract {
 
@@ -352,8 +357,6 @@ object Extract {
       conf: ExtractConf = ExtractConf(),
       store: MediaStore = DeterministicMediaStore,
       engine: OcrEngine = DeterministicOcr): Summary = {
-    import spark.implicits._
-
     val todo = pending(spark, in, outPath)
 
     val acc = new CollectionAccumulator[LineageRow]
@@ -373,10 +376,9 @@ object Extract {
     // inline tier: also the number of rejected docs
     val (extracted, rejectedDocs) = collectTail(spark, pass, pageLoad, conf) match {
       case Some(tail) =>
-        if (tail.rejected.nonEmpty)
-          tail.rejected.toDF("doc_id", "byte_est").withColumn("reason", lit("too_large"))
-            .coalesce(1).write.mode(SaveMode.Overwrite).parquet(rejectedPath)
-        else deletePath(spark, rejectedPath)
+        // already on the driver: committed without a job
+        DriverParquet.overwrite(spark, rejectedPath,
+          tail.rejected.map { case (id, bytes) => RejectedDoc(id, bytes, "too_large") })
         (extractTiered(spark, todo, pass, Some(tail), store, engine, conf, Some(acc)),
           Some(tail.rejected.length.toLong))
       case None =>
@@ -402,11 +404,8 @@ object Extract {
         .values.map(_.maxBy(_.doc_count)).toSeq
         .sortBy(r => (r.path, r.partition_id))
     }
-    if (lineage.nonEmpty) {
-      spark.createDataset(lineage).coalesce(1)
-        .write.mode(SaveMode.Append)
-        .parquet(s"${outPath}_lineage/run_id=${conf.runId}")
-    }
+    // a few rows, already on the driver: committed without a job
+    DriverParquet.append(spark, s"${outPath}_lineage/run_id=${conf.runId}", lineage)
     // A lost or duplicated lineage update, or (inline tier) a doc the skip
     // set dropped from both paths, fails the run instead of leaving a
     // missing row; the lineage written above is the evidence.
@@ -425,11 +424,6 @@ object Extract {
       lineage.map(_.span_count).sum,
       lineage.map(_.byte_count).sum,
       lineage)
-  }
-
-  private def deletePath(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
   /** Resume (north rule: idempotent restart): `in` minus the doc_ids

@@ -143,7 +143,14 @@ class PlanSpec extends AnyFunSuite {
     assert(scans.values.forall(_ >= Fixtures.testDocs.length), s"partial scans: $readByScan")
   }
 
-  test("megas under one task's page share are not salted: no Exchange, 3 jobs, output == extractWhole") {
+  test("parquet readDocs starts no Spark job: the schema comes from one footer") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-read").toString
+    Fixtures.testDocsDS(spark).toDF().repartition(3).write.parquet(s"$tmp/docs")
+    val (_, jobs) = jobsOf(graft.sources.Io().readDocs(spark, s"$tmp/docs"))
+    assert(jobs.isEmpty, s"readDocs started ${jobs.size} jobs: $jobs")
+  }
+
+  test("megas under one task's page share are not salted: no Exchange, 2 jobs, output == extractWhole") {
     import graft.media.{DeterministicMediaStore, DeterministicOcr}
     import graft.pipeline.ExtractKernel
     val spark2 = spark
@@ -168,7 +175,8 @@ class PlanSpec extends AnyFunSuite {
 
     val out = s"$tmp/out"
     val (summary, jobs) = jobsOf(Extract.run(spark, docs, out, conf))
-    assert(jobs.size == 3, s"expected the tail pass, the write and the lineage write: $jobs")
+    // the driver commits lineage: no job of its own
+    assert(jobs.size == 2, s"expected the tail pass and the write: $jobs")
     assert(!summary.lineage.exists(_.path == "salted"), s"salted lineage: ${summary.lineage}")
     val written = spark.read.parquet(out).as[graft.model.DocOut].collect().map(d => d.doc_id -> d).toMap
     assert(got.size == corpus.size && written.size == corpus.size)

@@ -329,6 +329,13 @@ class OperatorSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.sources.Io().readDocs(spark, s"$tmp/bad")
     }
+    // a bigint doc_id would be cast to a string by `.as[Doc]`, silently
+    val numericIds = Seq((42L, Seq(graft.model.Span("text", "t", "", 0)))).toDF("doc_id", "spans")
+    numericIds.write.mode("overwrite").parquet(s"$tmp/numeric_ids")
+    val e = intercept[IllegalArgumentException] {
+      graft.sources.Io().readDocs(spark, s"$tmp/numeric_ids")
+    }
+    assert(e.getMessage.contains("doc_id must be a string"), e.getMessage)
   }
 
   test("SRP near-dup: finds identical/near vectors via band candidates, verifies exact dot") {

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import graft.media.{DeterministicMediaStore, MediaStore, PageMedia}
-import graft.model.{Doc, DocOut, Span}
+import graft.model.{Doc, DocOut, LineageRow, Span}
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -62,6 +62,49 @@ class ResumeSpec extends AnyFunSuite {
     // lineage table persisted per run
     val lineage = spark.read.parquet(s"${out}_lineage")
     assert(lineage.count() == (s1.lineage.size + s2.lineage.size + s3.lineage.size))
+  }
+
+  test("driver-committed lineage reads back as the summary's, with Spark's schema; reruns append; empty runs write nothing") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-lineage").toFile.getAbsolutePath
+    val out = s"$tmp/docs"
+    val conf = ExtractConf(numPartitions = 4, runId = "lin")
+    val dir = s"${out}_lineage/run_id=lin"
+    val (firstHalf, _) = Fixtures.testDocs.splitAt(Fixtures.testDocs.length / 2)
+    val s1 = Extract.run(spark, spark.createDataset(firstHalf), out, conf)
+    val back = spark.read.parquet(dir).as[LineageRow].collect().toSeq
+    assert(back.sortBy(r => (r.path, r.partition_id)) == s1.lineage)
+
+    // the same schema as a Spark-written LineageRow dataset, both as read
+    // and in the parquet footer, where nullability is kept
+    spark.createDataset(s1.lineage).write.parquet(s"$tmp/spark_lineage")
+    assert(spark.read.parquet(dir).schema == spark.read.parquet(s"$tmp/spark_lineage").schema)
+    def footerSchema(d: String) = {
+      val f = new java.io.File(d).listFiles().filter(_.getName.startsWith("part-")).head
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getFileMetaData.getSchema finally r.close()
+    }
+    assert(footerSchema(dir) == footerSchema(s"$tmp/spark_lineage"))
+
+    // a rerun of the same run id that does work appends a second file
+    val s2 = Extract.run(spark, spark.createDataset(Fixtures.testDocs), out, conf)
+    assert(s2.docsProcessed == Fixtures.testDocs.length - firstHalf.length)
+    def dataFiles = new java.io.File(dir).listFiles().map(_.getName).filterNot(_.startsWith("."))
+    assert(dataFiles.length == 2 && dataFiles.forall(n => n.startsWith("part-") &&
+      n.endsWith(".snappy.parquet")), s"lineage files: ${dataFiles.toSeq}")
+    val all = spark.read.parquet(s"${out}_lineage")
+    assert(all.inputFiles.forall(f => new org.apache.hadoop.fs.Path(f).getName.startsWith("part-")),
+      s"a temp file is visible: ${all.inputFiles.toSeq}")
+    assert(all.count() == s1.lineage.size + s2.lineage.size)
+
+    // a run without lineage rows commits nothing
+    val empty = Extract.run(spark, spark.createDataset(Seq.empty[Doc]), out,
+      conf.copy(runId = "empty"))
+    assert(empty.lineage.isEmpty, s"premise: an empty input has no lineage rows: ${empty.lineage}")
+    assert(!new java.io.File(s"${out}_lineage/run_id=empty").exists)
   }
 
   test("crash resume: committed files without _SUCCESS converge to the exact golden table") {
