@@ -1,86 +1,99 @@
 package graft
 
-import graft.functions.{DotF, LangDetectExpr, MinHashSigs, QClean, ShingleSet, SimHash64, SimRatio, SortedIntersectCount}
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.functions.Kernels
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types._
 
 /** SparkSessionExtensions entry point — registers the engine's native
-  * expressions as SQL functions so any session (including plain
-  * `spark-submit --conf spark.sql.extensions=graft.GraftExtensions` or a
-  * Thrift/Connect gateway) can call them from SQL:
+  * functions (`graft.functions.Kernels`) as SQL functions so any session
+  * (including plain `spark-submit --conf
+  * spark.sql.extensions=graft.GraftExtensions` or a Thrift/Connect gateway)
+  * can call them from SQL:
   *
   * {{{
   *   SELECT doc_id, qclean(text), lang_detect(text), simhash64(text)
   *   FROM documents
   *   WHERE sim_ratio(a, b) > 0.9
   * }}}
+  *
+  * Arguments are checked here, at analysis, against exact types (Spark's
+  * implicit casts would turn `simhash64(42)` into the hash of "42"); a
+  * mismatch raises an `AnalysisException` naming the call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("qclean"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.QClean", "qclean"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => QClean(args.head)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("lang_detect"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.LangDetectExpr", "lang_detect"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => LangDetectExpr(args.head)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.SimHash64", "simhash64"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => SimHash64(args.head)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("sim_ratio"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.SimRatio", "sim_ratio"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => SimRatio(args(0), args(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("dot_f"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.DotF", "dot_f"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => DotF(args(0), args(1))))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sigs"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.MinHashSigs", "minhash_sigs"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        // numPerms must be a foldable integer — a clean analysis error beats
-        // the opaque ClassCastException a bare eval().asInstanceOf would
-        // throw on a column reference / BIGINT / string second argument
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
-        val n = args(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case Literal(v: Short, ShortType) => v.toInt
-          case Literal(v: Byte, ByteType) => v.toInt
-          // the builder runs BEFORE ConstantFolding, so `2+2` or
-          // `CAST(4 AS INT)` arrive as foldable non-Literals — evaluate
-          // them rather than rejecting working SQL
-          case other if other.foldable &&
-              (other.dataType == IntegerType || other.dataType == ShortType ||
-               other.dataType == ByteType) =>
-            // eval() of a foldable can itself throw under ANSI (e.g.
-            // CAST('abc' AS INT)) — keep the clean analysis error
-            (try other.eval()
-            catch { case _: Exception => null }) match {
-              case v: Int => v
-              case v: Short => v.toInt
-              case v: Byte => v.toInt
-              case _ => throw new org.apache.spark.sql.AnalysisException(
-                "INVALID_PARAMETER_VALUE.INTEGER",
-                Map("parameter" -> "numPerms", "functionName" -> "minhash_sigs",
-                  "invalidValue" -> other.sql))
-            }
-          case other => throw new org.apache.spark.sql.AnalysisException(
-            "INVALID_PARAMETER_VALUE.INTEGER",
-            Map("parameter" -> "numPerms", "functionName" -> "minhash_sigs",
-              "invalidValue" -> other.sql))
-        }
-        MinHashSigs(args(0), n)
-      }))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("shingle_set"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.ShingleSet", "shingle_set"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => ShingleSet(args.head)))
-    e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("sorted_intersect_count"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft.functions.SortedIntersectCount", "sorted_intersect_count"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => SortedIntersectCount(args(0), args(1))))
+  import GraftExtensions._
+
+  override def apply(e: SparkSessionExtensions): Unit =
+    sqlFunctions.foreach { case (name, params) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions.Kernels", name),
+        (args: Seq[Expression]) => build(name, params, args)))
+    }
+}
+
+object GraftExtensions {
+  private val Str = Seq(StringType)
+  // qclean, lang_detect and sim_ratio never had a type check: a NULL
+  // argument gave NULL, and a non-string failed at run time
+  private val StrOrNull = Seq(StringType, NullType)
+  private val Floats = Seq(ArrayType(FloatType))
+  private val Longs = Seq(ArrayType(LongType))
+
+  /** Each SQL function and the accepted types of its parameters; array
+    * element nullability is not checked. */
+  private val sqlFunctions: Seq[(String, Seq[Seq[DataType]])] = Seq(
+    "qclean" -> Seq(StrOrNull), "lang_detect" -> Seq(StrOrNull),
+    "sim_ratio" -> Seq(StrOrNull, StrOrNull), "simhash64" -> Seq(Str),
+    "dot_f" -> Seq(Floats, Floats), "minhash_sigs" -> Seq(Str, Seq(IntegerType)),
+    "shingle_set" -> Seq(Str), "sorted_intersect_count" -> Seq(Longs, Longs))
+
+  private def build(name: String, params: Seq[Seq[DataType]], args: Seq[Expression]): Expression = {
+    val call = s""""$name(${args.map(_.sql).mkString(", ")})""""
+    if (args.length != params.length)
+      throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+        "functionName" -> s"`$name`", "expectedNum" -> params.length.toString,
+        "actualNum" -> args.length.toString,
+        "docroot" -> "https://spark.apache.org/docs/latest"))
+    val checked = (if (name == "minhash_sigs") Seq(args(0), numPerms(call, args(1))) else args)
+      .zip(params).zipWithIndex.map { case ((a, ok), i) =>
+        if (!ok.exists(accepts(_, a.dataType)))
+          throw new AnalysisException("DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE", Map(
+            "sqlExpr" -> call, "paramIndex" -> Seq("first", "second")(i),
+            "requiredType" -> ok.map(t => s""""${t.sql}"""").mkString(" or "),
+            "inputSql" -> s""""${a.sql}"""", "inputType" -> s""""${a.dataType.sql}""""))
+        if (a.dataType == NullType) Cast(a, StringType) else a
+      }
+    Kernels.invoke(name, checked: _*)
+  }
+
+  private def accepts(want: DataType, got: DataType): Boolean = (want, got) match {
+    case (ArrayType(w, _), ArrayType(g, _)) => w == g
+    case _ => want == got
+  }
+
+  /** `minhash_sigs`' permutation count as an INT literal: a foldable
+    * integer of at least 1. A clean analysis error beats the opaque
+    * ClassCastException a bare eval().asInstanceOf would throw on a column
+    * reference / BIGINT / string argument. */
+  private def numPerms(call: String, arg: Expression): Literal = {
+    def invalid = new AnalysisException("INVALID_PARAMETER_VALUE.INTEGER",
+      Map("parameter" -> "numPerms", "functionName" -> "minhash_sigs", "invalidValue" -> arg.sql))
+    // the builder runs BEFORE ConstantFolding, so `2+2` or `CAST(4 AS INT)`
+    // arrive as foldable non-Literals — evaluate them rather than rejecting
+    // working SQL; eval() of a foldable can itself throw under ANSI (e.g.
+    // CAST('abc' AS INT)) — keep the clean analysis error
+    val n = if (!arg.foldable) throw invalid
+      else (try arg.eval() catch { case _: Exception => null }) match {
+        case v: Int if arg.dataType == IntegerType => v
+        case v: Short => v.toInt
+        case v: Byte => v.toInt
+        case _ => throw invalid
+      }
+    if (n < 1) throw new AnalysisException("DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE", Map(
+      "sqlExpr" -> call, "exprName" -> "numPerms", "valueRange" -> "[1, 2147483647]",
+      "currentValue" -> n.toString))
+    Literal(n)
   }
 }

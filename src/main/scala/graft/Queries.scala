@@ -1189,7 +1189,7 @@ object Queries {
     }, RowsOnly("dd_ngram_jaccard")),
 
     QuerySpec("dd_simhash", (s, dir) => {
-      // native codegen expression (graft.functions.SimHash64); rows-only
+      // native function (graft.functions.Kernels.simhash64); rows-only
       // check (bit-level hash not expressible in DuckDB);
       // dd_simhash_md5 below is the oracle-exact twin of the same
       // construction over a DuckDB-reproducible base hash

@@ -1,12 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Dot product of two `array<float>` columns as a NATIVE codegen expression:
+/** Dot product of two `array<float>` columns, the native `dot_f` (Kernels):
   * a tight primitive loop over the ArrayData (`getFloat` — no per-element
   * boxing, no intermediate array). The built-in composition
   * `aggregate(zip_with(a, b, (x, y) -> x*y), 0d, +)` is semantically
@@ -37,40 +33,4 @@ object DotKernel {
     }
     acc
   }
-}
-
-case class DotF(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_f requires two ARRAY<FLOAT>, got ${left.dataType} / ${right.dataType}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    DotKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("dotResult")
-      s"""
-         |java.lang.Double $r = graft.functions.DotKernel.dot($a, $b);
-         |if ($r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $r.doubleValue();
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): DotF =
-    copy(l, r)
-
-  override def prettyName: String = "dot_f"
 }

@@ -1,13 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** ORACLE-EXACT md5 text kernels as native codegen expressions.
+/** ORACLE-EXACT md5 text kernels behind native functions (Kernels).
   *
   * The oracle-parity dedup pipeline hashes shingles/windows/words with md5
   * so DuckDB reproduces every value bit-for-bit. Its original builtin form
@@ -255,129 +251,4 @@ object Md5TextKernel {
     }
     new GenericArrayData(out)
   }
-}
-
-/** Oracle-exact md5-lane MinHash signatures (see Md5TextKernel.minhashLanes);
-  * null for < 3 words. */
-case class Md5MinHashLanes(child: Expression, numPerms: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && numPerms >= 1) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"md5_minhash_lanes requires STRING and numPerms >= 1, got ${child.dataType} / $numPerms")
-
-  override def nullSafeEval(v: Any): Any =
-    Md5TextKernel.minhashLanes(v.asInstanceOf[UTF8String], numPerms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("md5Lanes")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.Md5TextKernel.minhashLanes($c, $numPerms);
-         |if ($r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $r;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Md5MinHashLanes =
-    copy(child = newChild)
-
-  override def prettyName: String = "md5_minhash_lanes"
-}
-
-/** Oracle-exact md5 token-window hashes (see Md5TextKernel.windowHashes);
-  * EMPTY array for < w words; null for null input (call sites coalesce to
-  * an empty array, matching the when/otherwise guard this replaces). */
-case class Md5WindowHashes(child: Expression, windowWords: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && windowWords >= 1) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"md5_window_hashes requires STRING and windowWords >= 1, got ${child.dataType} / $windowWords")
-
-  override def nullSafeEval(v: Any): Any =
-    Md5TextKernel.windowHashes(v.asInstanceOf[UTF8String], windowWords)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Md5TextKernel.windowHashes($c, $windowWords)")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5WindowHashes =
-    copy(child = newChild)
-
-  override def prettyName: String = "md5_window_hashes"
-}
-
-/** Oracle-exact md5 SimHash bit string (see Md5TextKernel.simhashMd5Bits). */
-case class Md5SimHashBits(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"md5_simhash_bits requires STRING, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    Md5TextKernel.simhashMd5Bits(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5TextKernel.simhashMd5Bits($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5SimHashBits =
-    copy(child = newChild)
-
-  override def prettyName: String = "md5_simhash_bits"
-}
-
-/** Sorted distinct shingle STRINGS (set-equal to
-  * `array_distinct(shingles(text))`; see Md5TextKernel.shingleStrs). */
-case class ShingleStrs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"shingle_strs requires STRING, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    Md5TextKernel.shingleStrs(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5TextKernel.shingleStrs($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleStrs =
-    copy(child = newChild)
-
-  override def prettyName: String = "shingle_strs"
-}
-
-/** Content lines wrapped at `lineWords` words (see Md5TextKernel.wrapLines);
-  * null for null input (call sites coalesce to an empty array — the
-  * descending-sequence guard the round-5 advice asked for). */
-case class WrapLines(child: Expression, lineWords: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && lineWords >= 1) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"wrap_lines requires STRING and lineWords >= 1, got ${child.dataType} / $lineWords")
-
-  override def nullSafeEval(v: Any): Any =
-    Md5TextKernel.wrapLines(v.asInstanceOf[UTF8String], lineWords)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.Md5TextKernel.wrapLines($c, $lineWords)")
-
-  override protected def withNewChildInternal(newChild: Expression): WrapLines =
-    copy(child = newChild)
-
-  override def prettyName: String = "wrap_lines"
 }

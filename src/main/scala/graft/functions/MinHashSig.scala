@@ -1,11 +1,7 @@
 package graft.functions
 
 import graft.core.Hash64
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All `numPerms` MinHash signature values of a text's 3-word shingles in
@@ -127,98 +123,4 @@ object MinHashKernel {
     }
     c
   }
-}
-
-case class MinHashSigs(child: Expression, numPerms: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && numPerms >= 1) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"minhash_sigs requires STRING and numPerms >= 1, got ${child.dataType} / $numPerms")
-
-  override def nullSafeEval(v: Any): Any =
-    MinHashKernel.sigs(v.asInstanceOf[UTF8String], numPerms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("mhSigs")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.MinHashKernel.sigs($c, $numPerms);
-         |if ($r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $r;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigs =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash_sigs"
-}
-
-/** Sorted distinct shingle-hash set of a text (see MinHashKernel.shingleSet);
-  * null for < 3 words. */
-case class ShingleSet(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"shingle_set requires STRING, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    MinHashKernel.shingleSet(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("shSet")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.MinHashKernel.shingleSet($c);
-         |if ($r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $r;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleSet =
-    copy(child = newChild)
-
-  override def prettyName: String = "shingle_set"
-}
-
-/** |A∩B| of two sorted long arrays (linear merge) — pairs with ShingleSet
-  * for exact Jaccard verification of dedup candidates. */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sorted_intersect_count requires two ARRAY<BIGINT>, got ${left.dataType} / ${right.dataType}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    MinHashKernel.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.MinHashKernel.sortedIntersectCount($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedIntersectCount =
-    copy(l, r)
-
-  override def prettyName: String = "sorted_intersect_count"
 }

@@ -1,12 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Gopher-style repetition counts in ONE fused native pass — value-identical
@@ -154,76 +149,13 @@ object TextStatsKernel {
   }
 }
 
-case class QualityCounts(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"quality_counts requires STRING, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    TextStatsKernel.qualityCounts(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextStatsKernel.qualityCounts($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): QualityCounts =
-    copy(child = newChild)
-
-  override def prettyName: String = "quality_counts"
-}
-
-case class TokenCount(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"token_count requires STRING, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    TextStatsKernel.tokenCount(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextStatsKernel.tokenCount($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenCount =
-    copy(child = newChild)
-
-  override def prettyName: String = "token_count"
-}
-
-case class RepetitionCounts(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"repetition_counts requires STRING, got ${child.dataType}")
-
-  override def nullSafeEval(v: Any): Any =
-    TextStatsKernel.repetitionCounts(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextStatsKernel.repetitionCounts($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): RepetitionCounts =
-    copy(child = newChild)
-
-  override def prettyName: String = "repetition_counts"
-}
-
 object TextStats {
   /** [n_words, sum_word_chars, top_word_n, top_bigram_n] as array<long>. */
-  def repetitionCounts(c: Column): Column =
-    bridge.column(RepetitionCounts(bridge.expression(c)))
+  def repetitionCounts(c: Column): Column = Kernels.column("repetition_counts", c)
 
   /** [n_words, n_punct, n_stop, n_chars] as array<long>. */
-  def qualityCounts(c: Column): Column =
-    bridge.column(QualityCounts(bridge.expression(c)))
+  def qualityCounts(c: Column): Column = Kernels.column("quality_counts", c)
 
   /** BPE-ish token count (letter runs | digit runs | single other glyphs). */
-  def tokenCount(c: Column): Column =
-    bridge.column(TokenCount(bridge.expression(c)))
+  def tokenCount(c: Column): Column = Kernels.column("token_count", c)
 }

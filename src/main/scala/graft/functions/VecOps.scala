@@ -2,14 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types._
 
-/** Embedding-vector kernels as native codegen expressions — fused
+/** Embedding-vector kernels behind native functions (Kernels) — fused
   * replacements for the interpreted `aggregate(zip_with(...))` HOF folds in
   * `operators.Similarity` (guide §1.2 step 2: those folds walk an
   * interpreted expression tree and box a p/k-field struct PER ELEMENT).
@@ -128,103 +124,13 @@ object VecOpsKernel {
   }
 }
 
-case class Int8Audit(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("scale", DoubleType, nullable = true),
-    StructField("sum_code", LongType, nullable = true),
-    StructField("n_saturated", LongType, nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"int8_audit requires ARRAY<FLOAT>, got $t")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    VecOpsKernel.int8Audit(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.VecOpsKernel.int8Audit($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Int8Audit =
-    copy(child = newChild)
-
-  override def prettyName: String = "int8_audit"
-}
-
-case class PlaneDots(child: Expression, p: Int, dims: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) if p >= 1 && dims >= 1 => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"plane_dots requires ARRAY<FLOAT>, got $t")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    VecOpsKernel.planeDots(v.asInstanceOf[ArrayData], p, dims)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("planeDots")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.VecOpsKernel.planeDots($c, $p, $dims);
-         |if ($r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $r;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PlaneDots =
-    copy(child = newChild)
-
-  override def prettyName: String = "plane_dots"
-}
-
-case class ClusterDists(child: Expression, centroids: Seq[Seq[Double]]) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
-
-  @transient private lazy val cents: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) if centroids.nonEmpty => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"cluster_dists requires ARRAY<FLOAT>, got $t")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    VecOpsKernel.clusterDists(v.asInstanceOf[ArrayData], cents)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("clusterDists")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.VecOpsKernel.clusterDists($c, $centsRef);
-         |if ($r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = $r;
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ClusterDists =
-    copy(child = newChild)
-
-  override def prettyName: String = "cluster_dists"
-}
-
 object VecOps {
-  def int8Audit(c: Column): Column = bridge.column(Int8Audit(bridge.expression(c)))
+  def int8Audit(c: Column): Column = Kernels.column("int8_audit", c)
   def planeDots(c: Column, p: Int, dims: Int): Column =
-    bridge.column(PlaneDots(bridge.expression(c), p, dims))
-  def clusterDists(c: Column, centroids: Array[Array[Double]]): Column =
-    bridge.column(ClusterDists(bridge.expression(c),
-      centroids.map(_.toSeq).toSeq))
+    Kernels.column("plane_dots", c, Kernels.positive("p", p), Kernels.positive("dims", dims))
+  /** The centroids are copied into the plan, so the caller may reuse them. */
+  def clusterDists(c: Column, centroids: Array[Array[Double]]): Column = {
+    require(centroids.nonEmpty, "clusterDists needs at least one centroid")
+    Kernels.column("cluster_dists", c, Kernels.constant(centroids.map(_.clone)))
+  }
 }

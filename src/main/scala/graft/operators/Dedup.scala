@@ -327,7 +327,7 @@ object Dedup {
   }
 
   /** Prod-speed LSH candidates: signatures from the NATIVE one-pass
-    * `minhash_sigs` expression (graft.functions.MinHashSigs — single scan,
+    * `minhash_sigs` function (graft.functions.MinHashKernel — single scan,
     * seed-mixed permutations, no per-shingle string/md5 machinery), bands
     * joined on their two raw signature longs (no digest hash needed).
     * Rows-only vs the oracle by design: the 64-bit base hash is not

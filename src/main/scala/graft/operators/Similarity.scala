@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** dot(embedding, q) via the native primitive-loop DotF — bit-identical
+  /** dot(embedding, q) via the native primitive-loop dot_f — bit-identical
     * to the previous aggregate(zip_with(...)) fold (same float→double
     * casts, same ascending-element accumulation order; VecParitySpec), but
     * no interpreted HOF plumbing or boxed intermediate array per row. */
@@ -390,7 +390,7 @@ object Similarity {
       .repartition(col("band"), col("key"))
     val cand = Dedup.bandedCandidates(keyed, idCol, Seq("band", "key"), maxBucket)
     val vecs = embeddings.select(col(idCol), col(embCol))
-    // native primitive-loop dot (graft.functions.DotF): bit-identical to
+    // native primitive-loop dot (graft.functions.DotKernel): bit-identical to
     // the aggregate(zip_with(...)) fold (same casts + order) but no boxed
     // intermediate array per verified pair
     val dot = graft.functions.functions.dotf(col("ea"), col("eb"))

@@ -430,13 +430,14 @@ object Extract {
     * already in the committed output. left_anti scales to any committed
     * size (sort-merge); at small committed sets AQE turns it into a
     * broadcast anti-join. It ignores duplicate keys, so the committed ids
-    * are not deduplicated first (that would shuffle every one of them). */
+    * are not deduplicated first (that would shuffle every one of them).
+    * The ids are read with a user schema, so no schema-inference job runs. */
   private[graft] def pending(spark: SparkSession, in: Dataset[Doc], outPath: String): Dataset[Doc] = {
     import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(outPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      in.join(spark.read.parquet(outPath).select("doc_id"), Seq("doc_id"), "left_anti").as[Doc]
+      in.join(spark.read.schema("doc_id string").parquet(outPath), Seq("doc_id"), "left_anti").as[Doc]
     else in
   }
 }

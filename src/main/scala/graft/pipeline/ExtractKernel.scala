@@ -89,15 +89,16 @@ object ExtractKernel {
     // null span elements; a null-spans doc degrades to an empty DocOut
     // (confidence 0, main.py:546 `else 0` branch) instead of failing a task.
     val ordered = Option(doc.spans).getOrElse(Nil).filter(_ != null).sortBy(_.offset)
-    val total = ordered.iterator.map(spanPages(_, store)).sum
-    if (total <= conf.skewPageThreshold) {
+    // one page-count probe per span; rawPages probes again only for a
+    // unit without a page range
+    val pages = ordered.map(spanPages(_, store))
+    if (pages.sum <= conf.skewPageThreshold) {
       WorkUnit(doc.doc_id, 0, 1, ordered, -1, -1) :: Nil
     } else {
       // mega-doc: each non-pdf span is its own unit; big pdf spans split
       // into PagesPerSplit ranges. Salt = unit index.
       val units = Seq.newBuilder[(Seq[Span], Int, Int)]
-      ordered.foreach { s =>
-        val p = spanPages(s, store)
+      ordered.lazyZip(pages).foreach { (s, p) =>
         if (s.kind == "pdf" && p > ExtractConf.PagesPerSplit) {
           var from = 1
           while (from <= p) {
@@ -143,8 +144,8 @@ object ExtractKernel {
           out += RawPage("html", s.media_ref, s.offset, 1,
             Seq(Boilerplate.extract(if (s.text == null) "" else s.text)), keepEmpty = false)
         case "pdf" =>
-          val total = store.pageCount(s.media_ref)
-          val (from, to) = if (unit.pageFrom > 0) (unit.pageFrom, unit.pageTo) else (1, total)
+          val (from, to) =
+            if (unit.pageFrom > 0) (unit.pageFrom, unit.pageTo) else (1, store.pageCount(s.media_ref))
           var p = from
           while (p <= to) {
             val media = store.page(s.media_ref, p)

@@ -78,4 +78,16 @@ class ExtensionsSpec extends AnyFunSuite {
     val f2 = spark.sql("SELECT minhash_sigs('a b c d e', CAST(4 AS INT)) AS s").head().getSeq[Long](0)
     assert(f2 == f1, "foldable forms must produce the literal form's signatures")
   }
+
+  test("wrong argument types fail analysis with an error naming the function") {
+    for (q <- Seq("simhash64(array(1))", "simhash64(42)", "dot_f(array(1d), array(2d))",
+        "minhash_sigs('a b c', 0)", "sorted_intersect_count(array(1), array(2L))",
+        "qclean(42)", "sim_ratio('a')")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(s"SELECT $q").collect())
+      assert(e.getMessage.contains(q.takeWhile(_ != '(')), e.getMessage)
+    }
+    // the three functions that never checked types still take a NULL
+    val nulls = spark.sql("SELECT qclean(NULL), lang_detect(NULL), sim_ratio(NULL, 'a')").head()
+    assert((0 until 3).forall(nulls.isNullAt))
+  }
 }

@@ -187,6 +187,23 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("a resumed run starts 4 jobs: no schema-inference job reads the committed ids") {
+    val spark2 = spark
+    import spark2.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-resume-jobs").toString
+    val corpus = (0 until 48).map(Fixtures.doc) // no megas: a fresh run is 2 jobs
+    spark.createDataset(corpus).toDF().write.parquet(s"$tmp/docs")
+    val docs = graft.sources.Io().readDocs(spark, s"$tmp/docs")
+    val conf = ExtractConf(numPartitions = 4)
+    val first = Extract.run(spark, docs.filter(col("doc_id") < Fixtures.docId(10)), s"$tmp/out", conf)
+    val (_, pending) = jobsOf(Extract.pending(spark, docs, s"$tmp/out"))
+    assert(pending.isEmpty, s"reading the committed ids started ${pending.size} jobs: $pending")
+    val (resumed, jobs) = jobsOf(Extract.run(spark, docs, s"$tmp/out", conf.copy(runId = "run-1")))
+    // the tail pass and the write, each with its broadcast of the committed ids
+    assert(jobs.size == 4, s"${jobs.size} jobs in a resumed run: $jobs")
+    assert(first.docsProcessed == 10 && resumed.docsProcessed == corpus.length - 10)
+  }
+
   test("resume anti-join reads the committed ids without an aggregate") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-pending").toString
     val all = Fixtures.testDocsDS(spark)

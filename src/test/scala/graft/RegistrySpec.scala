@@ -52,6 +52,14 @@ class RegistrySpec extends AnyFunSuite {
     assert(linesDigest(masked) == "e2e69f618a2f66c6a4e326f39a360797be3cadaf0c4d6e4d35a8a2a8b244034f")
   }
 
+  test("registry: every query's output schema matches the pinned names, types and nullability") {
+    // treeString prints each field's name, type and nullable flag, and the
+    // containsNull / valueContainsNull of nested arrays and maps; the digest
+    // is of the schemas the hand-written native expressions produced
+    val schemas = Queries.registry.map(q => q.name -> q.build(spark, sf).schema.treeString).toMap
+    assert(linesDigest(schemas) == "253f39621baef874e3c584dec85eb7fdfa551362edc8576037efae75bb274988")
+  }
+
   test("registry: the rows-only set is exactly the six hash- and sketch-based queries") {
     val withOracle = Queries.oracle.keySet ++ Queries.oracleDynamic(spark, sf).keySet
     assert(Queries.all.keySet -- withOracle == RowsOnlyNames)

@@ -107,4 +107,22 @@ class EquivalenceSpec extends AnyFunSuite {
         s"${d.doc_id} differs from extractWhole")
     }
   }
+
+  test("extractWhole of a one-span 256-page pdf doc probes its page count once") {
+    val id = Fixtures.docId(8)
+    val ref = s"mem://$id/0"
+    val pages = PagesStore(Map(ref -> 256))
+    var calls = 0
+    val counting = new MediaStore {
+      override def pageCount(r: String): Int = { calls += 1; pages.pageCount(r) }
+      override def page(r: String, p: Int): PageMedia = pages.page(r, p)
+    }
+    val doc = Doc(id, Seq(Span("pdf", "", ref, 0)))
+    val conf = ExtractConf()
+    assert(ExtractKernel.plan(doc, pages, conf).length == 256 / ExtractConf.PagesPerSplit,
+      "premise: the doc is split into page ranges")
+    val got = ExtractKernel.extractWhole(doc, counting, DeterministicOcr, conf)
+    assert(calls == 1, s"$calls pageCount calls")
+    assert(got.spans.nonEmpty && got == ExtractKernel.extractWhole(doc, pages, DeterministicOcr, conf))
+  }
 }
