@@ -33,6 +33,14 @@ object Consensus {
       val b = texts(1)
       return if (b.length <= a.length) a else a + b.substring(a.length)
     }
+    // EQUAL-PASS fast path (exact): identical passes vote their own char at
+    // every position, so the consensus is pass 0. At level=ultra this is
+    // every page without OCR noise; it skips the vote's per-pass char
+    // arrays and builder, the largest allocation left in the kernel there.
+    val head = texts.head
+    var p = 1
+    while (p < texts.length && texts(p) == head) p += 1
+    if (p == texts.length) return head
     mergeVote(texts)
   }
 

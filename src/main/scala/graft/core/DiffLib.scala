@@ -1,6 +1,6 @@
 package graft.core
 
-import scala.collection.mutable
+import java.util.Arrays
 
 /** Faithful Scala port of CPython `difflib.SequenceMatcher(None, a, b).ratio()`
   * — the Ratcliff–Obershelp similarity the reference uses for OCR pass
@@ -18,156 +18,418 @@ import scala.collection.mutable
   *  - `find_longest_match`: dynamic-programming sweep keeping, among maximal
   *    blocks, the one starting earliest in `a` then earliest in `b`
   *    (strict `>` update), then the two-sided non-junk extension.
-  *  - `get_matching_blocks`: LIFO-free queue recursion, matches accumulated
-  *    and summed; `ratio = 2*M / (len(a)+len(b))`, and 1.0 when both empty
-  *    (Python returns 1.0 for `2*0/0`? no — `calculate` guards: T==0 → 1.0).
+  *  - `get_matching_blocks`: LIFO queue recursion, matches accumulated and
+  *    summed; `ratio = 2*M / T` with `T = len(a) + len(b)`, and
+  *    `T == 0 → 1.0` (`_calculate_ratio`).
   *
   * Chars are UTF-16 units, matching Python code points for BMP-only OCR text.
+  *
+  * '''Diagonal fast path (exact).''' When no char of `b` is popular (always
+  * so below 200 chars), `b2j` lists every position of `b`, so the DP's
+  * j2len value at (i, j) is the length of the whole diagonal run of equal
+  * chars ending there, clipped to the ranges. No popular char also means
+  * no extension: a char just before or after the best block that matched
+  * would make a longer run, which the DP would have kept. So
+  * `find_longest_match` is the longest diagonal run inside the ranges,
+  * ties going to the smallest start in `a`, then in `b` (the DP's first
+  * strict `>` update). The fast path finds it without the DP:
+  *  - L0, the longest run on the two diagonals aligned with the ranges'
+  *    starts and ends (`Arrays.mismatch`), is a lower bound on the answer.
+  *  - Any run of length ≥ L0 spans L0 consecutive rows of `a`, so it holds
+  *    one of the rows `alo + L0 - 1 + k·L0`. Probing every `b2j` position of
+  *    those rows and extending each probe to its whole run finds every run
+  *    of length ≥ L0, hence every longest one, and the tie-break picks among
+  *    them.
+  *  - A run is extended once: a probe that falls inside a run already
+  *    extended on its diagonal is skipped, so the extensions never visit
+  *    more (i, j) pairs than the DP would.
+  * With L0 below `MinSeed` or a popular char in `b`, the stamped DP runs.
+  * It visits only the rows of `a` whose char seeds a match: with popular
+  * chars in `b`, that is a small share of them.
+  *
+  * '''One matcher per thread.''' A `Matcher` holds one `b` table (set by
+  * `setSeq2`, as CPython's `set_seq2` reuse) plus the DP rows, stamps,
+  * per-diagonal marks and the block stack, all flat primitive arrays sized
+  * once, about 50 bytes per char of capacity. `matcher(len)` hands out the
+  * calling thread's matcher, grown up to `WorkspaceCap` chars (about 1 MB);
+  * a longer page gets a matcher of its own that is not kept. Every `b` set
+  * on a thread's matcher, and every call on it, draws stamps from its one
+  * generation counter, which only grows (a wrap resets all stamps to 0 and
+  * restarts it): a stamp written under an earlier `b` or call never equals
+  * a later generation, so their stamps never collide and no row is ever
+  * cleared between them.
   */
 object DiffLib {
 
-  final case class Match(a: Int, b: Int, size: Int)
+  /** Longest matcher a thread keeps, in chars of the longer text. */
+  private[core] val WorkspaceCap = 1 << 14
 
-  final class SequenceMatcher(a: String, b: String) {
-    // __chain_b: b2j minus popular elements (autojunk), bjunk empty
-    // (isjunk=None). ASCII fast path: a 128-slot array instead of a hash
-    // map — b2j construction was a top allocation site (boxed chars,
-    // buffer churn) in the 32-thread extraction profile.
-    private val ntest = if (b.length >= 200) b.length / 100 + 1 else Int.MaxValue
+  /** Shortest aligned-diagonal run for which the fast path beats the DP. */
+  private val MinSeed = 4
 
-    // null when b holds a char ≥ 128; the count scan doubles as the check
-    private val b2jAscii: Array[Array[Int]] = {
-      val counts = new Array[Int](128)
-      var i = 0
-      while (i < b.length && b.charAt(i) < 128) { counts(b.charAt(i)) += 1; i += 1 }
-      if (i < b.length) null else {
-        val out = new Array[Array[Int]](128)
-        var c = 0
-        while (c < 128) {
-          // autojunk: popular chars (count > ntest) excluded from seeds
-          if (counts(c) > 0 && counts(c) <= ntest) out(c) = new Array[Int](counts(c))
-          c += 1
-        }
-        val fill = new Array[Int](128)
-        i = 0
-        while (i < b.length) {
-          val ch = b.charAt(i)
-          val arr = out(ch)
-          if (arr != null) { arr(fill(ch)) = i; fill(ch) += 1 }
-          i += 1
-        }
-        out
-      }
+  private val local = new ThreadLocal[Matcher]
+
+  /** The calling thread's matcher, for texts of up to `len` chars. */
+  private[core] def matcher(len: Int): Matcher = {
+    val m = local.get
+    if (m != null && m.capacity >= len) m
+    else if (len > WorkspaceCap) new Matcher(len)
+    else {
+      val grown = new Matcher(math.min(WorkspaceCap, math.max(len, if (m == null) 256 else 2 * m.capacity)))
+      local.set(grown)
+      grown
     }
-    private val asciiOnly = b2jAscii != null
+  }
 
-    private val b2jMap: Map[Char, Array[Int]] = if (asciiOnly) null else {
-      val m = mutable.LinkedHashMap.empty[Char, mutable.ArrayBuffer[Int]]
+  private[core] final class Matcher(val capacity: Int) {
+    private val a = new Array[Char](capacity)
+    private var na = 0
+    // the rows of `a` whose char seeds a match in `b` (a non-empty b2j
+    // range): the only rows on which the DP does any work
+    private val seedRows = new Array[Int](capacity)
+    private var nSeedRows = -1                   // -1: not listed yet
+    private val b = new Array[Char](capacity)
+    private var nb = 0
+
+    // b2j minus popular chars: the positions of slot s are
+    // pos(start(s) until start(s + 1)), ascending. An ASCII `b` uses the char
+    // as its slot; any other `b` uses the char's index in the sorted `keys`.
+    private var asciiB = true
+    private var popular = false
+    private val start = new Array[Int](math.max(129, math.min(capacity, 65536) + 1))
+    private val cursor = new Array[Int](128)
+    private val step = new Array[Int](128)
+    private val pos = new Array[Int](capacity + 1)   // + the popular chars' spare slot
+    private var keys: Array[Char] = null
+    private var sorted: Array[Long] = null
+    private var nkeys = 0
+
+    // DP rows: slot j holds a live j2len entry only if its stamp is the
+    // generation of the row that wrote it, so no row is ever zero-filled and
+    // a row costs only its matches, as with CPython's sparse j2len dict.
+    private val j2lenA = new Array[Int](capacity + 1)
+    private val j2lenB = new Array[Int](capacity + 1)
+    private val stampA = new Array[Int](capacity + 1)
+    private val stampB = new Array[Int](capacity + 1)
+    // fast path: the end row of the run last extended on each diagonal,
+    // allocated on first use (a long page has popular chars and never needs it)
+    private var diagEnd: Array[Int] = null
+    private var diagStamp: Array[Int] = null
+    private var gen = 0    // last generation handed out; stamps start at 0
+
+    private var stack = new Array[Int](64)
+
+    /** Start of the block the last `findLongestMatch` returned. */
+    private[core] var matchA = 0
+    private[core] var matchB = 0
+
+    def setSeq2(s: String): Unit = {
+      val b = this.b; val start = this.start
+      nb = s.length
+      s.getChars(0, nb, b, 0)
+      Arrays.fill(start, 0, 129, 0)
+      var j = 0
+      while (j < nb && b(j) < 128) { start(b(j) + 1) += 1; j += 1 }   // counts, if ASCII
+      asciiB = j == nb
+      val ntest = if (nb >= 200) nb / 100 + 1 else Int.MaxValue      // autojunk
+      popular = if (asciiB) indexAscii(ntest) else indexSorted(ntest)
+    }
+
+    /** Counting sort of an ASCII `b` whose counts `start(c + 1)` holds; true
+      * if some char is popular. */
+    private def indexAscii(ntest: Int): Boolean = {
+      val b = this.b; val start = this.start; val cursor = this.cursor; val step = this.step
+      val pos = this.pos
+      var popular = false
+      var c = 0
+      while (c < 128) {                          // counts → offsets; a popular
+        val n = start(c + 1)                     // char gets an empty range
+        if (n > ntest) popular = true
+        start(c + 1) = start(c) + (if (n > ntest) 0 else n)
+        c += 1
+      }
+      c = 0
+      while (c < 128) {                          // a popular char's positions all
+        val keep = start(c) < start(c + 1)       // land in the spare slot after
+        cursor(c) = if (keep) start(c) else start(128)   // the kept ones
+        step(c) = if (keep) 1 else 0
+        c += 1
+      }
+      var j = 0
+      while (j < nb) {                           // branch-free: the popular test
+        val c = b(j)                             // mispredicts on every other char
+        pos(cursor(c)) = j
+        cursor(c) += step(c)
+        j += 1
+      }
+      popular
+    }
+
+    /** Sort of any other `b` by (char, position); true if some char is
+      * popular. */
+    private def indexSorted(ntest: Int): Boolean = {
+      if (sorted == null) { sorted = new Array[Long](capacity); keys = new Array[Char](start.length - 1) }
+      var j = 0
+      while (j < nb) { sorted(j) = (b(j).toLong << 32) | j; j += 1 }
+      Arrays.sort(sorted, 0, nb)
+      var popular = false
+      nkeys = 0
+      var p = 0
+      var k = 0
+      while (k < nb) {
+        val c = (sorted(k) >>> 32).toChar
+        var e = k
+        while (e < nb && (sorted(e) >>> 32).toChar == c) e += 1
+        keys(nkeys) = c
+        start(nkeys) = p
+        if (e - k > ntest) popular = true
+        else while (k < e) { pos(p) = sorted(k).toInt; p += 1; k += 1 }
+        k = e
+        nkeys += 1
+      }
+      start(nkeys) = p
+      popular
+    }
+
+    /** The `b2j` slot of char `c`, negative when `c` is not in `b`. */
+    @inline private def slotOf(c: Char): Int =
+      if (asciiB) { if (c < 128) c else -1 }
+      else Arrays.binarySearch(keys, 0, nkeys, c)
+
+    private[core] def setSeq1(s: String): Unit = {
+      na = s.length
+      s.getChars(0, na, a, 0)
+      nSeedRows = -1
+    }
+
+    /** Lists the seed rows of `a`, once per `setSeq1`, for the DP. */
+    private def findSeedRows(): Unit = {
+      val a = this.a; val start = this.start; val step = this.step; val seedRows = this.seedRows
+      val ascii = asciiB
+      var n = 0
       var i = 0
-      while (i < b.length) {
-        m.getOrElseUpdate(b.charAt(i), mutable.ArrayBuffer.empty[Int]) += i
+      while (i < na) {
+        val c = a(i)
+        seedRows(n) = i                          // kept only if it seeds
+        n += (if (ascii) { if (c < 128) step(c) else 0 }
+              else { val s = slotOf(c); if (s >= 0 && start(s) < start(s + 1)) 1 else 0 })
         i += 1
       }
-      if (b.length >= 200) {                       // autojunk threshold
-        m.filterInPlace((_, idxs) => idxs.length <= ntest)
-      }
-      m.iterator.map { case (c, idxs) => c -> idxs.toArray }.toMap
+      nSeedRows = n
     }
 
-    @inline private[core] def positionsOf(c: Char): Array[Int] =
-      if (asciiOnly) { if (c < 128) b2jAscii(c) else null }
-      else b2jMap.getOrElse(c, null)
-
-    // Per-matcher scratch: primitive arrays instead of difflib's dicts —
-    // boxed HashMap churn here was the #1 allocation source in the whole
-    // pipeline (GC-bound at 32 threads). Same recurrence, same tie-breaks.
-    // Each row array is paired with a stamp array: slot j holds a live
-    // j2len entry only if its stamp is the generation of the row that
-    // wrote it, so no row is ever zero-filled and a row costs only its
-    // matches, as with CPython's sparse j2len dict.
-    private val j2lenA = new Array[Int](b.length + 1)
-    private val j2lenB = new Array[Int](b.length + 1)
-    private val stampA = new Array[Int](b.length + 1)
-    private val stampB = new Array[Int](b.length + 1)
-    private var gen = 0    // stamp of the last row written; stamps start at 0
-
-    def findLongestMatch(alo: Int, ahi: Int, blo: Int, bhi: Int): Match = {
-      var besti = alo
-      var bestj = blo
-      var bestsize = 0
-      if (gen > Int.MaxValue - (ahi - alo) - 2) {                  // stamps would wrap: start over
-        java.util.Arrays.fill(stampA, 0); java.util.Arrays.fill(stampB, 0); gen = 0
-      }
-      // generation of the empty row before alo: one past every written
-      // stamp, so no row of an earlier call reads as live
-      var g = gen + 1
-      var prev = j2lenA; var prevStamp = stampA
-      var cur = j2lenB; var curStamp = stampB
-      var i = alo
-      while (i < ahi) {
-        val idxs = positionsOf(a.charAt(i))
-        if (idxs != null) {
-          var k = 0
-          var break = false
-          while (k < idxs.length && !break) {
-            val j = idxs(k)
-            if (j >= bhi) break = true
-            else if (j >= blo) {
-              // prev(j) holds j2len[j-1] from the previous row (index
-              // shifted by +1; this call never writes slot blo, so
-              // j-1 = blo-1 reads as 0)
-              val len = (if (prevStamp(j) == g) prev(j) else 0) + 1
-              cur(j + 1) = len
-              curStamp(j + 1) = g + 1
-              if (len > bestsize) {                // strict >: earliest (i, j) kept
-                besti = i - len + 1
-                bestj = j - len + 1
-                bestsize = len
-              }
-            }
-            k += 1
-          }
-        }
-        val t = prev; prev = cur; cur = t
-        val ts = prevStamp; prevStamp = curStamp; curStamp = ts
-        g += 1
-        i += 1
-      }
-      gen = g
-      // Non-junk extension (bjunk is empty with isjunk=None, so this is the
-      // only live extension; it may absorb autojunk-popular chars).
-      while (besti > alo && bestj > blo && a.charAt(besti - 1) == b.charAt(bestj - 1)) {
-        besti -= 1; bestj -= 1; bestsize += 1
-      }
-      while (besti + bestsize < ahi && bestj + bestsize < bhi &&
-             a.charAt(besti + bestsize) == b.charAt(bestj + bestsize)) {
-        bestsize += 1
-      }
-      Match(besti, bestj, bestsize)
+    /** `SequenceMatcher(None, s, b).ratio()` for the `b` of `setSeq2`. */
+    def ratio(s: String): Double = {
+      setSeq1(s)
+      val t = na + nb
+      if (t == 0) 1.0                            // difflib._calculate_ratio
+      else 2.0 * totalMatched / t
     }
 
-    /** Sum of matching-block sizes (the M in ratio). Iterative queue exactly
-      * as difflib's `get_matching_blocks`. */
-    def totalMatched: Int = {
+    /** Sum of matching-block sizes (the M in ratio), with the LIFO queue of
+      * difflib's `get_matching_blocks`. */
+    private def totalMatched: Int = {
       var matched = 0
-      val queue = mutable.Stack((0, a.length, 0, b.length))
-      while (queue.nonEmpty) {
-        val (alo, ahi, blo, bhi) = queue.pop()
-        val m = findLongestMatch(alo, ahi, blo, bhi)
-        if (m.size > 0) {
-          matched += m.size
-          if (alo < m.a && blo < m.b) queue.push((alo, m.a, blo, m.b))
-          if (m.a + m.size < ahi && m.b + m.size < bhi)
-            queue.push((m.a + m.size, ahi, m.b + m.size, bhi))
+      var top = push(0, 0, na, 0, nb)
+      while (top > 0) {
+        top -= 4
+        val alo = stack(top); val ahi = stack(top + 1)
+        val blo = stack(top + 2); val bhi = stack(top + 3)
+        val k = findLongestMatch(alo, ahi, blo, bhi)
+        if (k > 0) {
+          matched += k
+          val i = matchA
+          val j = matchB
+          if (alo < i && blo < j) top = push(top, alo, i, blo, j)
+          if (i + k < ahi && j + k < bhi) top = push(top, i + k, ahi, j + k, bhi)
         }
       }
       matched
     }
 
-    def ratio(): Double = {
-      val t = a.length + b.length
-      if (t == 0) 1.0                              // difflib._calculate_ratio
-      else 2.0 * totalMatched / t
+    private def push(top: Int, alo: Int, ahi: Int, blo: Int, bhi: Int): Int = {
+      if (top + 4 > stack.length) stack = Arrays.copyOf(stack, 2 * stack.length)
+      stack(top) = alo; stack(top + 1) = ahi; stack(top + 2) = blo; stack(top + 3) = bhi
+      top + 4
+    }
+
+    /** `find_longest_match(alo, ahi, blo, bhi)` of the texts set last: returns
+      * the block's size and leaves its start in `matchA`, `matchB`. */
+    private[core] def findLongestMatch(alo: Int, ahi: Int, blo: Int, bhi: Int): Int = {
+      val k = if (popular) -1 else longestRun(alo, ahi, blo, bhi)
+      if (k >= 0) k else longestDp(alo, ahi, blo, bhi)
+    }
+
+    /** The first k in [from, to) with pos(k) >= j, or `to`. */
+    @inline private def firstAtOrAfter(from: Int, to: Int, j: Int): Int =
+      if (from == to || pos(from) >= j) from
+      else { val k = Arrays.binarySearch(pos, from, to, j); if (k < 0) -k - 1 else k }
+
+    /** First generation of a call that needs `n` more; resets every stamp
+      * before the counter would wrap. */
+    private def reserve(n: Int): Int = {
+      if (gen > Int.MaxValue - n - 2) {
+        Arrays.fill(stampA, 0); Arrays.fill(stampB, 0)
+        if (diagStamp != null) Arrays.fill(diagStamp, 0)
+        gen = 0
+      }
+      gen + 1
+    }
+
+    /** Length of the common prefix of a(i until i + n) and b(j until j + n). */
+    @inline private def common(i: Int, j: Int, n: Int): Int =
+      if (n == 0 || a(i) != b(j)) 0                // no call for a lone mismatch
+      else {
+        val x = Arrays.mismatch(a, i, i + n, b, j, j + n)
+        if (x < 0) n else x
+      }
+
+    /** Length of the common suffix of a(i - n until i) and b(j - n until j),
+      * compared a chunk at a time from the end. */
+    private def commonBack(i: Int, j: Int, n: Int): Int = {
+      if (n == 0 || a(i - 1) != b(j - 1)) return 0
+      var k = 0
+      var c = math.min(n, 16)
+      while (c > 0 && Arrays.equals(a, i - k - c, i - k, b, j - k - c, j - k)) {
+        k += c
+        c = math.min(n - k, 16)
+      }
+      while (k < n && a(i - k - 1) == b(j - k - 1)) k += 1
+      k
+    }
+
+    /** Longest run of a == b on the diagonal from (i, j), n long, or
+      * `floor` if none is longer. */
+    private def diagonalRun(i: Int, j: Int, n: Int, floor: Int): Int = {
+      var best = floor
+      var t = 0
+      while (n - t > best) {
+        val x = common(i + t, j + t, n - t)
+        if (x > best) best = x
+        t += x + 1
+      }
+      best
+    }
+
+    /** The diagonal fast path (see the object's doc) for a `b` without
+      * popular chars; -1 when L0 is too short for it to pay. */
+    private def longestRun(alo: Int, ahi: Int, blo: Int, bhi: Int): Int = {
+      val n = math.min(ahi - alo, bhi - blo)
+      var l0 = diagonalRun(alo, blo, n, MinSeed - 1)   // a shorter L0 is not used
+      if (ahi - alo != bhi - blo) l0 = diagonalRun(ahi - n, bhi - n, n, l0)
+      if (l0 < MinSeed) return -1
+      if (this.diagEnd == null) {
+        this.diagEnd = new Array[Int](2 * capacity)
+        this.diagStamp = new Array[Int](2 * capacity)
+      }
+      val diagEnd = this.diagEnd; val diagStamp = this.diagStamp
+      val g = reserve(1)
+      gen = g
+      val dOff = ahi - 1 - blo                   // diagonal of (i, j): j - i + dOff
+      var besti = alo
+      var bestj = blo
+      var bestsize = 0
+      var r = alo + l0 - 1
+      while (r < ahi) {
+        val s = slotOf(a(r))
+        if (s >= 0) {
+          val e = start(s + 1)
+          var k = firstAtOrAfter(start(s), e, blo)
+          while (k < e && pos(k) < bhi) {
+            val j = pos(k)
+            val d = j - r + dOff
+            if (diagStamp(d) != g || diagEnd(d) <= r) {   // a run not yet extended
+              val back = commonBack(r, j, math.min(r - alo, j - blo))
+              val end = r + 1 + common(r + 1, j + 1, math.min(ahi - r, bhi - j) - 1)
+              diagStamp(d) = g
+              diagEnd(d) = end
+              val i0 = r - back
+              val j0 = j - back
+              val len = end - i0
+              if (len > bestsize || (len == bestsize && (i0 < besti || (i0 == besti && j0 < bestj)))) {
+                besti = i0; bestj = j0; bestsize = len
+              }
+            }
+            k += 1
+          }
+        }
+        r += l0
+      }
+      extend(alo, ahi, blo, bhi, besti, bestj, bestsize)
+    }
+
+    /** The stamped DP of `find_longest_match`, then the extension. Row i
+      * reads j2len entries stamped `base + (i - alo)` (row i - 1) and writes
+      * its own stamped one more. Only the seed rows are visited: a skipped
+      * row writes nothing, and the next row's reads of an older generation
+      * count as 0, as an empty row's would. */
+    private[core] def longestDp(alo: Int, ahi: Int, blo: Int, bhi: Int): Int = {
+      matchA = alo
+      matchB = blo
+      var size = 0
+      // generation of the empty row before alo: one past every written
+      // stamp, so no row of an earlier call reads as live
+      val base = reserve(ahi - alo)
+      var prev = j2lenA; var prevStamp = stampA
+      var cur = j2lenB; var curStamp = stampB
+      if (nSeedRows < 0) findSeedRows()
+      var r = Arrays.binarySearch(seedRows, 0, nSeedRows, alo)
+      if (r < 0) r = -r - 1
+      while (r < nSeedRows && seedRows(r) < ahi) {
+        val i = seedRows(r)
+        size = dpRow(i, base + (i - alo), prev, prevStamp, cur, curStamp, blo, bhi, size)
+        val t = prev; prev = cur; cur = t
+        val ts = prevStamp; prevStamp = curStamp; curStamp = ts
+        r += 1
+      }
+      gen = base + (ahi - alo)
+      extend(alo, ahi, blo, bhi, matchA, matchB, size)
+    }
+
+    /** One DP row: reads `prev` entries of generation g (row i - 1), writes
+      * `cur` entries of generation g + 1; a longer block than `best` goes to
+      * `matchA`, `matchB`. Returns the best size. */
+    @inline private def dpRow(i: Int, g: Int, prev: Array[Int], prevStamp: Array[Int],
+                              cur: Array[Int], curStamp: Array[Int], blo: Int, bhi: Int, best: Int): Int = {
+      var bestsize = best
+      val s = slotOf(a(i))
+      if (s >= 0) {
+        val e = start(s + 1)
+        var k = firstAtOrAfter(start(s), e, blo)
+        while (k < e && pos(k) < bhi) {
+          val j = pos(k)
+          // prev(j) holds j2len[j-1] from the previous row (index shifted
+          // by +1; this call never writes slot blo, so j-1 = blo-1 reads
+          // as 0)
+          val len = (if (prevStamp(j) == g) prev(j) else 0) + 1
+          cur(j + 1) = len
+          curStamp(j + 1) = g + 1
+          if (len > bestsize) {                  // strict >: earliest (i, j) kept
+            matchA = i - len + 1
+            matchB = j - len + 1
+            bestsize = len
+          }
+          k += 1
+        }
+      }
+      bestsize
+    }
+
+    /** The non-junk extension (bjunk is empty with isjunk=None, so it is the
+      * only live one; it may absorb popular chars). Leaves the block's start
+      * in `matchA`, `matchB` and returns its size. */
+    private def extend(alo: Int, ahi: Int, blo: Int, bhi: Int, i: Int, j: Int, size: Int): Int = {
+      var besti = i
+      var bestj = j
+      var bestsize = size
+      while (besti > alo && bestj > blo && a(besti - 1) == b(bestj - 1)) {
+        besti -= 1; bestj -= 1; bestsize += 1
+      }
+      bestsize += common(besti + bestsize, bestj + bestsize,
+        math.min(ahi - besti - bestsize, bhi - bestj - bestsize))
+      matchA = besti
+      matchB = bestj
+      bestsize
     }
   }
 
@@ -180,5 +442,10 @@ object DiffLib {
     * non-noisy page, so this skips the whole matcher on the common case;
     * PropertySpec pins fast == slow on equal inputs. */
   def ratio(a: String, b: String): Double =
-    if (a == b) 1.0 else new SequenceMatcher(a, b).ratio()
+    if (a == b) 1.0
+    else {
+      val m = matcher(math.max(a.length, b.length))
+      m.setSeq2(b)
+      m.ratio(a)
+    }
 }

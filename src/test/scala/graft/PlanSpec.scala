@@ -232,9 +232,10 @@ class PlanSpec extends AnyFunSuite {
 
   test("native expressions stay inside whole-stage codegen (no fallback)") {
     // the round-1 lesson inverted: lang_detect/qclean/simhash64/dot_f are
-    // UnaryExpression/BinaryExpression with doGenCode — their project
-    // stages must carry the WholeStageCodegen marker `*(n)`, and the plan
-    // must not show an interpreted-project fallback
+    // StaticInvoke calls of the forwarders in functions.Kernels, which
+    // generate a direct static call — their project stages must carry the
+    // WholeStageCodegen marker `*(n)`, and the plan must not show an
+    // interpreted-project fallback
     for (q <- Seq("q_lang_detect", "dd_simhash", "q_textclean")) {
       val df = Queries.all(q)(spark, sf)
       df.collect() // finalize the AdaptiveSparkPlan — codegen stages only

@@ -89,7 +89,7 @@ object KernelProps extends Properties("kernel") {
 
   property("equal-input ratio fast path == full matcher (exactly 1.0)") =
     forAll(nastyString) { a =>
-      val slow = new DiffLib.SequenceMatcher(a, new String(a)).ratio()
+      val slow = freshRatio(a, new String(a))
       slow == 1.0 && DiffLib.ratio(a, new String(a)) == slow
     }
 
@@ -130,6 +130,16 @@ object KernelProps extends Properties("kernel") {
     Consensus.merge(ps) == ConsensusReference.mergeVote(ps)
   }
 
+  // the same passes with some or all of them replaced by pass 0: the
+  // equal-pass fast path and its near misses
+  property("3- and 4-pass merge with repeated passes == closure reference vote") =
+    forAllNoShrink(votePasses, Gen.listOfN(4, Gen.prob(0.7))) { (ps, same) =>
+      val qs = ps.zipWithIndex.map { case (t, i) => if (same(i)) ps.head else t }
+      Prop.classify(qs.forall(_ == qs.head), "all equal") {
+        Consensus.merge(qs) == ConsensusReference.mergeVote(qs)
+      }
+    }
+
   // OCR-like pairs: b is a mutation of a; long enough for autojunk in half
   // the cases, non-ASCII b (the b2jMap path) in a third
   private val diffPair: Gen[(String, String)] = {
@@ -161,13 +171,173 @@ object KernelProps extends Properties("kernel") {
   property("stamped findLongestMatch == zero-filling form, call after call") =
     forAllNoShrink(diffPair, Gen.listOfN(8, Gen.zip(Gen.choose(0.0, 1.0), Gen.choose(0.0, 1.0),
       Gen.choose(0.0, 1.0), Gen.choose(0.0, 1.0)))) { case ((a, b), ranges) =>
-      val sm = new DiffLib.SequenceMatcher(a, b)
+      // the thread's matcher: its stamps carry over from every earlier call
+      val m = DiffLib.matcher(math.max(a.length, b.length))
+      m.setSeq2(b)
+      m.setSeq1(a)
       ranges.forall { case (x, y, u, v) =>
         val (alo, ahi) = (math.min(x, y) * a.length).toInt -> (math.max(x, y) * a.length).toInt
         val (blo, bhi) = (math.min(u, v) * b.length).toInt -> (math.max(u, v) * b.length).toInt
-        sm.findLongestMatch(alo, ahi, blo, bhi) ==
-          DiffLibReference.findLongestMatchZeroFill(sm, a, b, alo, ahi, blo, bhi)
+        val want = DiffLibReference.findLongestMatchZeroFill(a, b, alo, ahi, blo, bhi)
+        val dp = m.longestDp(alo, ahi, blo, bhi)
+        val dpBlock = (m.matchA, m.matchB, dp)
+        val k = m.findLongestMatch(alo, ahi, blo, bhi)
+        dpBlock == want && (m.matchA, m.matchB, k) == want
       }
+    }
+
+  // --- the diagonal fast path and the reused matcher, against the literal port ---
+
+  /** The full matcher on (a, b) on a matcher of its own: no equal-input
+    * shortcut and no state from earlier calls. */
+  private def freshRatio(a: String, b: String): Double = {
+    val m = new DiffLib.Matcher(math.max(a.length, b.length))
+    m.setSeq2(b)
+    m.ratio(a)
+  }
+
+  private def pyRatio(a: String, b: String): Double =
+    new DiffLibReference.PySequenceMatcher(a, b).ratio()
+
+  private def noPopular(b: String): Boolean =
+    b.length < 200 || b.groupBy(identity).valuesIterator.forall(_.length <= b.length / 100 + 1)
+
+  /** Up to 5 inserts, deletes or substitutions, each at a random place. */
+  private def edited(s: String, alphabet: Gen[Char]): Gen[String] = for {
+    n <- Gen.choose(0, 5)
+    edits <- Gen.listOfN(n, Gen.zip(Gen.choose(0, 2), Gen.choose(0.0, 1.0), alphabet))
+  } yield edits.foldLeft(s) { case (t, (kind, at, c)) =>
+    val p = math.min((at * t.length).toInt, t.length)
+    if (kind == 0 || p == t.length) t.patch(p, c.toString, 0)
+    else t.patch(p, if (kind == 1) "" else c.toString, 1)
+  }
+
+  /** A text of repeated blocks from a pool of three, so equal runs recur at
+    * several offsets: ties and seeds off the aligned diagonals. */
+  private def blocky(alphabet: Gen[Char], maxLen: Int): Gen[String] = for {
+    pool <- Gen.listOfN(3, Gen.choose(1, 12).flatMap(n => Gen.listOfN(n, alphabet).map(_.mkString)))
+    picks <- Gen.listOf(Gen.oneOf(pool))
+  } yield picks.mkString.take(maxLen)
+
+  // b under 200 chars over the alphabets "ab" and "abcd ", a = b edited
+  private val nearShort: Gen[(String, String)] = for {
+    alphabet <- Gen.oneOf("ab", "abcd ").map(s => Gen.oneOf(s.toSeq))
+    b <- blocky(alphabet, 199)
+    a <- edited(b, alphabet)
+  } yield (a, b)
+
+  // b of 200+ chars with no popular char: two shuffles of the 94 printable
+  // ASCII chars and a repeated block of distinct chars (each char ≤ 3 times,
+  // ntest = 3 below 300 chars); a = b edited, non-ASCII edits included
+  private val printable = ('!' to '~').toList
+  private val nearWide: Gen[(String, String)] = for {
+    p1 <- Gen.long.map(seed => new scala.util.Random(seed).shuffle(printable).mkString)
+    p2 <- Gen.long.map(seed => new scala.util.Random(seed).shuffle(printable).mkString)
+    from <- Gen.choose(0, 40)
+    len <- Gen.choose(12, 54)
+    at <- Gen.choose(0, 188)
+    body = p1 + p2
+    b = body.patch(at, p1.substring(from, from + len), 0)
+    a <- edited(b, Gen.frequency((4, Gen.oneOf(printable)), (1, Gen.oneOf('é', 'ж', '\u4e2d'))))
+  } yield (a, b)
+
+  // (ab)^k-style periodic text against a rotated, cut or edited copy
+  private val periodic: Gen[(String, String)] = for {
+    unit <- Gen.oneOf("ab", "abc", "aab", "ab ")
+    reps <- Gen.choose(2, 100)
+    a = unit * reps
+    shift <- Gen.choose(1, 3 * unit.length)
+    cut <- Gen.choose(0, 5)
+    rotated = a.drop(shift) + a.take(shift)
+    b <- Gen.oneOf(Gen.const(rotated.dropRight(cut)), edited(rotated, Gen.oneOf(unit.toSeq)))
+  } yield (a, b)
+
+  private val nearPair: Gen[(String, String)] = Gen.oneOf(nearShort, nearWide, periodic)
+
+  property("near-identical and periodic pairs: ratio == literal CPython port, both ways round") =
+    forAllNoShrink(nearPair) { case (a, b) =>
+      Prop.classify(noPopular(b), "fast path (no popular char in b)") {
+        Prop.classify(b.length >= 200 && noPopular(b), "b of 200+ chars, no popular char") {
+          DiffLib.ratio(a, b) == pyRatio(a, b) && DiffLib.ratio(b, a) == pyRatio(b, a) &&
+            freshRatio(a, b) == pyRatio(a, b)
+        }
+      }
+    }
+
+  property("findLongestMatch on sub-ranges == literal CPython port, both ways round") =
+    forAllNoShrink(nearPair, Gen.listOfN(6, Gen.zip(Gen.choose(0.0, 1.0), Gen.choose(0.0, 1.0),
+      Gen.choose(0.0, 1.0), Gen.choose(0.0, 1.0)))) { case ((a0, b0), ranges) =>
+      Seq((a0, b0), (b0, a0)).forall { case (a, b) =>
+        val m = DiffLib.matcher(math.max(a.length, b.length))
+        m.setSeq2(b)
+        m.setSeq1(a)
+        val py = new DiffLibReference.PySequenceMatcher(a, b)
+        ranges.forall { case (x, y, u, v) =>
+          val (alo, ahi) = (math.min(x, y) * a.length).toInt -> (math.max(x, y) * a.length).toInt
+          val (blo, bhi) = (math.min(u, v) * b.length).toInt -> (math.max(u, v) * b.length).toInt
+          val k = m.findLongestMatch(alo, ahi, blo, bhi)
+          (m.matchA, m.matchB, k) == py.findLongestMatch(alo, ahi, blo, bhi)
+        }
+      }
+    }
+
+  // 2-4 passes: equal to the first, edited from it, non-ASCII edits, and
+  // pages of 200+ chars (autojunk)
+  private val passes: Gen[Seq[String]] = for {
+    alphabet <- Gen.oneOf("ab", "abcd ", "the lease 0123").map(s => Gen.oneOf(s.toSeq))
+    base <- Gen.oneOf(blocky(alphabet, 150), blocky(alphabet, 400))
+    n <- Gen.choose(2, 4)
+    rest <- Gen.listOfN(n - 1, Gen.frequency((1, Gen.const(base)),
+      (3, edited(base, Gen.frequency((5, alphabet), (1, Gen.oneOf('é', '\u4e2d')))))))
+  } yield base +: rest
+
+  property("pairwise confidence == (i, j) sum of literal CPython ratios") =
+    forAllNoShrink(passes) { ps =>
+      var sum = 0.0
+      var pairs = 0
+      for (i <- ps.indices; j <- i + 1 until ps.length) {
+        sum += pyRatio(ps(i), ps(j)) * 100.0
+        pairs += 1
+      }
+      Prop.classify(ps.distinct.length < ps.length, "equal passes") {
+        Prop.classify(ps.exists(_.exists(_ >= 128)), "non-ASCII pass") {
+          Confidence.pairwise(ps) == sum / pairs
+        }
+      }
+    }
+
+  property("a text over the workspace cap: exact, on a matcher the thread does not keep") = {
+    // 189 chars, 90 times each in shuffled order: no popular char at 17,010
+    val chars = ('!' to '~') ++ ('\u00a1' to '\u00ff')
+    val rnd = new scala.util.Random(7)
+    val b = (0 until 90).map(_ => rnd.shuffle(chars).mkString).mkString
+    val a = b.patch(9000, "x", 1).patch(300, "", 2).patch(16000, "ab", 0)
+    val kept = DiffLib.matcher(16)
+    Prop(b.length > DiffLib.WorkspaceCap && noPopular(b) &&
+      DiffLib.ratio(a, b) == pyRatio(a, b) && DiffLib.ratio(b, a) == pyRatio(b, a) &&
+      (DiffLib.matcher(16) eq kept) &&
+      (DiffLib.matcher(DiffLib.WorkspaceCap + 1) ne DiffLib.matcher(DiffLib.WorkspaceCap + 1)))
+  }
+
+  property("reused thread matchers == fresh matchers: long then short on one thread, and 4 threads") =
+    forAllNoShrink(Gen.listOfN(12, Gen.oneOf(nearPair, diffPair))) { pairs =>
+      val want = pairs.map { case (a, b) => freshRatio(a, b) }
+      val longFirst = pairs.zip(want).sortBy { case ((a, b), _) => -math.max(a.length, b.length) }
+      val oneThread = longFirst.forall { case ((a, b), w) => DiffLib.ratio(a, b) == w }
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      try {
+        val runs = (0 until 4).map { t =>
+          pool.submit(new java.util.concurrent.Callable[Boolean] {
+            def call(): Boolean = {
+              val order = new scala.util.Random(t).shuffle(pairs.zip(want))
+              order.forall { case ((a, b), w) =>
+                DiffLib.ratio(a, b) == w && Confidence.pairwise(Seq(a, b)) == w * 100.0
+              }
+            }
+          })
+        }
+        oneThread && runs.forall(_.get)
+      } finally pool.shutdown()
     }
 
   // HTML with entities, runs of the six whitespace chars (alone too),

@@ -211,11 +211,14 @@ object ConsensusReference {
 
 object DiffLibReference {
 
-  /** `findLongestMatch` as it was before the generation stamps: both
-    * `j2len` rows zero-filled over [blo, bhi] for every char of `a`. Reads
-    * `sm`'s seeds, so `sm` must be the matcher of (a, b). */
-  def findLongestMatchZeroFill(sm: DiffLib.SequenceMatcher, a: String, b: String,
-                               alo: Int, ahi: Int, blo: Int, bhi: Int): DiffLib.Match = {
+  /** `findLongestMatch` as it was before the generation stamps and the
+    * diagonal fast path: the DP over the seeds of `b` minus its popular chars
+    * (autojunk), both `j2len` rows zero-filled over [blo, bhi] for every
+    * char of `a`, then the non-junk extension. */
+  def findLongestMatchZeroFill(a: String, b: String,
+                               alo: Int, ahi: Int, blo: Int, bhi: Int): (Int, Int, Int) = {
+    val ntest = if (b.length >= 200) b.length / 100 + 1 else Int.MaxValue
+    val b2j = b.indices.groupBy(b(_)).filter(_._2.length <= ntest).map { case (c, js) => c -> js.sorted.toArray }
     var besti = alo
     var bestj = blo
     var bestsize = 0
@@ -225,7 +228,7 @@ object DiffLibReference {
     var i = alo
     while (i < ahi) {
       java.util.Arrays.fill(cur, blo, bhi + 1, 0)
-      val idxs = sm.positionsOf(a.charAt(i))
+      val idxs = b2j.getOrElse(a.charAt(i), null)
       if (idxs != null) {
         var k = 0
         var break = false
@@ -250,7 +253,7 @@ object DiffLibReference {
            a.charAt(besti + bestsize) == b.charAt(bestj + bestsize)) {
       bestsize += 1
     }
-    DiffLib.Match(besti, bestj, bestsize)
+    (besti, bestj, bestsize)
   }
 
   /** A literal port of CPython's `SequenceMatcher(None, a, b)`:
