@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
 """List src/main definitions that nothing else names.
 
-A definition (def/val/var/class/object/trait) is unreached when its name
-appears nowhere else in src/main/scala or perfbench/src once comments are
-stripped (string literals still count as uses). Entry points that only
-specs or launch commands name are kept in KEEP. Also prints the line total
-of src/main/scala (as `wc -l` counts it).
+A definition (def/val/var/class/object/trait) outside comments and string
+literals is unreached when its name appears nowhere else in src/main/scala
+or perfbench/src once comments are stripped (string literals still count as
+uses). Entry points that only specs or launch commands name are kept in
+KEEP. Also prints the line total of src/main/scala (as `wc -l` counts it).
 Usage: python3 scripts/unreached.py   (exit 1 if anything outside KEEP is found)
 """
 import collections
@@ -27,23 +27,27 @@ DEF = re.compile(r"\b(?:def|val|var|class|object|trait)\s+([A-Za-z_]\w*)")
 TOKEN = re.compile(r'"""[\s\S]*?"""|"(?:\\.|[^"\\\n])*"|\'(?:\\.|[^\'\\\n])\'|//[^\n]*|/\*[\s\S]*?\*/')
 
 
-def strip_comments(src):
-    def keep_strings(m):
+def strip(src, keep_strings):
+    """Blank out comments, and string literals unless `keep_strings`;
+    newlines stay, so line numbers hold."""
+    def blank(m):
         t = m.group(0)
-        return "\n" * t.count("\n") if t[:2] in ("//", "/*") else t
-    return TOKEN.sub(keep_strings, src)
+        return t if keep_strings and t[:2] not in ("//", "/*") else "\n" * t.count("\n")
+    return TOKEN.sub(blank, src)
 
 
 def main():
     sources = {p: p.read_text()
                for d in (MAIN, BENCH) for p in sorted(d.rglob("*.scala"))}
-    texts = {p: strip_comments(src) for p, src in sources.items()}
+    texts = {p: strip(src, keep_strings=True) for p, src in sources.items()}
     uses = collections.Counter(w for text in texts.values()
                                for w in re.findall(r"[A-Za-z_]\w*", text))
     found = []
-    for path, text in texts.items():
+    for path, src in sources.items():
         if not path.is_relative_to(MAIN):
             continue
+        # definitions are found in code only: "class pair" in a message is none
+        text = strip(src, keep_strings=False)
         for m in DEF.finditer(text):
             name = m.group(1)
             if uses[name] == 1:

@@ -5,448 +5,186 @@ import graft.pipeline.Fixtures
 import scala.jdk.CollectionConverters._
 
 /** Round benchmark (driver contract: the LAST stdout line is ONE compact
-  * JSON object — headline + scaling + calibration, kept well under the
-  * driver's ~2000-char stdout tail window; the per-query timings map is a
-  * SEPARATE JSON line printed immediately before it, and both lines are
-  * also written to bench_out.json).
+  * JSON object — headline + scaling, kept well under the driver's
+  * ~2000-char stdout tail window; the per-query timings map is a SEPARATE
+  * JSON line printed immediately before it, and both lines are also
+  * written to bench_out.json).
   *
-  * Part 1 — the BASELINE.json metric: documents/sec extraction throughput
-  * over the deterministic synthetic interleaved corpus (FIXTURES.md §5,
+  * Part 1 — the BASELINE.json metric: documents/sec of `Extract.run` over
+  * the deterministic synthetic interleaved corpus (FIXTURES.md §5,
   * includes 0.1% 256-page mega-docs + ~1% 32-page docs so skew handling is
-  * exercised), measured at two parallelism levels (`local[k]` is the
-  * sandbox proxy for k executors — no real cluster here; see BASELINE.md).
-  * Scaling efficiency = (docs/s@4N / docs/s@N) / 4.
-  *
-  * TWO pairs are measured and BOTH are reported (round-1 advice):
-  *  - primary N→4N = 2→8 pinned cores — chosen INSIDE the VM's sustained
-  *    CPU entitlement (BASELINE.md addendum: this credit-throttled host
-  *    cannot physically grant a 32-thread JVM 4× the cycles of an 8-thread
-  *    one, so 8→32 measures the hypervisor cap, not the job);
-  *  - the documented contract pair 8→32, reported verbatim in
-  *    `scaling_8_32` so the judge sees it explicitly.
-  * Each pair runs `rounds` times UNCONDITIONALLY (no efficiency-conditioned
-  * retry — that was optional-stopping bias) and the reported efficiency is
-  * the median of ≥3 pair efficiencies.
+  * exercised), at the two levels of one N→4N pair (`local[k]` in a child
+  * JVM pinned to k cores is the sandbox proxy for k executors — no real
+  * cluster here; see BASELINE.md). The pair comes from the host (`plan`):
+  * 4N = nproc, so 1→4 on 4 cores and 8→32 on 32. Scaling efficiency =
+  * (docs/s@4N / docs/s@N) / 4 per pair of adjacent runs; the median of
+  * `Pairs` pairs is reported, and pairs alternate which leg runs first.
   *
   * Part 2 — per-query wall seconds for every registry query on
   * `SPARK_GRAFT_SF_DIR`, forced through a noop sink (count() would let
   * Catalyst prune the very columns under test).
   *
-  * Robustness (round-1 driver recorded `parsed: null`): the child JVM's
-  * stderr is redirected to a file (an undrained stderr pipe >64 KB
-  * deadlocks waitFor), every phase is fault-isolated, and the JSON is
-  * ALWAYS printed as the final stdout line even if a phase failed.
+  * Both phases are fault-isolated: the contract line is ALWAYS printed as
+  * the final stdout line, even if a phase failed.
   */
 object Bench {
 
-  /** Rested-host 8-core probe reference (docs/s, best-of-4 on the 40k-doc
-    * warm corpus) — measured on this sandbox host class rested (24.5–27.6k
-    * band; drained reads 17–20k); see the gate scaladoc. */
-  private val ProbeRefDefault = "26000"
+  private[graft] val Docs = 400000
+  private val Pairs = 3
 
   private val benchDir = sys.env.getOrElse("GRAFT_BENCH_DIR", "/tmp/graft_bench")
-  private var mainCorpus: String = _
-  private var warmCorpus: String = _
 
-  /** Materialize the deterministic corpus to parquet ONCE (outside timing):
-    * the measurement then covers the real pipeline shape — parquet scan →
-    * extract → sink (single stage) — not synthetic-data generation (which
-    * benchmarked at ~half the wall time when fused into the job). */
-  private def ensureCorpus(numDocs: Int): Unit = {
-    // paths keyed by size: a stale corpus of a different numDocs would
-    // silently corrupt the rate (docs/sec divides numDocs by the wall)
-    mainCorpus = s"$benchDir/corpus_main_$numDocs"
-    warmCorpus = s"$benchDir/corpus_warm_$numDocs"
-    def missing(p: String) = !new java.io.File(s"$p/_SUCCESS").exists
-    if (missing(mainCorpus) || missing(warmCorpus)) {
-      val spark = LocalSession(32, 32)
-      try {
-        Fixtures.benchDocs(spark, numDocs, 128).write
-          .mode("overwrite").parquet(mainCorpus)
-        Fixtures.benchDocs(spark, math.max(numDocs / 10, 1000), 128).write
-          .mode("overwrite").parquet(warmCorpus)
-      } finally spark.stop()
-    }
+  /** The levels run on an `nproc`-core host, and the levels skipped: the
+    * pair N→4N with N = max(1, nproc / 4), and the contract pair 8→32. A
+    * level above nproc is skipped, never pinned onto fewer cores. */
+  private[graft] def plan(nproc: Int): (Seq[Int], Seq[Int]) = {
+    val n = math.max(1, nproc / 4)
+    val (run, over) = Seq(n, 4 * n).partition(_ <= nproc)
+    (run, (over ++ Seq(8, 32).filter(_ > nproc)).distinct.sorted)
   }
 
-  /** One scaling measurement in a CHILD JVM pinned to `cores` CPUs with
-    * taskset — confines executor threads AND GC/JIT to the advertised core
-    * count (see BenchWorker). Falls back to unpinned if taskset is absent.
-    * Child stderr goes to a FILE (Spark logs + any stack trace): an
-    * undrained stderr pipe fills at ~64 KB and deadlocks `waitFor`. */
-  private def extractionRate(cores: Int, numDocs: Int): Double =
-    extractionRate(cores, warmCorpus, mainCorpus, numDocs)
+  /** Materialize the corpora to parquet ONCE, outside timing: the main
+    * corpus and a tenth-size JIT warm-up corpus. Paths are keyed by size,
+    * so a stale corpus cannot change what the rate counts. */
+  private def ensureCorpus(): (String, String) = {
+    val warm = s"$benchDir/corpus_warm_$Docs"
+    val main = s"$benchDir/corpus_main_$Docs"
+    def missing(p: String) = !new java.io.File(s"$p/_SUCCESS").exists
+    if (missing(main) || missing(warm)) {
+      val spark = LocalSession()
+      try {
+        Fixtures.benchDocs(spark, Docs, 128).write.mode("overwrite").parquet(main)
+        Fixtures.benchDocs(spark, Docs / 10, 128).write.mode("overwrite").parquet(warm)
+      } finally spark.stop()
+    }
+    (warm, main)
+  }
 
-  private def extractionRate(cores: Int, warmPath: String, mainPath: String,
-      numDocs: Int, reps: Int = 1): Double = {
-    val javaBin = s"${sys.props("java.home")}/bin/java"
-    val cp = sys.props("java.class.path")
-    val mem = sys.env.getOrElse("SPARK_DRIVER_MEM", "24g")
-    // the child opens the same modules as this JVM (build.sbt's
-    // javaOptions), in the `--add-opens=module/pkg=ALL-UNNAMED` form
+  /** One level's rate, from a BenchWorker JVM pinned to `cores` CPUs with
+    * taskset (unpinned if taskset is absent), with this JVM's heap and
+    * module flags. Child stderr goes to a FILE: an undrained stderr pipe
+    * fills at ~64 KB and deadlocks `waitFor`. */
+  private def rate(cores: Int, warm: String, main: String): Double = {
     val jvmFlags = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq.filter(_.startsWith("--add-opens")) ++
-      Seq(s"-Xmx$mem", "-Dspark.ui.enabled=false")
+      .getInputArguments.asScala.toSeq
+      .filter(a => a.startsWith("--add-opens") || a.startsWith("-Xmx"))
     val pin =
       if (new java.io.File("/usr/bin/taskset").exists)
         Seq("/usr/bin/taskset", "-c", s"0-${cores - 1}")
       else Nil
-    val cmd = pin ++ Seq(javaBin) ++ jvmFlags ++ Seq("-cp", cp,
-      "graft.BenchWorker", cores.toString, warmPath, mainPath, numDocs.toString,
-      reps.toString)
+    val cmd = pin ++ Seq(s"${sys.props("java.home")}/bin/java") ++ jvmFlags ++
+      Seq("-cp", sys.props("java.class.path"), "graft.BenchWorker",
+        cores.toString, warm, main, Docs.toString, s"$benchDir/out_$cores")
     val errFile = new java.io.File(s"$benchDir/worker_${cores}_stderr.log")
-    val out = new StringBuilder
     val proc = new ProcessBuilder(cmd: _*)
       .redirectError(ProcessBuilder.Redirect.to(errFile))
       .start()
     val src = scala.io.Source.fromInputStream(proc.getInputStream)
-    try src.getLines().foreach { l => if (l.startsWith("RATE ")) out.append(l) }
-    finally src.close()
-    proc.waitFor()
-    require(out.nonEmpty,
-      s"bench worker produced no RATE line (cores=$cores, stderr: $errFile)")
-    out.toString.stripPrefix("RATE ").toDouble
+    val line = try src.getLines().toList.find(_.startsWith("RATE ")) finally src.close()
+    val exit = proc.waitFor()
+    line.map(_.stripPrefix("RATE ").toDouble).getOrElse(throw new IllegalStateException(
+      s"bench worker produced no RATE line (cores=$cores, exit $exit, stderr: $errFile)"))
   }
 
-  private final case class Scaling(
-      nLow: Int, nHigh: Int, rateLow: Double, rateHigh: Double,
-      efficiency: Double, pairEffs: Seq[Double],
-      discardedEffs: Seq[Double] = Nil)
+  /** `Pairs` rounds over `levels`, each a map of level → docs/s. */
+  private def measure(levels: Seq[Int]): Seq[Map[Int, Double]] = {
+    val (warm, main) = ensureCorpus()
+    (0 until Pairs).map { r =>
+      (if (r % 2 == 0) levels else levels.reverse).map(l => l -> rate(l, warm, main)).toMap
+    }
+  }
 
-  /** Entitlement calibration gate (round-2 verdict item 1). The driver runs
-    * this bench right after its heavy correctness phase, exactly when the
-    * credit-throttled VM's CPU pool is drained — the recorded 2→8 efficiency
-    * then measures the refilling pool, not the job (BENCH_r02 recorded
-    * 0.712 vs 0.75–0.82 for the same code on a rested host). Before each
-    * primary pair, a SHORT 8-core probe (warm corpus, ~1 s measured region,
-    * ~8 core-seconds of burn) is compared against a stored rested-host
-    * reference rate; while the probe reads below `frac`·ref the gate rests
-    * and re-probes. A CONSUMED-TIME budget bounds the total gating cost —
-    * the bench must stay inside its ~10 min envelope no matter what the
-    * host does, so once the budget is spent measurement proceeds ungated
-    * (the probe trace is reported in the JSON either way). The budget
-    * counts seconds the gate actually spends resting+probing, NOT wall
-    * time since construction: a wall deadline silently disabled gating for
-    * every pair after the first two (r3: `rests:0` with a 19.5k probe
-    * because 120 s had elapsed in pair 1's runs, none of it gating). */
-  private final class Gate(val ref: Double, val frac: Double, restS: Int,
-      budgetNs: Long, probeDocs: Int) {
-    val probeRates = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var rests = 0
-    private var consumedNs = 0L
-    def await(): Unit = {
-      if (ref <= 0) return
-      // a spent budget must also skip the INITIAL probe — each probe is a
-      // child-JVM spin-up + best-of-4 run (~12-20 s) that would overshoot
-      // the documented gating bound with nothing left to act on
-      if (consumedNs >= budgetNs) return
-      val t0 = System.nanoTime()
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
+  }
+
+  /** The contract line: `runs` holds one map of level → docs/s per pair
+    * (none when the scaling phase failed, with its `error`). `value` is
+    * the 8-core leg's best rate if it ran, else the highest run level's;
+    * `headline_level` names the level behind it. */
+  private[graft] def contractLine(nproc: Int, runs: Seq[Map[Int, Double]],
+      error: Option[String], queriesTotalSec: Double, sf: String): String = {
+    val (levels, skipped) = plan(nproc)
+    val best = levels.flatMap(l => runs.flatMap(_.get(l)).maxOption.map(l -> _))
+    val headlineLevel = if (levels.contains(8)) 8 else levels.last
+    val headline = best.toMap.getOrElse(headlineLevel, 0.0)
+    val scaling = (levels, best.map(_._2)) match {
+      case (Seq(lo, hi), Seq(rateLo, rateHi)) =>
+        val effs = runs.map(m => m(hi) / m(lo) / (hi / lo))
+        Some(s"""{"n_cores":$lo,"docs_per_sec_n":${f"$rateLo%.1f"},""" +
+          s""""four_n_cores":$hi,"docs_per_sec_4n":${f"$rateHi%.1f"},""" +
+          s""""efficiency":${f"${median(effs)}%.3f"},""" +
+          s""""pair_efficiencies":${effs.map(e => f"$e%.3f").mkString("[", ",", "]")},""" +
+          s""""num_docs":$Docs}""")
+      case _ => None
+    }
+    val ratesJson = best.map { case (l, r) => "\"" + l + "\":" + f"$r%.1f" }.mkString("{", ",", "}")
+    val scaling832 = scaling.filter(_ => levels == Seq(8, 32))
+    // surrogate-safe truncation: take(200) could cut between a surrogate
+    // pair, and a lone high surrogate makes the line invalid JSON
+    val errorJson = error.map { e =>
+      val t = e.take(200)
+      val safe = if (t.nonEmpty && Character.isHighSurrogate(t.last)) t.dropRight(1) else t
+      s""""scaling_error":${Json.str(safe)},"""
+    }
+    s"""{"metric":"docs/sec Extract.run (interleaved corpus, medium; """ +
+      s"""${levels.map(l => s"local[$l]").mkString(" vs ")})",""" +
+      s""""value":${f"$headline%.1f"},"unit":"docs/sec",""" +
+      s""""headline_level":$headlineLevel,""" +
+      s""""rates":$ratesJson,""" +
+      s""""skipped_levels":${skipped.mkString("[", ",", "]")},""" +
+      s""""scaling":${scaling.getOrElse("null")},""" +
+      s""""scaling_8_32":${scaling832.getOrElse("null")},"calibration":null,""" +
+      errorJson.getOrElse("") +
+      s""""queries_total_sec":${f"$queriesTotalSec%.2f"},""" +
+      s""""queries_detail":"previous stdout line + bench_out.json","sf":${Json.str(sf)}}"""
+  }
+
+  /** Wall seconds of each registry query's second execution (-1 if it
+    * failed). The session warm-up and ANN index build run first, untimed,
+    * and each query's first execution pays its codegen compile and
+    * one-time per-plan setup, so the timing is steady-state. */
+  private def queryTimings(sfDir: String): Seq[(String, Double)] = {
+    val spark = LocalSession()
+    try {
       try {
-        var r = probe()
-        while (r < ref * frac && consumedNs + (System.nanoTime() - t0) < budgetNs) {
-          rests += 1
-          System.err.println(f"[bench] gate: probe $r%.0f < ${ref * frac}%.0f docs/s, resting ${restS}s")
-          Thread.sleep(restS * 1000L)
-          r = probe()
-        }
-      } finally consumedNs += System.nanoTime() - t0
-    }
-    private def probe(): Double = {
-      // best-of-4 in one JVM: a single short run is ±25% scheduler noise;
-      // the max over 4 is a stable entitlement signal (measured)
-      val r = extractionRate(8, warmCorpus, warmCorpus, probeDocs, reps = 4)
-      probeRates += r
-      r
-    }
-    /** One budget-accounted probe, recorded in the trace — the post-pair
-      * contamination check (see `measurePair`). Returns None once the
-      * gating budget is spent, so post-pair probing stays inside the same
-      * consumed-time bound as pre-pair gating (each probe is a ~12-20 s
-      * child-JVM run; an unbounded probe count would break the bench's
-      * ~10 min envelope). */
-    def probeOnce(): Option[Double] = {
-      if (ref <= 0 || consumedNs >= budgetNs) return None
-      val t0 = System.nanoTime()
-      try Some(probe()) finally consumedNs += System.nanoTime() - t0
-    }
-    /** Rest once, then gate normally — the contamination-retry recovery
-      * path. The unconditional rest guarantees the re-run never starts
-      * on the very pool state the post-pair probe just flagged, even
-      * when the gating budget is spent (await() would then no-op); the
-      * follow-up await() does the probe-until-healthy part while budget
-      * remains. */
-    def restAndAwait(): Unit = {
-      Thread.sleep(restS * 1000L)
-      await()
-    }
-    def json: String =
-      s"""{"probe_ref":${f"$ref%.1f"},"threshold_frac":$frac,""" +
-        s""""rests":$rests,"probe_rates":${probeRates.map(r => f"$r%.1f").mkString("[", ",", "]")}}"""
-  }
-
-  /** Measure one N→4N pair `rounds` times (unconditionally). The sandbox VM
-    * is credit-throttled (BASELINE.md addendum): absolute rates swing with
-    * the entitlement state, so efficiency is computed per PAIR of adjacent
-    * runs (both see the same entitlement) and the MEDIAN pair efficiency is
-    * reported — the global throttle cancels in the ratio. Pair order
-    * alternates so the side that runs first on fresher credits alternates;
-    * rates reported are the best observed per level. True median: odd pair
-    * counts use the middle; even counts average the two middles (a 2-pair
-    * upper-middle is really the max — round-1 verdict item 6a). */
-  private def measurePair(nLow: Int, numDocs: Int, rounds: Int, restS: Int,
-      gate: Option[Gate] = None, maxRetries: Int = 0): Scaling = {
-    require(rounds >= 1, s"measurePair needs rounds >= 1, got $rounds")
-    val nHigh = nLow * 4
-    var rateLow = 0.0
-    var rateHigh = 0.0
-    var retriesLeft = maxRetries
-    val pairEffs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val discarded = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // The hypervisor's CPU-credit pool refills at roughly half the host's
-    // cores (BASELINE.md addendum); the LOW leg runs under that rate and is
-    // immune to pool state, but a HIGH leg started on a drained pool is
-    // capped at the refill rate — r3 measured exactly that signature
-    // (pairs 0.40/0.57/0.55 ≈ refill/8 on a post-test-suite host, with the
-    // SAME code at 0.83+ rested). So rest immediately before EVERY high
-    // leg: the burst pool (rest seconds × refill rate) then covers the
-    // high leg's full cpu-seconds, making the ratio measure the JOB's
-    // scaling rather than the hypervisor's bucket level.
-    val hiRestS = sys.env.getOrElse("GRAFT_BENCH_HI_REST_S", "45").toInt
-    def onePair(reversed: Boolean): (Double, Double) = {
-      def hiLeg(): Double = {
-        Thread.sleep(hiRestS * 1000L)
-        extractionRate(nHigh, numDocs)
+        spark.read.parquet(s"$sfDir/nation.parquet").write.format("noop").mode("overwrite").save()
+        Queries.prepareIndexes(spark, sfDir)
+      } catch { case _: Throwable => () }
+      Queries.all.toSeq.sortBy(_._1).map { case (name, fn) =>
+        def exec(): Boolean =
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+          }
+        val warmOk = exec()
+        val t0 = System.nanoTime()
+        name -> (if (warmOk && exec()) (System.nanoTime() - t0) / 1e9 else -1.0)
       }
-      if (!reversed) {
-        val l = extractionRate(nLow, numDocs); val h = hiLeg(); (l, h)
-      } else {
-        val h = hiLeg(); val l = extractionRate(nLow, numDocs); (l, h)
-      }
-    }
-    for (r <- 0 until rounds) {
-      if (r > 0) Thread.sleep(restS * 1000L)
-      gate.foreach(_.await()) // only start a pair on a healthy credit pool
-      var (lo, hi) = onePair(r % 2 == 1)
-      // POST-pair contamination probe (round-4 verdict item 3): the pool
-      // can drain DURING a pair (its own legs burn it), capping the high
-      // leg and dragging the ratio below the job's true scaling. If the
-      // post-pair probe shows a drained pool, discard the reading, rest
-      // until the gate passes, and re-run the pair ONCE. The decision
-      // conditions ONLY on the probe (pool state), never on the measured
-      // efficiency — an efficiency-conditioned retry would be optional-
-      // stopping bias (round-1 verdict); a sick-pool reading is a known
-      // instrument failure, and both the discarded efficiencies and the
-      // probe trace are reported in the JSON.
-      val contaminated = gate match {
-        case Some(g) if retriesLeft > 0 =>
-          g.probeOnce().exists(_ < g.ref * g.frac)
-        case _ => false
-      }
-      if (contaminated) {
-        retriesLeft -= 1
-        discarded += (hi / lo) / (nHigh.toDouble / nLow)
-        System.err.println(f"[bench] pair $r ran on a drained pool " +
-          f"(post-pair probe below gate threshold) — resting and re-running")
-        gate.foreach(_.restAndAwait())
-        val p2 = onePair(r % 2 == 1)
-        lo = p2._1; hi = p2._2
-      }
-      rateLow = math.max(rateLow, lo)
-      rateHigh = math.max(rateHigh, hi)
-      pairEffs += (hi / lo) / (nHigh.toDouble / nLow)
-    }
-    val s = pairEffs.sorted
-    val median =
-      if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    Scaling(nLow, nHigh, rateLow, rateHigh, median, pairEffs.toSeq, discarded.toSeq)
-  }
-
-  /** Full JSON string escape (backslash, quote, all control chars) — the
-    * contract line must stay parseable no matter what an exception message
-    * contains (a bare replace of quotes only would emit invalid escapes
-    * like \d from regex fragments in Spark errors). */
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  private def scalingJson(s: Scaling): String = {
-    val pairs = s.pairEffs.map(e => f"$e%.3f").mkString("[", ",", "]")
-    val disc =
-      if (s.discardedEffs.isEmpty) ""
-      else s""","discarded_sick_pool":${s.discardedEffs.map(e => f"$e%.3f").mkString("[", ",", "]")}"""
-    s"""{"n_cores":${s.nLow},"docs_per_sec_n":${f"${s.rateLow}%.1f"},""" +
-      s""""four_n_cores":${s.nHigh},"docs_per_sec_4n":${f"${s.rateHigh}%.1f"},""" +
-      s""""efficiency":${f"${s.efficiency}%.3f"},"pair_efficiencies":$pairs$disc}"""
+    } finally spark.stop()
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val numDocs = sys.env.getOrElse("GRAFT_BENCH_DOCS", "400000").toInt
-    // 3 primary pairs (true median needs ≥3); ONE 8→32 diagnostic pair
-    // (it measures the hypervisor entitlement cap, not the job — see
-    // BASELINE.md; one pair documents it without stretching total wall
-    // past a prudent ~9 min envelope for the driver-run bench).
-    val rounds = sys.env.getOrElse("GRAFT_BENCH_ROUNDS", "3").toInt
-    val rounds2 = sys.env.getOrElse("GRAFT_BENCH_ROUNDS_8_32", "1").toInt
-    // Primary pair default is 1→4 (round 3): the credit-throttled VM
-    // sustains ~4.5-5 cores' worth of cycles, so BOTH legs of 1→4 run
-    // fully granted and the ratio measures the JOB — same-hour same-code
-    // evidence: 1→4 median 0.803 (pairs to 0.912) while 2→8 read 0.673
-    // because its 8-core leg is entitlement-capped. 2→8 history and the
-    // 8→32 diagnostic stay reported (BASELINE.md three-point story).
-    // inter-pair rest is short: pool health for the HIGH legs is owned by
-    // the per-leg rest inside measurePair (GRAFT_BENCH_HI_REST_S), which is
-    // where the credit pool actually matters — the low leg runs below the
-    // refill rate and doesn't care
-    val restS = sys.env.getOrElse("GRAFT_BENCH_REST_S", "15").toInt
-    val nLow = sys.env.getOrElse("GRAFT_BENCH_N", "1").toInt
-    // stored rested-host reference for the 8-core probe (docs/s on the warm
-    // corpus). Measured on this host class rested; env-overridable when the
-    // host changes. 0 disables gating.
-    val probeRef = sys.env.getOrElse("GRAFT_BENCH_PROBE_REF", ProbeRefDefault).toDouble
-    val probeFrac = sys.env.getOrElse("GRAFT_BENCH_PROBE_FRAC", "0.82").toDouble
-    val gateRestS = sys.env.getOrElse("GRAFT_BENCH_GATE_REST_S", "40").toInt
-    // global cap on ALL gating (rests + probes): typical healthy-host cost
-    // is one ~12 s probe per pair; the cap keeps the worst case (pool never
-    // recovers) inside the bench's ~10 min envelope with the query phase.
-    // Shorter than round 3's 240 s: the per-high-leg rest now does the
-    // targeted recovery, the gate only avoids catastrophic starts (its own
-    // probes burn the pool they measure — r3 saw probes DEGRADE 21k→12.5k
-    // across one gate session on a deeply drained host)
-    val gateDeadlineS = sys.env.getOrElse("GRAFT_BENCH_GATE_DEADLINE_S", "120").toInt
-
-    // --- scaling (fault-isolated: a failed phase must not swallow the JSON)
-    var primary: Option[Scaling] = None
-    var contract: Option[Scaling] = None
-    var scalingErr: Option[String] = None
-    var gateOpt: Option[Gate] = None
-    try {
-      ensureCorpus(numDocs)
-      // The gate replaces round 2's fixed 90 s pre-rest: the driver benches
-      // right after its heavy correctness phase, when the credit pool is
-      // drained (measured: 0.72 median efficiency right after sustained
-      // load vs 0.89-0.93 rested; a 1M-doc corpus generation immediately
-      // before a pair measured 0.16). Rather than hoping one fixed rest is
-      // enough, probe-and-rest until the pool demonstrably supports the
-      // 8-core side, before EVERY primary pair.
-      val gate = new Gate(probeRef, probeFrac, gateRestS,
-        gateDeadlineS * 1000000000L,
-        math.max(numDocs / 10, 1000))
-      gateOpt = Some(gate)
-      // bounded post-pair contamination retries (round-4 verdict item 3):
-      // one sick pair on an otherwise-healthy host can't drag the median
-      // below the bar; the retry decision is probe-conditioned only
-      val pairRetries = sys.env.getOrElse("GRAFT_BENCH_PAIR_RETRIES", "2").toInt
-      primary = Some(measurePair(nLow, numDocs, rounds, restS, Some(gate),
-        maxRetries = pairRetries))
-      if (rounds2 > 0) {
-        Thread.sleep(restS * 1000L)
-        contract = Some(measurePair(8, numDocs, rounds2, restS))
-      }
-    } catch {
-      case e: Throwable =>
-        scalingErr = Some(e.getMessage)
+    val nproc = math.min(LocalSession.cores, Runtime.getRuntime.availableProcessors)
+    val (runs, error) =
+      try (measure(plan(nproc)._1), None)
+      catch { case e: Throwable =>
         System.err.println(s"[bench] scaling phase failed: ${e.getMessage}")
-    }
-
-    // --- per-query timings (GRAFT_BENCH_SKIP_QUERIES=1: dev knob for
-    // iterating on the scaling phase without paying the ~2 min query pass)
-    val timings: Seq[(String, Double)] =
-      if (sys.env.get("GRAFT_BENCH_SKIP_QUERIES").contains("1")) Nil
-      else try {
-        val spark = LocalSession(cpus, cpus)
-        // session warmup so the first timed query doesn't absorb one-time
-        // session costs (~6 s measured: scheduler spin-up, codegen infra,
-        // noop-sink + parquet reader init) — round-1's alphabetically-first
-        // query (ann_ivf) looked 10.7 s when its steady-state is ~1 s.
-        // ANN index construction is also hoisted here: it's a one-time
-        // layout cost, and leaving it inside the first *_indexed timing
-        // would measure the build, not the pruned-scan query.
-        try {
-          spark.read.parquet(s"$sfDir/nation.parquet")
-            .write.format("noop").mode("overwrite").save()
-          Queries.prepareIndexes(spark, sfDir)
-        } catch { case _: Throwable => () }
-        // Each query gets ONE untimed warm execution, then the timed run —
-        // the reported number is steady-state throughput, not Janino
-        // compile + one-time per-plan setup (round-2 verdict item 4:
-        // ann_ivf read 5.9 s in the driver bench vs ~1 s steady because the
-        // cold run paid codegen compile + quantizer sample training; in
-        // prod those amortize over every execution of the query).
-        try Queries.all.toSeq.sortBy(_._1).map { case (name, fn) =>
-          def exec(): Unit =
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val warmOk = try { exec(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-          }
-          val t0 = System.nanoTime()
-          val ok = warmOk && (try { exec(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-          })
-          name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-        } finally spark.stop()
-      } catch { case e: Throwable =>
+        (Nil, Some(String.valueOf(e.getMessage)))
+      }
+    val timings =
+      try queryTimings(sfDir)
+      catch { case e: Throwable =>
         System.err.println(s"[bench] query phase failed: ${e.getMessage}")
         Nil
       }
-
-    val qs = timings.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
     val totalSec = timings.filter(_._2 >= 0).map(_._2).sum
-    val head = primary.getOrElse(Scaling(nLow, nLow * 4, 0, 0, 0, Nil))
-    // headline throughput = the 8-CORE leg's best observed rate — one FIXED
-    // level, so round-over-round comparisons are like-for-like (round-3
-    // advice: the previous max() over several noisy levels upward-biased
-    // the headline). Every measured level's best rate is exposed in
-    // "rates" and "headline_level" names the level behind "value"; if no
-    // 8-core leg ran (GRAFT_BENCH_ROUNDS_8_32=0) the primary pair's high
-    // leg is reported and labeled as such.
-    val levelRates = scala.collection.mutable.SortedMap.empty[Int, Double]
-    def record(level: Int, rate: Double): Unit =
-      if (rate > 0) levelRates(level) = math.max(levelRates.getOrElse(level, 0.0), rate)
-    primary.foreach { p => record(p.nLow, p.rateLow); record(p.nHigh, p.rateHigh) }
-    contract.foreach { c => record(c.nLow, c.rateLow); record(c.nHigh, c.rateHigh) }
-    val headlineLevel =
-      if (levelRates.contains(8)) 8 else head.nHigh
-    val headline = levelRates.getOrElse(headlineLevel, 0.0)
-    val ratesJson = levelRates
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.1f" }.mkString("{", ",", "}")
-    // Per-query timings go on their OWN stdout line (plus bench_out.json):
-    // the driver parses the contract JSON from the last ~2000 chars of
-    // stdout, and round 4's single line (59 query timings + scaling +
-    // calibration) outgrew that window — the tail started mid-JSON and the
-    // round's bench record parsed null. The FINAL line now carries only
-    // the headline + scaling + calibration payload (measured ~900 chars,
-    // comfortable headroom), with the timings printed just before it.
+    val qs = timings.map { case (k, v) => f"${Json.str(k)}:$v%.3f" }.mkString("{", ",", "}")
     val queriesLine =
-      s"""{"queries":$qs,"queries_total_sec":${f"$totalSec%.2f"},"sf":"$sfDir"}"""
-    val json =
-      s"""{"metric":"docs/sec extraction (interleaved corpus, medium; primary pair local[${head.nHigh}]/local[${head.nLow}], diagnostic local[32]/local[8])",""" +
-      s""""value":${f"$headline%.1f"},"unit":"docs/sec",""" +
-      s""""headline_level":$headlineLevel,"rates":$ratesJson,""" +
-      s""""scaling":${primary.map(p => scalingJson(p).dropRight(1) + s""","num_docs":$numDocs}""").getOrElse("null")},""" +
-      s""""scaling_8_32":${contract.map(scalingJson).getOrElse("null")},""" +
-      s""""calibration":${gateOpt.map(_.json).getOrElse("null")},""" +
-      scalingErr.map { e =>
-        // surrogate-safe truncation: take(200) could cut between a
-        // surrogate pair and the lone high surrogate would make the
-        // contract line invalid JSON — the very failure this split fixes
-        val t = e.take(200)
-        val safe = if (t.nonEmpty && Character.isHighSurrogate(t.last)) t.dropRight(1) else t
-        s""""scaling_error":"${jsonEscape(safe)}","""
-      }.getOrElse("") +
-      s""""queries_total_sec":${f"$totalSec%.2f"},""" +
-      s""""queries_detail":"previous stdout line + bench_out.json","sf":"$sfDir"}"""
+      s"""{"queries":$qs,"queries_total_sec":${f"$totalSec%.2f"},"sf":${Json.str(sfDir)}}"""
+    val json = contractLine(nproc, runs, error, totalSec, sfDir)
     // side artifact for debugging/redundancy; stdout lines are the contract
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"),
       queriesLine + "\n" + json + "\n")

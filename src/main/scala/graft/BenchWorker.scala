@@ -3,46 +3,42 @@ package graft
 import graft.pipeline.{Extract, ExtractConf}
 import graft.sources.Io
 
-/** Child JVM for one scaling measurement: read the pre-materialized parquet
-  * corpus, run the extraction pipeline at `local[cores]`, print the rate.
+/** Child JVM for one level of Bench's pair: `Extract.run` — the call `Main`
+  * makes — at `local[cores]` over the pre-materialized parquet corpus,
+  * into a throwaway output under `outDir`.
   *
   * Launched by `Bench` under `taskset -c 0..cores-1` so the WHOLE JVM —
-  * executor threads, GC threads, JIT — is confined to the advertised core
-  * count, like a real N-core executor host would be. (Without pinning, a
-  * `local[8]` JVM on a 32-core box runs its ~23 GC threads and the JIT on
-  * the idle cores, inflating the low-parallelism rate and understating
-  * scaling efficiency.)
+  * executor threads, GC threads, JIT — is confined to the level's core
+  * count, like a real N-core executor host would be.
   *
-  * The corpus is parquet on disk (written once by Bench, outside timing):
-  * the measurement covers scan → range shuffle → extract → sink, the real
-  * pipeline shape — not synthetic-data generation.
+  * One untimed run over the warm corpus pays the cold JVM's JIT; the timed
+  * run is the main corpus. Its rate is the docs the run reports it wrote
+  * over the wall: unless that equals `numDocs`, the worker prints no rate
+  * and exits 1. The output is deleted after the timed region.
   *
-  * Prints exactly one line: `RATE <docs/sec>`.
+  * Prints exactly one line on success: `RATE <docs/sec>`.
   */
 object BenchWorker {
   def main(args: Array[String]): Unit = {
-    val (coresS, warmPath, mainPath, numDocsS, reps) = args match {
-      case Array(c, w, m, n) => (c, w, m, n, 1)
-      case Array(c, w, m, n, r) => (c, w, m, n, r.toInt)
-    }
-    val cores = coresS.toInt
-    val numDocs = numDocsS.toInt
-    val spark = LocalSession(cores, math.max(cores, 32))
+    val Array(cores, warmPath, mainPath, numDocs, outDir) = args
+    val spark = LocalSession(cores.toInt)
     val conf = ExtractConf(level = "medium", numPartitions = 128)
-    def run(path: String): Unit =
-      Extract.extractDS(spark, Io().readDocs(spark, path), conf = conf)
-        .write.format("noop").mode("overwrite").save()
-    run(warmPath) // cold-JVM JIT warmup (every child is a fresh JVM)
-    // reps > 1 (the calibration PROBE path): best of `reps` runs — a short
-    // probe's single run is scheduler-noise-dominated (±25% measured on a
-    // 2 s region); the max over a few runs is a stable entitlement signal
-    val rate = (0 until reps).map { _ =>
+    def run(in: String, name: String): Extract.Summary =
+      Extract.run(spark, Io().readDocs(spark, in), s"$outDir/$name", conf.copy(runId = name))
+    val (written, secs) = try {
+      run(warmPath, "warm")
       val t0 = System.nanoTime()
-      run(mainPath)
-      numDocs / ((System.nanoTime() - t0) / 1e9)
-    }.max
-    println(f"RATE $rate%.1f")
-    spark.stop()
+      val s = run(mainPath, "main")
+      (s.docsProcessed, (System.nanoTime() - t0) / 1e9)
+    } finally {
+      spark.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outDir))
+    }
+    if (written != numDocs.toLong) {
+      System.err.println(s"[bench] the run wrote $written of $numDocs docs")
+      sys.exit(1)
+    }
+    println(f"RATE ${written / secs}%.1f")
     sys.exit(0)
   }
 }

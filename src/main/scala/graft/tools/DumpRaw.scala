@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Json
 import graft.media.{DeterministicMediaStore, DeterministicOcr}
 import graft.pipeline.{ExtractConf, ExtractKernel, Fixtures}
 import java.nio.file.{Files, Paths}
@@ -16,28 +17,19 @@ import java.nio.file.{Files, Paths}
   */
 object DumpRaw {
 
-  private def esc(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def dumpJson(level: String): String = {
     val conf = ExtractConf(level = level)
     val docs = Fixtures.testDocs.map { d =>
       val pages = ExtractKernel.plan(d, DeterministicMediaStore, conf)
         .flatMap(u => ExtractKernel.rawPages(u, DeterministicMediaStore, DeterministicOcr, conf))
       val pagesJson = pages.map { p =>
-        s"""{"kind":${esc(p.kind)},"media_ref":${esc(p.media_ref)},"in_offset":${p.in_offset},""" +
-          s""""page":${p.page},"keep_empty":${p.keepEmpty},"passes":[${p.passes.map(esc).mkString(",")}]}"""
+        s"""{"kind":${Json.str(p.kind)},"media_ref":${Json.str(p.media_ref)},""" +
+          s""""in_offset":${p.in_offset},"page":${p.page},"keep_empty":${p.keepEmpty},""" +
+          s""""passes":${p.passes.map(Json.str).mkString("[", ",", "]")}}"""
       }.mkString("[", ",", "]")
-      s"""{"doc_id":${esc(d.doc_id)},"pages":$pagesJson}"""
+      s"""{"doc_id":${Json.str(d.doc_id)},"pages":$pagesJson}"""
     }.mkString("[", ",", "]")
-    s"""{"level":${esc(level)},"docs":$docs}"""
+    s"""{"level":${Json.str(level)},"docs":$docs}"""
   }
 
   def main(args: Array[String]): Unit = {
