@@ -4,13 +4,13 @@ import graft.media.{DeterministicMediaStore, DeterministicOcr, MediaStore, OcrEn
 import graft.model._
 import graft.sources.DriverParquet
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
 
 import scala.collection.mutable
-import scala.concurrent.{Await, ExecutionContext, Future, Promise}
-import scala.concurrent.duration.Duration
 
 /** The batch extraction pipeline (SURVEY.md §3.4) — the Spark-native
   * replacement for the reference's request loop, designed for a
@@ -22,29 +22,29 @@ import scala.concurrent.duration.Duration
   *               the size guard is on) → per doc byte estimate + page
   *               estimate, Σ pages accumulated → keep only the TAIL
   *               (over-size docs, docs above the skewPageThreshold floor)
-  *               → bounded collect (≤ megaInlineCap rows reach the driver)
+  *               → persisted; ≤ megaInlineCap rows reach the driver
   * [mega cut]    on the driver: share = max(floor, Σ pages ÷ max(pass
   *               partitions, defaultParallelism)) — one task's fair
   *               share; megas = the tail docs of every pass partition
   *               whose tail docs together hold more pages than it
-  * [common path] scan → mapPartitions(skip rejected + mega ids, kernel)
+  * [common path] scan → mapPartitions(skip rejected + megas, kernel)
   *               → DocOut — a SINGLE STAGE: no shuffle anywhere between
   *               the source and the sink
-  * [skew path]   scan filtered by doc_id IN (megas)   // predicate pushed
-  *               → flatMap(salted page-range WorkUnits)   // to row-group
-  *               → repartition(doc_id, salt)              // skipping
+  * [skew path]   scan of the megas → flatMap(salted page-range WorkUnits)
+  *               → repartition(doc_id, salt)
   *               → mapPartitions(kernel) → groupByKey(doc_id) → merge
   * union → observe(metrics) → idempotent append
   * [lineage]     on the driver: the deduped rows, one parquet file, no job
-  *               (the inline tier's rejected docs, collected with the
-  *               tail, are written the same way before extraction)
   * }}}
   *
-  * With no mega the skew path is not planned at all: a run is two jobs,
-  * the tail pass and one zero-shuffle write; the driver commits lineage.
+  * Where the tail is held depends only on its size: on the driver (a
+  * broadcast skip set, a pushed `doc_id IN` filter for the megas), or in
+  * the persisted pass (anti- and semi-joins). With nothing to skip, a run
+  * is two jobs: the tail pass and one zero-shuffle write.
   *
   * Scale properties:
-  *  - The expensive extraction runs exactly once per page either way.
+  *  - The expensive extraction runs exactly once per page either way, and
+  *    the metadata pass is evaluated once per run.
   *  - ~99.9% of docs take the common path, which is embarrassingly
   *    parallel: scan → extract → write with ZERO shuffles. (An earlier
   *    design range-shuffled the full input first so both branches could
@@ -54,20 +54,16 @@ import scala.concurrent.duration.Duration
   *    scan instead.)
   *  - The size guard and the skew probe share that one pass: the input is
   *    scanned once before extraction, not once per guard.
-  *  - Only the mega-doc slice pays a shuffle, and its input scan prunes to
-  *    almost nothing via the pushed `doc_id IN (...)` filter (parquet
-  *    row-group stats). Units spread over (doc_id, salt) so no single task
-  *    owns a 256-page doc (SURVEY.md §4.2 salting).
+  *  - Only the mega-doc slice pays a shuffle. Units spread over
+  *    (doc_id, salt) so no single task owns a 256-page doc (SURVEY.md §4.2
+  *    salting).
   *  - The skew threshold is a TAIL bound: docs above `skewPageThreshold`
   *    are salted only when those one task reads hold, together, more
   *    pages than one task's fair share of the pass's measured page load
   *    (one doc over the share, or many smaller ones clustered in one
   *    input partition). Otherwise they stay in the common path, where
   *    `extractWhole` plans and merges their units inside one task (same
-  *    output), and no task carries more than a share of them. Ordinary size
-  *    variance is absorbed by tasks; the broadcast tail-id set stays tiny
-  *    by construction (guarded: a tail larger than `megaInlineCap` falls
-  *    back to distributed writes and semi/anti joins against the floor).
+  *    output), and no task carries more than a share of them.
   *  - OCR engine init is amortized once per partition inside
   *    `mapPartitions` (the reference pays a subprocess spawn per page pass,
   *    `main.py:229`).
@@ -86,53 +82,57 @@ object Extract {
       byteCount: Long,
       lineage: Seq[LineageRow])
 
-  /** The tail of one metadata pass, small enough for the driver: docs the
-    * size guard rejects `(doc_id, byte_est)` and the mega doc ids. */
-  private final case class Tail(rejected: Seq[(String, Long)], megas: Seq[String])
+  /** One row of the metadata pass: a doc the size guard rejects, or one
+    * whose page estimate exceeds the `skewPageThreshold` floor; `part` is
+    * the pass partition that read it. */
+  private[graft] final case class TailRow(doc_id: String, byte_est: Long, rejected: Boolean,
+      pages: Int, part: Int)
+
+  /** The metadata pass, run once. `rows` are its rows on the driver: all
+    * of them when at most `megaInlineCap`, none when it skips no doc; else
+    * extraction joins against `pass`, which stays persisted. `heavy` are the
+    * pass partitions whose non-rejected rows hold more pages than max(floor,
+    * one task's share); `scanned` and `rejected` count the pass's docs. */
+  private final case class Tail(pass: Dataset[TailRow], rows: Option[Seq[TailRow]],
+      heavy: Set[Int], scanned: Long, rejected: Long)
 
   /** Pure transformation: docs → extracted docs. No I/O; callers choose
     * source/sink. `store`/`engine` must be serializable singletons or
-    * lightweight factories (shipped to executors). */
+    * lightweight factories (shipped to executors). When the tail outgrew
+    * `megaInlineCap` and holds a mega, the returned Dataset joins against
+    * the persisted metadata pass: it reads that cache, which stays until
+    * it is unpersisted (`spark.catalog.clearCache()`). */
   def extractDS(
       spark: SparkSession,
       docs: Dataset[Doc],
       store: MediaStore = DeterministicMediaStore,
       engine: OcrEngine = DeterministicOcr,
       conf: ExtractConf = ExtractConf(),
-      lineageAcc: Option[CollectionAccumulator[LineageRow]] = None): Dataset[DocOut] = {
+      lineageAcc: Option[CollectionAccumulator[LineageRow]] = None): Dataset[DocOut] =
     // no size term: the pass reads only doc_id + spans.{kind,media_ref}
-    val pageLoad = spark.sparkContext.longAccumulator("tail pass pages")
-    val pass = tailPass(spark, docs, store, conf, maxBytes = None, pageLoad = Some(pageLoad))
-    extractTiered(spark, docs, pass, collectTail(spark, pass, pageLoad, conf),
+    extractTiered(spark, docs, readTail(spark, docs, store, conf, maxBytes = None),
       store, engine, conf, lineageAcc)
-  }
 
-  /** Extraction given the metadata pass over `docs` and, when it fit the
-    * inline cap, its collected tail. */
+  /** Extraction given the metadata pass over `docs`. */
   private def extractTiered(
       spark: SparkSession,
       docs: Dataset[Doc],
-      pass: DataFrame,
-      tail: Option[Tail],
+      tail: Tail,
       store: MediaStore,
       engine: OcrEngine,
       conf: ExtractConf,
       lineageAcc: Option[CollectionAccumulator[LineageRow]]): Dataset[DocOut] = {
     import spark.implicits._
 
-    val kconf = conf
-    val kstore = store
-    val kengine = engine
-
-    // Tiered by tail size: the thresholds are TAIL bounds, so the expected
-    // case is a tiny tail → skip it through one broadcast set and re-read
-    // the megas behind a pushed-down IN filter (parquet row-group
-    // skipping). A degenerate threshold/corpus falls back to semi/anti
-    // joins against the pass, which scale to any tail size (AQE picks
-    // broadcast vs shuffled by actual size).
-    val megas: Seq[String] = tail.map(_.megas).getOrElse(Nil)
+    // the share rule: a mega is a non-rejected tail doc of a heavy partition
+    val heavy = tail.heavy
+    val mega = (r: TailRow) => !r.rejected && heavy(r.part)
+    val skip = (r: TailRow) => r.rejected || mega(r)
+    // a tail on the driver is skipped through one broadcast set inside the
+    // common path's stage (zero plan impact); a larger one by a left_anti
+    // join against the cached pass (broadcast by AQE when it fits)
     val skipSet = spark.sparkContext.broadcast(
-      tail.map(t => t.rejected.iterator.map(_._1).toSet ++ t.megas).getOrElse(Set.empty[String]))
+      tail.rows.fold(Set.empty[String])(_.iterator.filter(skip).map(_.doc_id).toSet))
 
     def withLineage[T](path: String, docIdOf: T => String, spansOf: T => Seq[Span])(
         it: Iterator[T]): Iterator[T] = lineageAcc match {
@@ -149,7 +149,7 @@ object Extract {
           def hasNext: Boolean = {
             val h = it.hasNext
             if (!h && docs >= 0) {
-              acc.add(LineageRow(kconf.runId, path, pid, Option(minId).getOrElse(""),
+              acc.add(LineageRow(conf.runId, path, pid, Option(minId).getOrElse(""),
                 Option(maxId).getOrElse(""), docs, spans, bytes,
                 (System.nanoTime() - t0) / 1000000))
               docs = -1 // emit once
@@ -171,39 +171,36 @@ object Extract {
     }
 
     // --- common path: SINGLE STAGE scan → extract → (sink); tail skipped.
-    // Inline tier: skip via the broadcast set inside the same stage (zero
-    // plan impact). Fallback tier: left_anti join against the pass (no
-    // driver materialization; broadcast by AQE when it fits).
     val commonIn: Dataset[Doc] =
-      if (tail.isDefined) docs
-      else docs.join(pass.select("doc_id"), Seq("doc_id"), "left_anti").as[Doc]
+      if (tail.rows.isDefined) docs
+      else docs.join(tail.pass.filter(skip).select("doc_id"), Seq("doc_id"), "left_anti").as[Doc]
     val wholeOut: Dataset[DocOut] = commonIn
       .mapPartitions { it =>
         val skip = skipSet.value
         val small = it
           .filter(d => skip.isEmpty || !skip.contains(d.doc_id))
-          .map(d => ExtractKernel.extractWhole(d, kstore, kengine, kconf))
+          .map(d => ExtractKernel.extractWhole(d, store, engine, conf))
         withLineage[DocOut]("common", _.doc_id, _.spans)(small)
       }
 
-    if (tail.isDefined && megas.isEmpty) return wholeOut
+    if (tail.heavy.isEmpty) return wholeOut
 
-    // --- skew path: re-read ONLY the mega docs — inline tier: pushed-down
-    //     IN filter (parquet row-group skipping makes this scan near-free);
-    //     fallback tier: left_semi join (scan not row-group-pruned, the
-    //     documented cost of a degenerate tail). Then split into salted
-    //     page-range units, spread, extract, reassemble.
-    val megaDocs: Dataset[Doc] =
-      if (tail.isDefined)
-        docs.toDF().filter(col("doc_id").isin(megas.map(x => x: Any): _*)).as[Doc]
-      else
-        docs.join(pass.filter(!col("rejected")).select("doc_id"), Seq("doc_id"), "left_semi").as[Doc]
+    // --- skew path: re-read ONLY the mega docs — behind a pushed-down IN
+    //     filter (parquet row-group skipping), or a left_semi join against
+    //     the cached pass. Then split into salted page-range units, spread,
+    //     extract, reassemble.
+    val megaDocs: Dataset[Doc] = tail.rows match {
+      case Some(rows) =>
+        docs.toDF().filter(col("doc_id").isin(rows.filter(mega).map(r => r.doc_id: Any): _*)).as[Doc]
+      case None =>
+        docs.join(tail.pass.filter(mega).select("doc_id"), Seq("doc_id"), "left_semi").as[Doc]
+    }
 
     val saltedOut: Dataset[DocOut] = megaDocs
-      .flatMap(d => ExtractKernel.plan(d, kstore, kconf))
+      .flatMap(d => ExtractKernel.plan(d, store, conf))
       .repartition(conf.numPartitions, col("doc_id"), col("salt"))
       .mapPartitions { it =>
-        it.map(u => ExtractKernel.extractUnit(u, kstore, kengine, kconf))
+        it.map(u => ExtractKernel.extractUnit(u, store, engine, conf))
       }
       .groupByKey(_.doc_id)
       .mapGroups { (id, us) => ExtractKernel.merge(id, us.toSeq) }
@@ -212,88 +209,100 @@ object Extract {
     wholeOut.union(saltedOut)
   }
 
-  /** The metadata pass: one row `(doc_id, byte_est, rejected, pages)` per
-    * TAIL doc — rejected by the size guard (`maxBytes`), or one whose page
-    * estimate exceeds the `skewPageThreshold` floor. Relational column
-    * extraction, so a parquet/Iceberg source reads only doc_id + spans.kind
-    * + spans.media_ref (+ spans.text lengths with the size term); nested
+  /** The metadata pass: one `TailRow` per TAIL doc — rejected by the size
+    * guard (`maxBytes`), or one whose page estimate exceeds the
+    * `skewPageThreshold` floor. Relational column extraction, so a
+    * parquet/Iceberg source reads only doc_id + spans.kind +
+    * spans.media_ref (+ spans.text lengths with the size term); nested
     * schema pruning skips the text payload when `maxBytes` is None. A
     * rejected doc never reaches the page estimate, exactly as when the
     * size guard ran first. `scanned` counts every doc the pass reads;
     * `pageLoad` sums the page estimates of the docs it does not reject. */
   private[graft] def tailPass(spark: SparkSession, docs: Dataset[Doc], store: MediaStore,
       conf: ExtractConf, maxBytes: Option[Long],
-      scanned: Option[LongAccumulator] = None,
-      pageLoad: Option[LongAccumulator] = None): DataFrame = {
+      scanned: LongAccumulator, pageLoad: LongAccumulator): Dataset[TailRow] = {
     import spark.implicits._
-    val kstore = store
     val floor = conf.skewPageThreshold
     val limit = maxBytes.getOrElse(Long.MaxValue)
     docs.toDF()
       .select(col("doc_id"), col("spans.kind").as("kinds"), col("spans.media_ref").as("refs"),
         maxBytes.fold(lit(0L))(_ => byteEst(store)))
       .as[(String, Seq[String], Seq[String], Long)]
-      .flatMap { case (id, kindsOrNull, refsOrNull, bytes) =>
-        scanned.foreach(_.add(1))
-        if (bytes > limit) Some((id, bytes, true, 0))
-        else {
-          val kinds = Option(kindsOrNull).getOrElse(Nil)
-          val refs = Option(refsOrNull).getOrElse(Nil)
-          val pages = kinds.iterator.zip(refs.iterator).map {
-            case ("pdf", r) if r != null && r.nonEmpty => kstore.pageCount(r)
-            case _ => 1
-          }.sum
-          pageLoad.foreach(_.add(pages))
-          if (pages > floor) Some((id, bytes, false, pages)) else None
+      .mapPartitions { it =>
+        val part = TaskContext.getPartitionId()
+        it.flatMap { case (id, kindsOrNull, refsOrNull, bytes) =>
+          scanned.add(1)
+          if (bytes > limit) Some(TailRow(id, bytes, rejected = true, 0, part))
+          else {
+            val kinds = Option(kindsOrNull).getOrElse(Nil)
+            val refs = Option(refsOrNull).getOrElse(Nil)
+            val pages = kinds.iterator.zip(refs.iterator).map {
+              case ("pdf", r) if r != null && r.nonEmpty => store.pageCount(r)
+              case _ => 1
+            }.sum
+            pageLoad.add(pages)
+            if (pages > floor) Some(TailRow(id, bytes, rejected = false, pages, part)) else None
+          }
         }
       }
-      .toDF("doc_id", "byte_est", "rejected", "pages")
   }
 
-  /** Runs `pass` as ONE Spark job and returns its tail while it has at most
-    * `megaInlineCap` rows; None as soon as more arrive (the job is
-    * cancelled then). Each partition ships at most `cap + 1` rows, so
-    * driver memory and task-result bytes stay O(cap) for any tail size.
-    * Of the docs the pass kept for their pages, those of one pass
-    * partition are megas when together they hold more than one task's
-    * fair share of `pageLoad` (and more than the floor). */
-  private def collectTail(spark: SparkSession, pass: DataFrame, pageLoad: LongAccumulator,
-      conf: ExtractConf): Option[Tail] = {
-    import spark.implicits._
-    val cap = conf.megaInlineCap
-    val rdd = pass.as[(String, Long, Boolean, Int)].rdd
-    val rows = mutable.ArrayBuffer.empty[(Int, (String, Long, Boolean, Int))] // (partition, row)
-    val overflow = Promise[Unit]()
+  /** Runs the metadata pass over `docs` as ONE Spark job that always
+    * finishes, and keeps it persisted for the joins. Each task returns its
+    * tail count, rejected count and non-rejected pages, and its rows only
+    * when they number at most ⌈`megaInlineCap` / tasks⌉: the driver receives
+    * fewer than `megaInlineCap` + tasks rows at any tail size. A tail that
+    * fits the cap reads the rows of the tasks over that quota back from the
+    * cache. The cache is released at once unless a join will read it. */
+  private def readTail(spark: SparkSession, docs: Dataset[Doc], store: MediaStore,
+      conf: ExtractConf, maxBytes: Option[Long]): Tail = {
+    val sc = spark.sparkContext
+    val scanned = sc.longAccumulator("tail pass docs")
+    val pageLoad = sc.longAccumulator("tail pass pages")
+    val pass = tailPass(spark, docs, store, conf, maxBytes, scanned, pageLoad).persist()
+    // the jobs read the cache's own rows: a planned read of a cached plan with
+    // an exchange (a resumed run's anti-join) builds it in a job of its own
+    val cache = spark.sharedState.cacheManager.lookupCachedData(castToImpl(pass)).get
+      .cachedRepresentation
+    val enc = ExpressionEncoder[TailRow]().resolveAndBind(cache.output)
+    val rdd = cache.cacheBuilder.serializer.convertCachedBatchToInternalRow(
+      cache.cacheBuilder.cachedColumnBuffers, cache.output, cache.output, spark.sessionState.conf)
+      .mapPartitions(it => it.map(enc.createDeserializer()))
+    val n = rdd.getNumPartitions
+    val quota = ((conf.megaInlineCap.toLong + n - 1) / math.max(n, 1)).toInt
+    val counts, pages = new Array[Long](n)
+    var rejected = 0L
+    val held = mutable.ArrayBuffer.empty[TailRow]
     // the handler runs on the scheduler thread, serialized per job
-    val job = spark.sparkContext.submitJob[(String, Long, Boolean, Int), Array[(String, Long, Boolean, Int)], Unit](rdd,
-      it => it.take(cap + 1).toArray,
-      rdd.partitions.indices,
-      (index, part) => if (!overflow.isCompleted) {
-        rows ++= part.iterator.map(r => (index, r))
-        if (rows.length > cap) overflow.trySuccess(())
+    try sc.runJob(rdd,
+      (it: Iterator[TailRow]) => {
+        val kept = mutable.ArrayBuffer.empty[TailRow]
+        var count, rej, p = 0L
+        it.foreach { r =>
+          count += 1
+          if (r.rejected) rej += 1 else p += r.pages
+          if (count <= quota) kept += r
+        }
+        (count, rej, p, if (count <= quota) kept.toArray else Array.empty[TailRow])
       },
-      ())
-    Await.ready(Future.firstCompletedOf(Seq(job, overflow.future))(ExecutionContext.parasitic),
-      Duration.Inf)
-    if (overflow.isCompleted) {
-      job.cancel()
-      None
-    } else {
-      Await.result(job, Duration.Inf) // rethrows a failed pass
-      // pageLoad is complete: only a partition that reached cap + 1 tail
-      // rows stops reading early, and that overflows
-      val share = pageLoad.value /
-        math.max(rdd.getNumPartitions, spark.sparkContext.defaultParallelism)
-      val threshold = math.max(conf.skewPageThreshold.toLong, share)
-      val (rejected, heavy) = rows.toSeq.partition(_._2._3)
-      // the docs above the floor that one task reads are salted together
-      // once they hold more pages than the share: one such doc, or many
-      // small ones clustered in one input partition
-      val megas = heavy.groupBy(_._1).values
-        .filter(_.map(_._2._4.toLong).sum > threshold)
-        .flatMap(_.map(_._2._1)).toSeq
-      Some(Tail(rejected.map(r => (r._2._1, r._2._2)), megas))
-    }
+      (part: Int, res: (Long, Long, Long, Array[TailRow])) => {
+        counts(part) = res._1
+        rejected += res._2
+        pages(part) = res._3
+        held ++= res._4
+      })
+    catch { case e: Throwable => pass.unpersist(); throw e }
+    // read once: a cached block that is recomputed later adds to the
+    // accumulators again, and must not change a decision
+    val share = pageLoad.value / math.max(n, sc.defaultParallelism)
+    val heavy = pages.indices.filter(pages(_) > math.max(conf.skewPageThreshold.toLong, share)).toSet
+    val over = counts.indices.filter(counts(_) > quota)
+    val rows =
+      if (counts.sum > conf.megaInlineCap) (if (rejected == 0 && heavy.isEmpty) Some(Nil) else None)
+      else if (over.isEmpty) Some(held.toSeq)
+      else Some(held.toSeq ++ sc.runJob(rdd, (it: Iterator[TailRow]) => it.toArray, over).flatten.toSeq)
+    if (rows.isDefined) pass.unpersist()
+    Tail(pass, rows, heavy, scanned.value, rejected)
   }
 
   /** Per-doc byte estimate of the size guard: span text payload plus the
@@ -326,13 +335,12 @@ object Extract {
   }
 
   /** P4 size guard (main.py:51 `MAX_FILE_SIZE`; enforced at
-    * main.py:484-485,619-620,743-745): split docs whose span text payload
+    * main.py:484-485,619-620,743-745): split docs whose byte estimate
     * exceeds `maxBytes` into a rejected side output `(doc_id, byte_est,
     * reason)` BEFORE extraction — the reference 413s a too-large upload
-    * before OCR ever runs. Column-level: the estimate reads only
-    * `spans.text` lengths (stays inside the scan's codegen). `run` does
-    * not call it: its metadata pass finds the rejected docs with the same
-    * estimate. */
+    * before OCR ever runs. Column-level: `spans.text` octet lengths plus a
+    * media `ScalaUDF` over `spans.{kind,media_ref}`. `run` does not call
+    * it: its metadata pass finds the rejected docs with the same estimate. */
   def sizeSplit(spark: SparkSession, docs: Dataset[Doc], maxBytes: Long,
       store: MediaStore = DeterministicMediaStore)
       : (Dataset[Doc], DataFrame) = {
@@ -369,30 +377,23 @@ object Extract {
     // appending would duplicate the audit rows on every retry of the same
     // run. A run that rejects nothing leaves no partition.
     val rejectedPath = s"${outPath}_rejected/run_id=${conf.runId}"
-    val scanned = spark.sparkContext.longAccumulator("tail pass docs")
-    val pageLoad = spark.sparkContext.longAccumulator("tail pass pages")
-    val pass = tailPass(spark, todo, store, conf, Some(conf.maxDocBytes), Some(scanned),
-      Some(pageLoad))
-    // inline tier: also the number of rejected docs
-    val (extracted, rejectedDocs) = collectTail(spark, pass, pageLoad, conf) match {
-      case Some(tail) =>
-        // already on the driver: committed without a job
-        DriverParquet.overwrite(spark, rejectedPath,
-          tail.rejected.map { case (id, bytes) => RejectedDoc(id, bytes, "too_large") })
-        (extractTiered(spark, todo, pass, Some(tail), store, engine, conf, Some(acc)),
-          Some(tail.rejected.length.toLong))
-      case None =>
-        // the tail outgrew the inline cap: the rejected rows come from the
-        // same pass, and extraction skips and salts by joins against it
-        pass.filter(col("rejected"))
-          .select(col("doc_id"), col("byte_est"), lit("too_large").as("reason"))
-          .write.mode(SaveMode.Overwrite).parquet(rejectedPath)
-        (extractTiered(spark, todo, pass, None, store, engine, conf, Some(acc)), None)
-    }
-
+    val tail = readTail(spark, todo, store, conf, Some(conf.maxDocBytes))
     val observed = Observation("extract_metrics")
-    extracted.observe(observed, count(lit(1)).as("docs"))
-      .write.mode(SaveMode.Append).parquet(outPath)
+    try {
+      tail.rows match {
+        case None if tail.rejected > 0 =>
+          tail.pass.filter(col("rejected"))
+            .select(col("doc_id"), col("byte_est"), lit("too_large").as("reason"))
+            .write.mode(SaveMode.Overwrite).parquet(rejectedPath)
+        case rows => // on the driver, or none: committed without a job
+          DriverParquet.overwrite(spark, rejectedPath, rows.getOrElse(Nil).collect {
+            case r if r.rejected => RejectedDoc(r.doc_id, r.byte_est, "too_large")
+          })
+      }
+      extractTiered(spark, todo, tail, store, engine, conf, Some(acc))
+        .observe(observed, count(lit(1)).as("docs"))
+        .write.mode(SaveMode.Append).parquet(outPath)
+    } finally tail.pass.unpersist()
 
     val lineage = {
       import scala.jdk.CollectionConverters._
@@ -406,19 +407,17 @@ object Extract {
     }
     // a few rows, already on the driver: committed without a job
     DriverParquet.append(spark, s"${outPath}_lineage/run_id=${conf.runId}", lineage)
-    // A lost or duplicated lineage update, or (inline tier) a doc the skip
-    // set dropped from both paths, fails the run instead of leaving a
-    // missing row; the lineage written above is the evidence.
+    // A lost or duplicated lineage update, or a doc the skip rule dropped
+    // from both paths, fails the run instead of leaving a missing row; the
+    // lineage written above is the evidence.
     val observedDocs = observed.get("docs").asInstanceOf[Long]
     val lineageDocs = lineage.map(_.doc_count).sum
     if (observedDocs != lineageDocs)
       throw new IllegalStateException(s"run ${conf.runId}: wrote $observedDocs docs " +
         s"but lineage accounts for $lineageDocs")
-    rejectedDocs.foreach { r =>
-      if (scanned.value != observedDocs + r)
-        throw new IllegalStateException(s"run ${conf.runId}: the metadata pass read " +
-          s"${scanned.value} docs, but $observedDocs were written and $r rejected")
-    }
+    if (tail.scanned != observedDocs + tail.rejected)
+      throw new IllegalStateException(s"run ${conf.runId}: the metadata pass read " +
+        s"${tail.scanned} docs, but $observedDocs were written and ${tail.rejected} rejected")
     Summary(conf.runId,
       lineageDocs,
       lineage.map(_.span_count).sum,

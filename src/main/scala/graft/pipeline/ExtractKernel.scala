@@ -22,10 +22,10 @@ final case class ExtractConf(
     // partitions, defaultParallelism)).
     skewPageThreshold: Int = 32,
     runId: String = "run-0",
-    // Mega-id sets up to this size are inlined as a pushed-down IN filter
-    // (parquet row-group skipping) + broadcast set; beyond it the pipeline
-    // falls back to semi/anti joins (no driver-side materialization at
-    // all). ~10k keeps Catalyst IN-list planning cheap (round-1 advice:
+    // A metadata-pass tail of up to this many rows is held on the driver
+    // (a broadcast skip set + the mega ids as a pushed-down IN filter); a
+    // larger one stays in the persisted pass, which extraction semi/anti-
+    // joins. ~10k keeps Catalyst IN-list planning cheap (round-1 advice:
     // planning degrades orders of magnitude below the old 10M guard).
     megaInlineCap: Int = 10000,
     // P4 size guard: docs whose span text payload plus media byte estimate

@@ -4,6 +4,18 @@ import graft.pipeline.{Extract, ExtractConf, Fixtures}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The fixture store, counting its `pageCount` calls (local mode: one JVM). */
+object CountingStore extends graft.media.MediaStore {
+  import graft.media.{DeterministicMediaStore, PageMedia}
+  val pageCounts = new java.util.concurrent.atomic.AtomicLong
+  override def pageCount(ref: String): Int = {
+    pageCounts.incrementAndGet()
+    DeterministicMediaStore.pageCount(ref)
+  }
+  override def page(ref: String, p: Int): PageMedia = DeterministicMediaStore.page(ref, p)
+  override def byteEstimate(ref: String): Long = DeterministicMediaStore.byteEstimate(ref)
+}
+
 /** Physical-plan assertions — the "is this the plan you'd want at 100 TB"
   * checks: predicate pushdown reaches the parquet scan, column pruning
   * shrinks ReadSchema, small dims broadcast, the extraction common path is
@@ -75,8 +87,9 @@ class PlanSpec extends AnyFunSuite {
     Fixtures.testDocsDS(spark).toDF().write.mode("overwrite").parquet(s"$tmp/docs")
     val docs = graft.sources.Io().readDocs(spark, s"$tmp/docs")
     // the metadata pass extractDS runs (no size term)
+    val sc = spark.sparkContext
     val probe = Extract.tailPass(spark, docs, graft.media.DeterministicMediaStore,
-      ExtractConf(), maxBytes = None)
+      ExtractConf(), maxBytes = None, sc.longAccumulator, sc.longAccumulator)
     val plan = probe.queryExecution.executedPlan.toString
     val rs = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(rs.contains("spans:array<struct<kind:string,media_ref:string>>"),
@@ -86,8 +99,9 @@ class PlanSpec extends AnyFunSuite {
 
   /** Runs `body` in its own job group and returns its result with each of
     * its jobs → (the scan it belongs to: its SQL execution, else the job
-    * itself; the input records its stages read). */
-  private def jobsOf[T](body: => T): (T, Map[Int, (String, Long)]) = {
+    * itself; the input records its stages read; the bytes its tasks sent
+    * the driver as results). */
+  private def jobsOf[T](body: => T): (T, Map[Int, (String, Long, Long)]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     import java.util.concurrent.ConcurrentHashMap
     import scala.jdk.CollectionConverters._
@@ -96,6 +110,7 @@ class PlanSpec extends AnyFunSuite {
     val scanOf = new ConcurrentHashMap[Int, String]
     val jobOfStage = new ConcurrentHashMap[Int, Int]
     val recordsRead = new ConcurrentHashMap[Int, Long]
+    val resultBytes = new ConcurrentHashMap[Int, Long]
     val drained = scala.concurrent.Promise[Unit]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -112,6 +127,7 @@ class PlanSpec extends AnyFunSuite {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(jobOfStage.get(e.stageId)).filter(_ => e.taskMetrics != null).foreach { j =>
           recordsRead.merge(j, e.taskMetrics.inputMetrics.recordsRead, (a: Long, b: Long) => a + b)
+          resultBytes.merge(j, e.taskMetrics.resultSize, (a: Long, b: Long) => a + b)
         }
     }
     sc.addSparkListener(listener)
@@ -128,7 +144,53 @@ class PlanSpec extends AnyFunSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    (result, scanOf.asScala.toMap.map { case (j, scan) => j -> (scan, recordsRead.getOrDefault(j, 0L)) })
+    (result, scanOf.asScala.toMap.map { case (j, scan) =>
+      j -> (scan, recordsRead.getOrDefault(j, 0L), resultBytes.getOrDefault(j, 0L)) })
+  }
+
+  test("the tail pass ships the driver fewer than megaInlineCap + tasks rows at any tail size") {
+    import graft.model.{Doc, LineageRow, Span}
+    import org.apache.spark.util.CollectionAccumulator
+    import scala.jdk.CollectionConverters._
+    val spark2 = spark
+    import spark2.implicits._
+    // at floor 0 every doc is in the tail; pass partition p holds sizes(p)
+    def input(sizes: Seq[Int], idBytes: Int) = spark.sparkContext.parallelize(
+      sizes.zipWithIndex.map { case (k, p) =>
+        (0 until k).map(i => Doc(f"$p%d-$i%03d-" + "x" * idBytes, Seq(Span("text", "t", "", 0))))
+      }, sizes.size).flatMap(identity).toDS()
+    val conf = ExtractConf(numPartitions = 4, skewPageThreshold = 0)
+
+    // 80 tail rows over 4 tasks at cap 5: one job, and no task ships rows
+    // (20-kB ids, so the rows would dominate the tasks' result bytes)
+    val idBytes = 20000
+    val (_, jobs) = jobsOf(Extract.extractDS(spark, input(Seq.fill(4)(20), idBytes),
+      conf = conf.copy(megaInlineCap = 5)))
+    val shipped = jobs.values.map(_._3).sum
+    assert(jobs.size == 1, s"the tail pass is one job: $jobs")
+    assert(shipped < (5 + 4) * idBytes, s"the driver received $shipped result bytes")
+    spark.catalog.clearCache() // above the cap, a heavy partition keeps the pass
+
+    // a tail that fits the cap, crowded into one task (35 rows over its
+    // quota of 80 / 4): that task's rows are read back from the cache, and
+    // every mega is on the driver (IN filter, no join)
+    val sizes = Seq(35, 15, 15, 15)
+    val docs = input(sizes, 0)
+    val acc = new CollectionAccumulator[LineageRow]
+    spark.sparkContext.register(acc, "crowded tail")
+    val (ds, readJobs) = jobsOf(Extract.extractDS(spark, docs, conf = conf.copy(megaInlineCap = 80),
+      lineageAcc = Some(acc)))
+    assert(readJobs.size == 2, s"the tail pass and the read-back of one task: $readJobs")
+    val got = ds.collect().map(d => d.doc_id -> d).toMap
+    val plan = ds.queryExecution.executedPlan.toString
+    assert(!plan.contains("LeftSemi") && !plan.contains("LeftAnti"), s"the tail was not inline:\n$plan")
+    val share = sizes.sum / math.max(sizes.size, spark.sparkContext.defaultParallelism)
+    val megas = sizes.filter(_ > share).sum
+    val salted = acc.value.asScala.filter(_.path == "salted").map(_.doc_count).sum
+    assert(megas > 0 && salted == megas, s"$salted docs salted, the heavy partitions hold $megas")
+    docs.collect().foreach(d => assert(got(d.doc_id) ==
+      graft.pipeline.ExtractKernel.extractWhole(d, graft.media.DeterministicMediaStore,
+        graft.media.DeterministicOcr, conf), s"extractDS differs for ${d.doc_id}"))
   }
 
   test("one extraction run: at most 6 jobs; only the tail pass and the main write scan the input") {
@@ -172,19 +234,32 @@ class PlanSpec extends AnyFunSuite {
     val got = ds.collect().map(d => d.doc_id -> d).toMap
     val plan = ds.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"no mega over the share, yet a shuffle:\n$plan")
+    val want = corpus.map(d =>
+      d.doc_id -> ExtractKernel.extractWhole(d, DeterministicMediaStore, DeterministicOcr, conf)).toMap
+    assert(got.size == corpus.size)
+    corpus.foreach(d => assert(got(d.doc_id) == want(d.doc_id), s"extractDS differs for ${d.doc_id}"))
 
-    val out = s"$tmp/out"
-    val (summary, jobs) = jobsOf(Extract.run(spark, docs, out, conf))
-    // the driver commits lineage: no job of its own
-    assert(jobs.size == 2, s"expected the tail pass and the write: $jobs")
-    assert(!summary.lineage.exists(_.path == "salted"), s"salted lineage: ${summary.lineage}")
-    val written = spark.read.parquet(out).as[graft.model.DocOut].collect().map(d => d.doc_id -> d).toMap
-    assert(got.size == corpus.size && written.size == corpus.size)
-    corpus.foreach { d =>
-      val want = ExtractKernel.extractWhole(d, DeterministicMediaStore, DeterministicOcr, conf)
-      assert(got(d.doc_id) == want, s"extractDS differs for ${d.doc_id}")
-      assert(written(d.doc_id) == want, s"Extract.run differs for ${d.doc_id}")
+    // each tier counted: the inline tier (default cap) and the cached tail
+    // (cap 0) evaluate the pass once, so they make the same pageCount calls
+    val pdfSpans = corpus.flatMap(_.spans).count(s => s.kind == "pdf" && s.media_ref.nonEmpty)
+    val calls = Seq(conf, conf.copy(megaInlineCap = 0)).map { c =>
+      val out = s"$tmp/out${c.megaInlineCap}"
+      CountingStore.pageCounts.set(0)
+      val (summary, jobs) = jobsOf(Extract.run(spark, docs, out, c, CountingStore))
+      val n = CountingStore.pageCounts.get
+      if (c.megaInlineCap == 0) // the tail pass and the write, and no join
+        assert(jobs.size <= 3, s"${jobs.size} jobs at megaInlineCap = 0: $jobs")
+      else // the driver commits lineage: no job of its own
+        assert(jobs.size == 2, s"expected the tail pass and the write: $jobs")
+      assert(!summary.lineage.exists(_.path == "salted"), s"salted lineage: ${summary.lineage}")
+      val written = spark.read.parquet(out).as[graft.model.DocOut].collect().map(d => d.doc_id -> d).toMap
+      assert(written.size == corpus.size)
+      corpus.foreach(d => assert(written(d.doc_id) == want(d.doc_id),
+        s"Extract.run differs for ${d.doc_id} at megaInlineCap = ${c.megaInlineCap}"))
+      n
     }
+    assert(calls(1) == calls(0), s"pageCount calls per pdf span: " +
+      s"${calls.map(n => f"${n.toDouble / pdfSpans}%.2f").mkString(" inline, ")} at megaInlineCap = 0")
   }
 
   test("a resumed run starts 4 jobs: no schema-inference job reads the committed ids") {
@@ -499,10 +574,24 @@ class PlanSpec extends AnyFunSuite {
       conf = ExtractConf(numPartitions = 4, megaInlineCap = 0))
     val fallback = ds.collect().map(d => d.doc_id -> d).toMap
     assert(fallback == inline, "fallback tier must produce identical output")
+    spark.catalog.clearCache() // the fallback Dataset reads the persisted pass
     val plan = ds.queryExecution.executedPlan.toString
     assert(!plan.contains("PushedFilters: [In(doc_id"),
       "fallback tier must not inline a literal IN list")
     assert(plan.contains("LeftSemi") || plan.contains("LeftAnti"),
       s"fallback tier should plan semi/anti joins:\n$plan")
+    // the tail side of each join reads the persisted pass, not the input again
+    import org.apache.spark.sql.execution.LeafExecNode
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val tailSides = aqe.collect(ds.queryExecution.executedPlan) { case j: BaseJoinExec => j.right }
+    assert(tailSides.nonEmpty, s"no join:\n$plan")
+    tailSides.foreach { side =>
+      val leaves = aqe.collect(side) { case l: LeafExecNode if !l.isInstanceOf[QueryStageExec] => l }
+      assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[InMemoryTableScanExec]),
+        s"the tail side of a join does not read the cached pass:\n$side")
+    }
   }
 }

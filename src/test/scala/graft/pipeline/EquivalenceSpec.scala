@@ -47,64 +47,70 @@ class EquivalenceSpec extends AnyFunSuite {
     }
   }
 
-  test("a doc exactly at one task's page share is not salted; one page above it is") {
-    val spark = SparkTestBase.spark
-    import spark.implicits._
-    val k = 40 // above the skewPageThreshold floor
-    // one single-pdf doc per task of the pass, so the share is k: the
-    // target holds k (then k + 1) pages, every other doc k
-    val n = spark.sparkContext.defaultParallelism
-    val ids = (1 to n).map(i => Fixtures.docId(8 * i))
-    val docs = ids.map(id => Doc(id, Seq(Span("pdf", "", s"mem://$id/0", 0))))
-    val conf = ExtractConf(numPartitions = 4)
-    assert(k > conf.skewPageThreshold)
-    for (extra <- Seq(0, 1)) {
-      val store = PagesStore(docs.map(d => d.spans.head.media_ref -> k).toMap
-        .updated(docs.head.spans.head.media_ref, k + extra))
-      val acc = new CollectionAccumulator[LineageRow]
-      spark.sparkContext.register(acc, s"share boundary +$extra")
-      val got = Extract.extractDS(spark, spark.createDataset(docs), store, DeterministicOcr, conf,
-        Some(acc)).collect().map(d => d.doc_id -> d).toMap
-      val salted = acc.value.asScala.filter(r => r.path == "salted" && r.doc_count > 0)
-      if (extra == 0) assert(salted.isEmpty, s"a doc at the share was salted: $salted")
-      else {
-        assert(salted.map(_.doc_count).sum == 1 &&
-          salted.forall(r => r.doc_id_min == ids.head && r.doc_id_max == ids.head),
-          s"only the doc one page above the share may be salted: $salted")
-      }
-      docs.foreach { d =>
-        assert(got(d.doc_id) == ExtractKernel.extractWhole(d, store, DeterministicOcr, conf),
-          s"${d.doc_id} differs from extractWhole (+$extra)")
+  // the share rule is the same whether the tail is held on the driver
+  // (default cap) or in the persisted pass (cap 0)
+  for ((tier, cap) <- Seq("" -> ExtractConf().megaInlineCap, " at megaInlineCap = 0" -> 0)) {
+    test(s"a doc exactly at one task's page share is not salted; one page above it is$tier") {
+      val spark = SparkTestBase.spark
+      import spark.implicits._
+      val k = 40 // above the skewPageThreshold floor
+      // one single-pdf doc per task of the pass, so the share is k: the
+      // target holds k (then k + 1) pages, every other doc k
+      val n = spark.sparkContext.defaultParallelism
+      val ids = (1 to n).map(i => Fixtures.docId(8 * i))
+      val docs = ids.map(id => Doc(id, Seq(Span("pdf", "", s"mem://$id/0", 0))))
+      val conf = ExtractConf(numPartitions = 4, megaInlineCap = cap)
+      assert(k > conf.skewPageThreshold)
+      for (extra <- Seq(0, 1)) {
+        val store = PagesStore(docs.map(d => d.spans.head.media_ref -> k).toMap
+          .updated(docs.head.spans.head.media_ref, k + extra))
+        val acc = new CollectionAccumulator[LineageRow]
+        spark.sparkContext.register(acc, s"share boundary +$extra")
+        val got = Extract.extractDS(spark, spark.createDataset(docs), store, DeterministicOcr, conf,
+          Some(acc)).collect().map(d => d.doc_id -> d).toMap
+        val salted = acc.value.asScala.filter(r => r.path == "salted" && r.doc_count > 0)
+        if (extra == 0) assert(salted.isEmpty, s"a doc at the share was salted: $salted")
+        else {
+          assert(salted.map(_.doc_count).sum == 1 &&
+            salted.forall(r => r.doc_id_min == ids.head && r.doc_id_max == ids.head),
+            s"only the doc one page above the share may be salted: $salted")
+        }
+        docs.foreach { d =>
+          assert(got(d.doc_id) == ExtractKernel.extractWhole(d, store, DeterministicOcr, conf),
+            s"${d.doc_id} differs from extractWhole (+$extra)")
+        }
+        spark.catalog.clearCache() // at cap 0 the result read the persisted pass
       }
     }
-  }
 
-  test("megas each under the share are salted together when one input partition holds more") {
-    val spark = SparkTestBase.spark
-    import spark.implicits._
-    val k = 40 // above the skewPageThreshold floor
-    // n + 1 single-pdf docs of k pages over n pass partitions: the share is
-    // (n + 1)k / n ≥ k, so no doc is over it alone, but the partition that
-    // holds two of them (2k) is
-    val n = spark.sparkContext.defaultParallelism
-    val ids = (1 to n + 1).map(i => Fixtures.docId(8 * i))
-    val docs = ids.map(id => Doc(id, Seq(Span("pdf", "", s"mem://$id/0", 0))))
-    val store = PagesStore(docs.map(d => d.spans.head.media_ref -> k).toMap)
-    val conf = ExtractConf(numPartitions = 4)
-    val input = spark.createDataset(docs)
-    val together = input.rdd.glom().collect().map(_.map(_.doc_id).toSet).filter(_.size > 1)
-    assert(together.length == 1 && together.head.size == 2, s"premise: one partition holds two: ${together.toSeq}")
-    val acc = new CollectionAccumulator[LineageRow]
-    spark.sparkContext.register(acc, "clustered megas")
-    val got = Extract.extractDS(spark, input, store, DeterministicOcr, conf, Some(acc))
-      .collect().map(d => d.doc_id -> d).toMap
-    val salted = acc.value.asScala.filter(r => r.path == "salted" && r.doc_count > 0)
-    assert(salted.map(_.doc_count).sum == 2 &&
-      salted.forall(r => together.head(r.doc_id_min) && together.head(r.doc_id_max)),
-      s"exactly the two docs of the crowded partition must be salted: $salted")
-    docs.foreach { d =>
-      assert(got(d.doc_id) == ExtractKernel.extractWhole(d, store, DeterministicOcr, conf),
-        s"${d.doc_id} differs from extractWhole")
+    test(s"megas each under the share are salted together when one input partition holds more$tier") {
+      val spark = SparkTestBase.spark
+      import spark.implicits._
+      val k = 40 // above the skewPageThreshold floor
+      // n + 1 single-pdf docs of k pages over n pass partitions: the share is
+      // (n + 1)k / n ≥ k, so no doc is over it alone, but the partition that
+      // holds two of them (2k) is
+      val n = spark.sparkContext.defaultParallelism
+      val ids = (1 to n + 1).map(i => Fixtures.docId(8 * i))
+      val docs = ids.map(id => Doc(id, Seq(Span("pdf", "", s"mem://$id/0", 0))))
+      val store = PagesStore(docs.map(d => d.spans.head.media_ref -> k).toMap)
+      val conf = ExtractConf(numPartitions = 4, megaInlineCap = cap)
+      val input = spark.createDataset(docs)
+      val together = input.rdd.glom().collect().map(_.map(_.doc_id).toSet).filter(_.size > 1)
+      assert(together.length == 1 && together.head.size == 2, s"premise: one partition holds two: ${together.toSeq}")
+      val acc = new CollectionAccumulator[LineageRow]
+      spark.sparkContext.register(acc, "clustered megas")
+      val got = Extract.extractDS(spark, input, store, DeterministicOcr, conf, Some(acc))
+        .collect().map(d => d.doc_id -> d).toMap
+      val salted = acc.value.asScala.filter(r => r.path == "salted" && r.doc_count > 0)
+      assert(salted.map(_.doc_count).sum == 2 &&
+        salted.forall(r => together.head(r.doc_id_min) && together.head(r.doc_id_max)),
+        s"exactly the two docs of the crowded partition must be salted: $salted")
+      docs.foreach { d =>
+        assert(got(d.doc_id) == ExtractKernel.extractWhole(d, store, DeterministicOcr, conf),
+          s"${d.doc_id} differs from extractWhole")
+      }
+      spark.catalog.clearCache()
     }
   }
 

@@ -185,6 +185,23 @@ class ResumeSpec extends AnyFunSuite {
     assert(inlineSum.docsProcessed == docs.length - rejectedIds.size)
   }
 
+  test("a failed run releases the persisted metadata pass") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val out = Files.createTempDirectory("graft-fail").toFile.getAbsolutePath + "/docs"
+    // page counts work, so the pass succeeds; extraction fails
+    val failing = new MediaStore {
+      override def pageCount(ref: String): Int = DeterministicMediaStore.pageCount(ref)
+      override def page(ref: String, p: Int): PageMedia = throw new RuntimeException("no page")
+    }
+    spark.catalog.clearCache()
+    // cap 0 with salted megas: extraction joins against the cached pass
+    intercept[Exception](Extract.run(spark, spark.createDataset(Fixtures.testDocs), out,
+      ExtractConf(numPartitions = 4, megaInlineCap = 0), failing))
+    assert(spark.sharedState.cacheManager.isEmpty, "the metadata pass is still cached")
+  }
+
   test("rerun of a run_id after the over-size doc is gone leaves no rejected rows for it") {
     val spark = SparkTestBase.spark
     import spark.implicits._
